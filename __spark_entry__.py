@@ -29,6 +29,7 @@ from upgini_spark.operators.timeseries import (
     sessionize,
     trend_coefficient,
 )
+from upgini_spark.util import local_frame
 
 _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 _ORACLES: dict[str, str] = {}
@@ -2584,7 +2585,7 @@ def imbalance_decisions(spark, sf_dir):
         ),
     ]
     rows = [(n, is_imbalanced(d, "y", t)) for n, d, t in cases]
-    return spark.createDataFrame(rows, "case_name string, imbalanced boolean")
+    return local_frame(spark, rows, "case_name string, imbalanced boolean")
 
 
 @_q(
@@ -4452,7 +4453,8 @@ def ts_modal_unit(spark, sf_dir):
     threshold picks the high-/low-frequency truncation ladder."""
     ev = _t(spark, sf_dir, "events")
     gap = SMP.modal_time_unit_seconds(ev, ["user_id"], "ts")
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(gap, gap < SMP.TS_TIME_UNIT_THRESHOLD_S)],
         "modal_gap_s long, is_high_freq boolean",
     )
@@ -4529,7 +4531,8 @@ def psi_monthly(spark, sf_dir):
     reference-quantile bins + null bin, zero-fill, max over intervals."""
     ev = _t(spark, sf_dir, "events")
     rows = ST.psi_monthly_report(ev, ["value"], [], "ts")
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(c, round(p, 6) + 0.0 if p is not None else None) for c, p in rows],
         "column_name string, psi double",
     )
@@ -4601,7 +4604,8 @@ def psi_categorical(spark, sf_dir):
     The null bin is empty on this fixture so the SQL replica omits it."""
     ev = _t(spark, sf_dir, "events")
     rows = ST.psi_monthly_report(ev, ["event_type"], ["event_type"], "ts")
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(c, round(p, 6) + 0.0 if p is not None else None) for c, p in rows],
         "column_name string, psi double",
     )
@@ -4680,7 +4684,8 @@ def ts_decisions(spark, sf_dir):
         ST.is_blocked_time_series(blk.drop("f3x"), "date", ["date"]),
         ST.is_blocked_time_series(blk.drop("f3"), "date", ["date"]),
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [r],
         "is_ts_daily boolean, is_blocked_univariate boolean, "
         "is_blocked_2chg boolean, is_blocked_3chg boolean",
@@ -5222,15 +5227,16 @@ def search_key_autodetect(spark, sf_dir):
             f"{10000 + i}" if i % 4 != 0 else "B1",                    # post_box
             f"text {i}",                                               # comment (omitted)
         ))
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         rows,
         "email string, stamp timestamp, country string, zip_code string, "
         "event_date string, ref_code string, contact string, "
         "mobile_line string, origin string, post_box string, comment string",
     ).coalesce(1)
     detected = detect_search_keys(df, head_rows=100)
-    return spark.createDataFrame(
-        sorted(detected.items()), "column_name string, key_type string"
+    return local_frame(
+        spark, sorted(detected.items()), "column_name string, key_type string"
     )
 
 
@@ -6131,7 +6137,7 @@ def define_task_decisions(spark, sf_dir):
         "t_multi_str": ev.select(F.col("event_type").alias("y")),
     }
     rows = [(n, define_task(d, "y")) for n, d in targets.items()]
-    return spark.createDataFrame(rows, "target_name string, task string")
+    return local_frame(spark, rows, "target_name string, task string")
 
 
 @_q(

@@ -187,3 +187,66 @@ def test_asof_engines_agree_multipartition(spark):
         counts[f"{eng}_salt{salt}"] = j.filter("matched_ts IS NOT NULL").count()
     assert len(set(counts.values())) == 1, counts
     assert next(iter(counts.values())) > 0
+
+
+def _null_value_frames(spark):
+    """Entity ``a``'s latest right row has NULL ``f``/``g`` while an older
+    row has values; ``b``'s only row has a NULL ``g``; ``c`` has no right
+    rows. ``rid`` names the right row a left row matched."""
+    d = pd.Timestamp
+    right_rows = [
+        ("a", d("2023-01-01"), 1.0, "x", 0),
+        ("a", d("2023-02-01"), None, None, 1),
+        ("b", d("2023-01-05"), 2.0, None, 2),
+        ("b", d("2023-03-05"), None, "z", 3),
+    ]
+    left_rows = [
+        ("a", d("2023-03-01"), 0),
+        ("a", d("2023-01-15"), 1),
+        ("a", d("2022-12-01"), 2),
+        ("b", d("2023-02-01"), 3),
+        ("b", d("2023-04-01"), 4),
+        ("c", d("2023-01-01"), 5),
+    ]
+    rp = pd.DataFrame(right_rows, columns=["entity_id", "feature_ts", "f", "g", "rid"])
+    lp = pd.DataFrame(left_rows, columns=["doc_id", "event_time", "n"])
+    right = spark.createDataFrame(rp).selectExpr(
+        "entity_id", "feature_ts", "CAST(f AS DOUBLE) AS f", "g", "CAST(rid AS INT) AS rid"
+    )
+    left = spark.createDataFrame(lp).selectExpr("doc_id", "event_time", "CAST(n AS INT) AS n")
+    return left, right, lp, rp
+
+
+@pytest.mark.parametrize("direction", ["backward", "forward"])
+@pytest.mark.parametrize("engine", ["native", "arrow", "broadcast"])
+def test_asof_null_value_in_matched_row(spark, engine, direction):
+    """Every matched column comes from the ONE matched right row: a NULL
+    value there stays NULL instead of being filled from an older row
+    (pandas merge_asof semantics)."""
+    left, right, lp, rp = _null_value_frames(spark)
+    got = (
+        asof_join(
+            left, right, left_on="event_time", right_on="feature_ts",
+            by_left="doc_id", by_right="entity_id", engine=engine,
+            direction=direction,
+        )
+        .toPandas()
+        .sort_values("n")
+        .reset_index(drop=True)
+    )
+    exp = (
+        pd.merge_asof(
+            lp.sort_values("event_time"),
+            rp.rename(columns={"entity_id": "doc_id"}).sort_values("feature_ts"),
+            left_on="event_time", right_on="feature_ts", by="doc_id",
+            direction=direction,
+        )
+        .sort_values("n")
+        .reset_index(drop=True)
+    )
+    assert got["n"].tolist() == exp["n"].tolist()
+    assert got["rid"].fillna(-1).astype(int).tolist() == exp["rid"].fillna(-1).astype(int).tolist()
+    np.testing.assert_array_equal(
+        got["f"].to_numpy(dtype=float), exp["f"].to_numpy(dtype=float)
+    )
+    assert got["g"].fillna("∅").tolist() == exp["g"].fillna("∅").tolist()

@@ -39,7 +39,7 @@ def _run_report(spark, df, feats, cats):
     from upgini_spark.functions.stats import psi_monthly_report
 
     sc = spark.sparkContext
-    group = f"psi_jobcount_{len(feats)}"
+    group = "psi_jobcount_" + "_".join(feats)
     sc.setJobGroup(group, "psi job-count probe")
     try:
         rows = psi_monthly_report(df, feats, cats, "d", min_intervals=4)
@@ -52,9 +52,10 @@ def _run_report(spark, df, feats, cats):
 def test_psi_monthly_job_count_independent_of_feature_count(spark):
     """The r4 version issued ~3 Spark jobs PER feature; the r5 rewrite
     batches decisions, edges, and counts, so the job count is identical
-    for 2 features and 6 features."""
+    for 2 features and 6 features. Both runs take the same branches: each
+    has a categorical with a non-empty cut set (``m``)."""
     df = _psi_frame(spark).localCheckpoint(eager=True)
-    rows_small, jobs_small = _run_report(spark, df, ["x", "c"], ["c"])
+    rows_small, jobs_small = _run_report(spark, df, ["x", "m"], ["m"])
     rows_big, jobs_big = _run_report(
         spark, df, ["x", "y", "c", "m", "lc", "xn"], ["c", "m"]
     )
@@ -65,7 +66,12 @@ def test_psi_monthly_job_count_independent_of_feature_count(spark):
     # same features → same values regardless of batch composition
     d_small, d_big = dict(rows_small), dict(rows_big)
     assert d_small["x"] == pytest.approx(d_big["x"], abs=1e-12)
-    assert d_small["c"] == pytest.approx(d_big["c"], abs=1e-12)
+    assert d_small["m"] == pytest.approx(d_big["m"], abs=1e-12)
+    # all keys of ``c`` tie → no cutoff → an empty cut set, which the
+    # optimizer may prune; that branch must not cost MORE jobs
+    rows_tied, jobs_tied = _run_report(spark, df, ["x", "c"], ["c"])
+    assert jobs_tied <= jobs_small, (jobs_tied, jobs_small)
+    assert dict(rows_tied)["c"] == pytest.approx(d_big["c"], abs=1e-12)
 
 
 def test_psi_monthly_matches_pandas_reference_math(spark):

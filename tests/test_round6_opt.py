@@ -40,6 +40,26 @@ def test_cc_driver_matches_distributed(spark):
                     20: 20, 21: 20}
 
 
+def test_cc_driver_path_is_one_collect_job(spark):
+    """The driver path's size probe is its capped collect: the edge
+    checkpoint plus ONE collect job on a multi-partition edge set (no
+    separate count job, no partition-by-partition limit scan)."""
+    from upgini_spark.functions.dedup import connected_components
+
+    pairs = spark.range(0, 200_000, 2, numPartitions=7).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("cc_probe_jobs", "connected_components job-count probe")
+    try:
+        comp = connected_components(pairs)
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup("cc_probe_jobs")
+    assert len(jobs) <= 2, jobs
+    assert comp.filter("component != node AND component != node - 1").count() == 0
+    assert comp.count() == 200_000
+
 def test_nearest_cell_kernel_matches_jvm(spark):
     import upgini_spark.functions.similarity as SIM
 

@@ -163,6 +163,36 @@ def test_forced_downsample_binary(spark):
     assert forced_downsample_binary(small, "y", ["id"]).count() == 100
 
 
+def test_forced_downsample_binary_null_targets(spark, monkeypatch):
+    """NULL targets are never the minority (the NULL group here is the
+    smallest), and the majority side's ``total=`` counts exactly the rows
+    its filter keeps — NULL targets included, as pandas ``!=`` keeps NaN."""
+    import upgini_spark.functions.sampling as SMP
+
+    df = spark.range(510).select(
+        F.col("id"),
+        F.when(F.col("id") < 300, 0)
+        .when(F.col("id") < 500, 1)
+        .otherwise(F.lit(None))
+        .cast("int")
+        .alias("y"),
+    )
+    seen = []
+    real = SMP.hash_sample_exact
+
+    def checked(frame, n, id_cols, total=None, **kw):
+        seen.append((frame.count(), total))
+        return real(frame, n, id_cols, total=total, **kw)
+
+    monkeypatch.setattr(SMP, "hash_sample_exact", checked)
+    out = forced_downsample_binary(df, "y", ["id"], sample_size=100)
+    counts = {r["y"]: r["count"] for r in out.groupBy("y").count().collect()}
+    assert out.count() == 100
+    assert counts[1] == 50                            # minority: class 1, capped at half
+    assert counts[0] + counts.get(None, 0) == 50      # majority side: class 0 + NULLs
+    assert seen == [(200, 200), (310, 310)]
+
+
 def test_undersample_binary_reference_formula(spark):
     from upgini_spark.functions.sampling import undersample_imbalanced
 

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from upgini_spark.util import local_frame
+
 
 def drop_full_duplicates(
     df: DataFrame, subset: list[str] | None = None, order_col: str | None = None
@@ -458,8 +460,12 @@ def connected_components(
     """
     edges = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
     dedges = edges.distinct().localCheckpoint(eager=True)
-    if dedges.count() <= driver_edge_cap:
-        rows = dedges.collect()
+    # the capped collect is also the size probe: no separate count job.
+    # One task reads at most cap + 1 rows, so it is ONE job at any
+    # partition count (a plain limit collect scans partitions in growing
+    # waves, one job per wave).
+    rows = dedges.coalesce(1).limit(driver_edge_cap + 1).collect()
+    if len(rows) <= driver_edge_cap:
         parent: dict = {}
 
         def find(x):
@@ -493,7 +499,7 @@ def connected_components(
             ]
         )
         data = [(node, comp[find(node)]) for node in parent]
-        return spark.createDataFrame(data, schema)
+        return local_frame(spark, data, schema)
 
     sym = dedges.unionByName(
         dedges.select(F.col("b").alias("a"), F.col("a").alias("b"))

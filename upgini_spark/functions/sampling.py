@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from upgini_spark.util import local_frame
+
 FIT_SAMPLE_THRESHOLD = 100_000  # reference utils/config.py:18-21
 FORCE_SAMPLE_SIZE = 7_000       # reference dataset.py:65
 
@@ -332,7 +334,7 @@ def sample_time_series(
         n_kept = len(kept_rows)
         n_ids = stats.count()
         kept_schema = stats.select(*ids).schema
-        kept_ids = spark.createDataFrame(kept_rows, kept_schema)
+        kept_ids = local_frame(spark, kept_rows, kept_schema)
     else:
         # distributed running sum over the per-id aggregate — even a huge
         # id table (10^9 ids at 10^12 rows) never funnels through one
@@ -369,7 +371,8 @@ def sample_time_series(
             # the frame from driver rows (same driver-bound dispatch as
             # the quota path above); larger id budgets keep the lazy
             # plan.
-            ids_to_sample = spark.createDataFrame(
+            ids_to_sample = local_frame(
+                spark,
                 ids_to_sample.collect(), date_counts.select(*ids).schema
             )
         sub = df.join(F.broadcast(ids_to_sample), on=ids, how="leftsemi")
@@ -389,8 +392,8 @@ def sample_time_series(
                 if acc > sample_size:
                     break
                 kept.append((r["__d__"],))
-            kept_dates = spark.createDataFrame(
-                kept, per_date.select("__d__").schema
+            kept_dates = local_frame(
+                spark, kept, per_date.select("__d__").schema
             )
         else:
             # distributed most-recent-first cumsum over the per-date
@@ -477,9 +480,14 @@ def forced_downsample_binary(
     """balance_undersample_forced, BINARY path (sample_utils.py:335-410):
     cap at ``sample_size`` with a 50/50 split — the minority class keeps
     everything if it is under half the budget, otherwise exactly half;
-    the majority class fills its half. The reference's seeded
+    the majority side fills its half. The reference's seeded
     ``DataFrame.sample`` becomes deterministic hash-rank sampling (same
-    rows on any cluster size)."""
+    rows on any cluster size).
+
+    The split follows pandas: the minority is the rarest NON-NULL class
+    (``value_counts`` drops NaN) and the majority side is every other
+    row, NULL targets included (``target != min_class`` is True for NaN),
+    so its ``total=`` counts exactly the rows its filter keeps."""
     # ONE per-class count pass supplies the total row count too (was: a
     # separate full count job first); per-class totals ride into the
     # samplers so their pre-filter regime never re-counts
@@ -487,18 +495,20 @@ def forced_downsample_binary(
     total = sum(r["count"] for r in counts)
     if total <= sample_size:
         return df
-    by_cnt = sorted(counts, key=lambda r: r["count"])
-    min_class = by_cnt[0][target_col]
+    classes = [r for r in counts if r[target_col] is not None]
+    if not classes:
+        raise ValueError(f"{target_col!r} has no non-NULL target value")
+    min_row = min(classes, key=lambda r: r["count"])
+    min_class, min_count = min_row[target_col], min_row["count"]
     half = sample_size // 2
 
-    minority = df.filter(F.col(target_col) == min_class)
-    majority = df.filter(F.col(target_col) != min_class)
-    if by_cnt[0]["count"] > half:
-        minority = hash_sample_exact(
-            minority, half, id_cols, total=by_cnt[0]["count"]
-        )
+    is_min = F.col(target_col).eqNullSafe(F.lit(min_class))
+    minority = df.filter(is_min)
+    majority = df.filter(~is_min)
+    if min_count > half:
+        minority = hash_sample_exact(minority, half, id_cols, total=min_count)
     majority = hash_sample_exact(
-        majority, half, id_cols, total=total - by_cnt[0]["count"]
+        majority, half, id_cols, total=total - min_count
     )
     return minority.unionByName(majority)
 

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from upgini_spark.operators.binary import _dot, _norm2, cosine_similarity
+from upgini_spark.util import local_frame
 
 
 def _staged_cos(a_vec: str, b_vec: str, a_norm: str, b_norm: str):
@@ -715,10 +716,11 @@ def kmeans_centroids(
             cents = _kmeans_fit_driver(
                 fit_matrix, seed_vecs, n_cells, n_iter, round_dp
             )
-            return spark.createDataFrame(
-                [(c, v) for c, v in cents], "cell int, cvec array<double>"
+            return local_frame(
+                spark, [(c, v) for c, v in cents], "cell int, cvec array<double>"
             )
-    cent_df = spark.createDataFrame(
+    cent_df = local_frame(
+        spark,
         [(i, [float(x) for x in v]) for i, v in enumerate(seed_vecs[:n_cells])],
         "cell int, cvec array<double>",
     )
@@ -740,8 +742,8 @@ def kmeans_centroids(
             .select(F.col("cell").cast("int"), "cvec")
         )
         # small (n_cells rows) — materialize so each Lloyd step is one job
-        cent_df = spark.createDataFrame(
-            cent_df.toPandas(), "cell int, cvec array<double>"
+        cent_df = local_frame(
+            spark, cent_df.collect(), "cell int, cvec array<double>"
         )
     return cent_df
 
@@ -1012,15 +1014,15 @@ def pq_codebooks(
             out = _pq_fit_driver(
                 fit_matrix, seed_vecs, m, dim, k_sub, n_iter, round_dp
             )
-            return spark.createDataFrame(
-                out, "sub int, cell int, cvec array<double>"
+            return local_frame(
+                spark, out, "sub int, cell int, cvec array<double>"
             )
     rows = []
     for i, v in enumerate(seed_vecs[:k_sub]):
         v = [float(x) for x in v]
         for j in range(m):
             rows.append((j, i, v[j * dm:(j + 1) * dm]))
-    cb = spark.createDataFrame(rows, "sub int, cell int, cvec array<double>")
+    cb = local_frame(spark, rows, "sub int, cell int, cvec array<double>")
     long_df = sample.select(
         "__pid__", F.posexplode(_subvectors("__pv__", m, dim)).alias("sub", "sv")
     )
@@ -1044,22 +1046,22 @@ def pq_codebooks(
             .select("sub", F.col("cell").cast("int"), "cvec")
         )
         # small (m × k_sub rows) — materialize so each step is one job
-        pdf = cb.toPandas()
+        cb_rows = cb.collect()
         # density contract (r5 advice): the ADC table lookup indexes
         # ptab by jx*k_sub + code + 1, assuming every subspace keeps
         # exactly k_sub cells — a Lloyd step that empties a cell (e.g.
         # duplicate seed subvectors) would silently shift every later
         # subspace's lookups (or raise INVALID_ARRAY_INDEX under ANSI).
         # Fail loudly at build time instead.
-        if len(pdf) != m * k_sub:
+        if len(cb_rows) != m * k_sub:
             raise ValueError(
-                f"PQ codebook collapsed to {len(pdf)} (sub, cell) rows, "
+                f"PQ codebook collapsed to {len(cb_rows)} (sub, cell) rows, "
                 f"expected m*k_sub = {m * k_sub}: a Lloyd step emptied a "
                 "codebook cell (duplicate seed subvectors?) — lower k_sub "
                 "or dedup the training vectors"
             )
-        cb = spark.createDataFrame(
-            pdf, "sub int, cell int, cvec array<double>"
+        cb = local_frame(
+            spark, cb_rows, "sub int, cell int, cvec array<double>"
         )
     return cb
 
@@ -1364,7 +1366,8 @@ def cosine_topk_ivf(
     # and ties — see _nearest_cell): ~8 interpreted dot-folds per row
     # become one vectorized numpy batch. _cell_assign stays the
     # Column-level form for composability.
-    cent_df = corpus.sparkSession.createDataFrame(
+    cent_df = local_frame(
+        corpus.sparkSession,
         [(i, [float(x) for x in cv]) for i, (_cid, cv) in enumerate(centroids)],
         "cell int, cvec array<double>",
     )

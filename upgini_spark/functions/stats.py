@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as PWindow
 from pyspark.sql import functions as F
 
+from upgini_spark.util import local_frame, spread_scan
+
 EPS = 1e-6
 
 
@@ -322,8 +324,6 @@ def psi_monthly_report(
 
     Only per-(feature, interval, bin) count tables reach the driver.
     """
-    from upgini_spark.util import spread_scan
-
     def q(name: str):
         return F.col("`" + name.replace("`", "``") + "`")
 
@@ -546,8 +546,8 @@ def psi_monthly_report(
         # '__null__' bin must still be counted, so the count pass is
         # unconditional and cut_df may be empty
         spark = df.sparkSession
-        cut_df = spark.createDataFrame(
-            list(cutoffs.items()), schema="__feat__ string, __cut__ long"
+        cut_df = local_frame(
+            spark, list(cutoffs.items()), "__feat__ string, __cut__ long"
         )
         retained = (
             key_counts.join(F.broadcast(cut_df), "__feat__")

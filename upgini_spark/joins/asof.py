@@ -39,6 +39,7 @@ from pyspark.sql.window import Window
 
 _MARK = "__asof_side__"
 _MATCH_TS = "__asof_matched_ts__"
+_MATCH = "__asof_match__"
 
 
 def _value_cols(right: DataFrame, right_on: str, by_right: list[str]) -> list[str]:
@@ -118,11 +119,20 @@ def _asof_native(
         raise ValueError(f"right value columns clash with left: {sorted(clash)}")
 
     # Align right onto left's key/ts column names; null-pad each side.
+    # Each right row carries its match time and values as ONE struct, so
+    # a left row takes every matched column from the same right row (a
+    # per-column ignore-nulls pick would fill a NULL value from an older
+    # row); the struct is NULL on left rows and on right rows without a
+    # time, which therefore never match.
+    match = F.when(
+        F.col(right_on).isNotNull(),
+        F.struct(F.col(right_on).alias(_MATCH_TS), *[F.col(c) for c in vcols]),
+    )
+    match_type = right.select(match.alias(_MATCH)).schema[_MATCH].dataType
     lkeys = by_left
     l_part = left.select(
         *left.columns,
-        *[F.lit(None).cast(right.schema[c].dataType).alias(c) for c in vcols],
-        F.lit(None).cast(right.schema[right_on].dataType).alias(_MATCH_TS),
+        F.lit(None).cast(match_type).alias(_MATCH),
         F.lit(1).alias(_MARK),
     )
     left_only = [c for c in left.columns if c not in lkeys and c != left_on]
@@ -130,8 +140,7 @@ def _asof_native(
         *[F.col(rb).alias(lb) for lb, rb in zip(by_left, by_right)],
         F.col(right_on).alias(left_on),
         *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in left_only],
-        *vcols,
-        F.col(right_on).alias(_MATCH_TS),
+        match.alias(_MATCH),
         F.lit(0).alias(_MARK),
     ).select(*l_part.columns)  # same column order for union
 
@@ -141,10 +150,8 @@ def _asof_native(
     if direction == "backward":
         # right row at equal ts sorts before the left row -> inclusive match
         order = [ts.asc_nulls_last(), F.col(_MARK).asc()]
-        pick = F.last
     else:
         order = [ts.desc_nulls_last(), F.col(_MARK).asc()]
-        pick = F.last
     w = (
         Window.partitionBy(*lkeys)
         .orderBy(*order)
@@ -156,15 +163,20 @@ def _asof_native(
     # i.e. temporal leakage. pandas merge_asof refuses null keys outright;
     # we keep the row but null every matched column.
     has_ts = F.col(left_on).isNotNull()
-    filled = unioned.select(
+    picked = (
+        unioned.select(
+            *[c for c in left.columns],
+            F.col(_MARK),
+            F.when(has_ts, F.last(F.col(_MATCH), ignorenulls=True).over(w))
+            .alias(_MATCH),
+        )
+        .filter(F.col(_MARK) == 1)
+    )
+    filled = picked.select(
         *[c for c in left.columns],
-        F.col(_MARK),
-        F.when(has_ts, pick(F.col(_MATCH_TS), ignorenulls=True).over(w)).alias(_MATCH_TS),
-        *[
-            F.when(has_ts, pick(F.col(c), ignorenulls=True).over(w)).alias(c)
-            for c in vcols
-        ],
-    ).filter(F.col(_MARK) == 1)
+        F.col(_MATCH).getField(_MATCH_TS).alias(_MATCH_TS),
+        *[F.col(_MATCH).getField(c).alias(c) for c in vcols],
+    )
 
     if tolerance_seconds is not None:
         gap = F.abs(

@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from upgini_spark.util import local_frame
+
 
 def kfold_column(
     df: DataFrame, id_cols: list[str], n_splits: int = 5, out_col: str = "fold_id"
@@ -80,8 +82,8 @@ def group_kfold_column(
         loads[f] += r["count"]
     from pyspark.sql.types import IntegerType
 
-    map_df = spark.createDataFrame(
-        mapping, df.select(*group_cols).schema.add("__gkf__", IntegerType())
+    map_df = local_frame(
+        spark, mapping, df.select(*group_cols).schema.add("__gkf__", IntegerType())
     )
     # Null group keys ARE assigned a fold by the greedy (sklearn treats
     # NaN as a group value), so the join-back must be null-safe — a plain

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from upgini_spark.joins.enrich import EVAL_SET_INDEX, SYSTEM_RECORD_ID
+from upgini_spark.util import local_frame
 
 _MID_BITS = 33  # monotonically_increasing_id: partition id << 33 | counter
 
@@ -161,8 +162,8 @@ def zip_with_index(
         for r in rows:
             offsets.append((int(r["__sri_pid__"]), s, acc, int(r["min_mid"])))
             acc += int(r["cnt"])
-    map_df = spark.createDataFrame(
-        offsets, "__sri_pid__ long, __sri_seg__ int, __sri_off__ long, __sri_minmid__ long"
+    map_df = local_frame(
+        spark, offsets, "__sri_pid__ long, __sri_seg__ int, __sri_off__ long, __sri_minmid__ long"
     )
 
     keyed = work.withColumn(
@@ -269,8 +270,8 @@ def global_running_sum(
     for r in totals:
         offsets.append((int(r["__grs_pid__"]), acc))
         acc += r["t"] or 0
-    map_df = spark.createDataFrame(
-        offsets, f"__grs_pid__ long, __grs_off__ {off_type}"
+    map_df = local_frame(
+        spark, offsets, f"__grs_pid__ long, __grs_off__ {off_type}"
     )
 
     w = (
