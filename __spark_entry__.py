@@ -29,7 +29,7 @@ from upgini_spark.operators.timeseries import (
     sessionize,
     trend_coefficient,
 )
-from upgini_spark.util import local_frame
+from upgini_spark.util import local_frame, spread_scan
 
 _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 _ORACLES: dict[str, str] = {}
@@ -46,30 +46,6 @@ def _q(name: str, oracle: str | None = None):
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _par(df: DataFrame) -> DataFrame:
-    """Spread an unsplittable scan before CPU-heavy per-row compute.
-
-    The testdata parquet files are single-row-group, so a Spark scan
-    cannot split them: every expensive projection (md5 token hashing,
-    higher-order array kernels, 64-dim dot products) otherwise runs in
-    ONE task while the rest of the cluster idles (guide §2.5 "input
-    skew: one huge unsplittable file"). One cheap round-robin shuffle of
-    the raw rows buys full parallelism for everything downstream
-    (measured: simhash_32 7.9 s → 0.8 s at sf1.0/local[32]).
-
-    Scale-adaptive, not a local[32] constant: the target is the
-    session's default parallelism, and inputs that already provide
-    enough splits (any real multi-file/multi-row-group table at cluster
-    scale) pass through untouched — so on a 100 TB layout this is a
-    no-op, not a wasted shuffle. Results are row-identical: every
-    downstream operator is partition-invariant by engine design (the
-    oracle hash gate enforces it).
-    """
-    from upgini_spark.util import spread_scan
-
-    return spread_scan(df)
 
 
 def _clicks(spark, sf_dir):
@@ -496,7 +472,7 @@ def groupby_then_ops(spark, sf_dir):
     # join-back both consume it, and each would re-pay the scan + spread
     # shuffle (ReuseExchange does not fire across the differing shapes;
     # measured 2.28 -> 1.78 s at 1.5M rows, outputs identical)
-    o = _par(_t(spark, sf_dir, "orders")).localCheckpoint(eager=True)
+    o = spread_scan(_t(spark, sf_dir, "orders")).localCheckpoint(eager=True)
     key = F.col("o_orderpriority")
     val = F.col("o_totalprice")
     agged = G.group_by_then_features(
@@ -558,7 +534,7 @@ def entry(spark: SparkSession) -> DataFrame:
 #   2. the 24 deferred stale rows enumerated in the r5 window comment
 #      (7 late-r5 yields + 17 r03-stale);
 #   3. 23 queries whose CODE changed in the r6 optimization round
-#      (scan-spread _par, Arrow nearest-cell kernel, shared ANN fit,
+#      (util.spread_scan, Arrow nearest-cell kernel, shared ANN fit,
 #      psi/pack/sampling job restructuring, rolling-quantile fusion,
 #      connected-components dispatch) — every one is hash-green under
 #      tools/check_oracle.py on the new code, re-attested here.
@@ -1153,7 +1129,7 @@ def fintech_dedup_1h(spark, sf_dir):
     """,
 )
 def minhash_signatures(spark, sf_dir):
-    docs = _par(_t(spark, sf_dir, "documents"))
+    docs = spread_scan(_t(spark, sf_dir, "documents"))
     out = DD.minhash_signature(docs.select("doc_id", "text"), "text", k=4, shingle_n=3)
     return out.select("doc_id", "mh0", "mh1", "mh2", "mh3")
 
@@ -1205,7 +1181,7 @@ def minhash_lsh_pairs(spark, sf_dir):
     """MinHash-LSH band candidate pairs (k=8 signatures, 4 bands of 2) —
     md5-permutation minhash is engine-portable, so the full
     shingle→signature→band→self-join pipeline replays in SQL."""
-    docs = _par(_t(spark, sf_dir, "documents"))
+    docs = spread_scan(_t(spark, sf_dir, "documents"))
     return DD.minhash_band_pairs(docs, "doc_id", "text", k=8, bands=4)
 
 
@@ -1268,7 +1244,7 @@ def ngram_jaccard_pairs(spark, sf_dir):
     """,
 )
 def simhash_32(spark, sf_dir):
-    docs = _par(_t(spark, sf_dir, "documents"))
+    docs = spread_scan(_t(spark, sf_dir, "documents"))
     return DD.simhash_table(
         docs, "text", out_col="simhash", bits=32, keep=["doc_id"]
     )
@@ -1298,7 +1274,7 @@ def embedding_near_dup(spark, sf_dir):
     LSH recall of the planted pairs is exactly 1 and the DuckDB all-pairs
     oracle matches bit-for-bit; max natural pairwise cosine in the
     testdata is ~0.60, far under the 0.99 threshold."""
-    emb = _par(_t(spark, sf_dir, "embeddings")).select(
+    emb = spread_scan(_t(spark, sf_dir, "embeddings")).select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
     )
     planted = emb.filter(F.col("vec_id") < 50).select(
@@ -1345,7 +1321,7 @@ def embedding_near_dup(spark, sf_dir):
     """,
 )
 def knn_cosine_top3(spark, sf_dir):
-    emb = _par(_t(spark, sf_dir, "embeddings")).select(
+    emb = spread_scan(_t(spark, sf_dir, "embeddings")).select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
     )
     q = emb.filter(F.col("vec_id") < 5)
@@ -1395,7 +1371,7 @@ def knn_cosine_lsh(spark, sf_dir):
     replays the identical md5-derived planes, sign buckets, and
     within-bucket exact ranking, so the (deterministic) approximation is
     hash-checkable, not just rows-only."""
-    emb = _par(_t(spark, sf_dir, "embeddings")).select(
+    emb = spread_scan(_t(spark, sf_dir, "embeddings")).select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
     )
     q = emb.filter(F.col("vec_id") < 5)
@@ -1432,7 +1408,7 @@ def knn_cosine_lsh(spark, sf_dir):
     """,
 )
 def text_stats(spark, sf_dir):
-    docs = _par(_t(spark, sf_dir, "documents"))
+    docs = spread_scan(_t(spark, sf_dir, "documents"))
     t = F.col("text")
     return docs.select(
         "doc_id",
@@ -1496,7 +1472,7 @@ def html_strip_extract(spark, sf_dir):
     string byte-for-byte. Pure native regexp chain, whole-stage
     codegen, no UDF. No reference counterpart (upgini has no text
     surface); pipeline operator defined here like lang-id/quality."""
-    docs = _par(_t(spark, sf_dir, "documents"))
+    docs = spread_scan(_t(spark, sf_dir, "documents"))
     did = F.col("doc_id").cast("string")
     html = F.concat(
         F.lit("<html><head><title>Doc "), did,
@@ -1642,7 +1618,7 @@ def mask_tokens_mlm(spark, sf_dir):
     # materialize the spread scan once: the vocabulary agg and the
     # encode projection both consume it (re-paid scan + spread shuffle
     # otherwise; 0.93 -> 0.76 s alternating A/B, outputs identical)
-    docs = _par(_t(spark, sf_dir, "documents")).localCheckpoint(eager=True)
+    docs = spread_scan(_t(spark, sf_dir, "documents")).localCheckpoint(eager=True)
     vocab = build_word_vocab(docs, "text", 25)
     enc = encode_words(docs, "doc_id", "text", vocab)
     mk = mask_tokens(enc, "doc_id", "token_ids", mask_id=-1, rate=0.15)
@@ -1985,7 +1961,7 @@ def chunk_sliding_tokens(spark, sf_dir):
     # materialize the spread scan once: the vocabulary agg and the
     # encode projection both consume it (re-paid scan + spread shuffle
     # otherwise; 0.93 -> 0.76 s alternating A/B, outputs identical)
-    docs = _par(_t(spark, sf_dir, "documents")).localCheckpoint(eager=True)
+    docs = spread_scan(_t(spark, sf_dir, "documents")).localCheckpoint(eager=True)
     vocab = build_word_vocab(docs, "text", 25)
     enc = encode_words(docs, "doc_id", "text", vocab)
     ch = chunk_tokens_sliding(enc, "doc_id", "token_ids", 16, 8)
@@ -2047,7 +2023,7 @@ def vocab_encode_words(spark, sf_dir):
     # materialize the spread scan once: the vocabulary agg and the
     # encode projection both consume it (re-paid scan + spread shuffle
     # otherwise; 0.93 -> 0.76 s alternating A/B, outputs identical)
-    docs = _par(_t(spark, sf_dir, "documents")).localCheckpoint(eager=True)
+    docs = spread_scan(_t(spark, sf_dir, "documents")).localCheckpoint(eager=True)
     vocab = build_word_vocab(docs, "text", 25)
     enc = encode_words(docs, "doc_id", "text", vocab)
     return enc.select(
@@ -2140,7 +2116,7 @@ def url_canonical_dedup(spark, sf_dir):
     hosts)."""
     from upgini_spark.functions.urls import url_dedup
 
-    docs = _par(_t(spark, sf_dir, "documents"))
+    docs = spread_scan(_t(spark, sf_dir, "documents"))
     did = F.col("doc_id")
     k = F.floor(did / 5).cast("int").cast("string")
     url = (
@@ -2265,7 +2241,7 @@ def paragraph_dedup_corpus(spark, sf_dir):
     boilerplate hash would sort 10^8 occurrences on one partition."""
     from upgini_spark.functions.dedup import paragraph_dedup
 
-    docs = _par(_t(spark, sf_dir, "documents"))
+    docs = spread_scan(_t(spark, sf_dir, "documents"))
     did = F.col("doc_id")
     p1 = F.concat(
         F.lit("Doc "), did.cast("string"), F.lit(" intro: "),
@@ -2344,7 +2320,7 @@ def text_bm25_topk(spark, sf_dir):
     # materialize the spread scan once: the 1-row stats agg and the
     # scoring projection both consume it (0.48 -> 0.30 s alternating
     # A/B, outputs identical)
-    docs = _par(_t(spark, sf_dir, "documents")).localCheckpoint(eager=True)
+    docs = spread_scan(_t(spark, sf_dir, "documents")).localCheckpoint(eager=True)
     scored = TX.bm25_score(docs, "text", ["spark", "window", "dup"])
     return (
         scored.select(
@@ -2374,7 +2350,7 @@ def text_bm25_topk(spark, sf_dir):
     """,
 )
 def lang_id_heuristic(spark, sf_dir):
-    docs = _par(_t(spark, sf_dir, "documents"))
+    docs = spread_scan(_t(spark, sf_dir, "documents"))
     t = F.col("text")
     return docs.select(
         "doc_id",
@@ -2404,7 +2380,7 @@ def lang_id_heuristic(spark, sf_dir):
     """,
 )
 def doc_fingerprints(spark, sf_dir):
-    docs = _par(_t(spark, sf_dir, "documents"))
+    docs = spread_scan(_t(spark, sf_dir, "documents"))
     t = F.col("text")
     # rolling fingerprint falls back to md5(norm) for <window word docs
     norm = F.regexp_replace(F.lower(F.trim(t)), r"\s+", " ")
@@ -4000,7 +3976,7 @@ def outlier_dist_per_class(spark, sf_dir):
     """outlier_dist: distance to own-class centroid (unary.py:193-219)."""
     from upgini_spark.operators.vector import outlier_distance
 
-    emb = _par(_t(spark, sf_dir, "embeddings")).select(
+    emb = spread_scan(_t(spark, sf_dir, "embeddings")).select(
         "vec_id", "label",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
@@ -4787,7 +4763,7 @@ def knn_cosine_ivf(spark, sf_dir):
     partition the corpus into cells; each query probes its 2 nearest
     cells and ranks exactly within candidates — cell equi-join, no cross
     join. The oracle replays the identical quantizer in SQL."""
-    emb = _par(_t(spark, sf_dir, "embeddings")).select(
+    emb = spread_scan(_t(spark, sf_dir, "embeddings")).select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
     )
     q = emb.filter(F.col("vec_id") < 5)
@@ -5551,7 +5527,7 @@ def knn_cosine_pq_adc(spark, sf_dir):
     2-term-commutative, so no ordering caveats). Approximates the inner
     product; exact cosine re-rank over the returned ids composes with
     cosine_topk_bruteforce."""
-    emb = _par(_t(spark, sf_dir, "embeddings")).select(
+    emb = spread_scan(_t(spark, sf_dir, "embeddings")).select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
@@ -5659,7 +5635,7 @@ def knn_cosine_ivf_pq(spark, sf_dir):
     whole-corpus BNLJ). The oracle replays coarse train+assign, PQ
     train+encode, probe selection, the per-query dot-product table and
     the ADC sum bit-for-bit in SQL."""
-    emb = _par(_t(spark, sf_dir, "embeddings")).select(
+    emb = spread_scan(_t(spark, sf_dir, "embeddings")).select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
@@ -5704,7 +5680,7 @@ def cluster_assign(spark, sf_dir):
         parse_formula, set_op_params, lower_to_column,
     )
 
-    emb = _par(_t(spark, sf_dir, "embeddings")).select(
+    emb = spread_scan(_t(spark, sf_dir, "embeddings")).select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
     cent = SIM.kmeans_centroids(emb, "vec_id", "v", n_cells=4, n_iter=1)
@@ -5742,7 +5718,7 @@ def dedup_components(spark, sf_dir):
     cluster; ``kept`` marks the one row per cluster a keep-canonical
     dedup retains (near_dup_keep_canonical). The oracle replays the
     pair pipeline plus a recursive-CTE transitive closure."""
-    docs = _par(_t(spark, sf_dir, "documents"))
+    docs = spread_scan(_t(spark, sf_dir, "documents"))
     pairs = DD.minhash_band_pairs(docs, "doc_id", "text", k=8, bands=4)
     cc = DD.connected_components(pairs)
     return cc.select(
@@ -5791,7 +5767,7 @@ def pack_sequences_512(spark, sf_dir):
     engine-portable and sf-scalable."""
     from upgini_spark.functions.tokens import pack_sequences
 
-    docs = _par(_t(spark, sf_dir, "documents")).select(
+    docs = spread_scan(_t(spark, sf_dir, "documents")).select(
         "doc_id",
         F.transform(
             F.split("text", " "),
@@ -5894,7 +5870,7 @@ def quality_filter_decisions(spark, sf_dir):
     decision step a pretraining pipeline runs after text stats."""
     from upgini_spark.functions.text import quality_filter
 
-    docs = _par(_t(spark, sf_dir, "documents")).select("doc_id", "text")
+    docs = spread_scan(_t(spark, sf_dir, "documents")).select("doc_id", "text")
     out = quality_filter(docs, "text")
     return out.select("doc_id", "reject_reason", "keep")
 
@@ -5936,7 +5912,7 @@ def pack_by_source_256(spark, sf_dir):
     per-group window cumsum, distributed across groups)."""
     from upgini_spark.functions.tokens import pack_sequences
 
-    docs = _par(_t(spark, sf_dir, "documents")).select(
+    docs = spread_scan(_t(spark, sf_dir, "documents")).select(
         "doc_id", "source",
         F.transform(
             F.split("text", " "),
@@ -5987,7 +5963,7 @@ def pii_redaction_stats(spark, sf_dir):
     SQL replay, and the placeholder counts prove every plant was hit."""
     from upgini_spark.functions.text import redact_pii
 
-    docs = _par(_t(spark, sf_dir, "documents"))
+    docs = spread_scan(_t(spark, sf_dir, "documents"))
     raw = F.concat(
         F.col("text"), F.lit(" contact user"), F.col("doc_id").cast("string"),
         F.lit("@example.com or +1 (555) 123-"),
@@ -6031,7 +6007,7 @@ def repetition_share(spark, sf_dir):
     the planted repetition is visible (share ≈ 2/3) next to natural text."""
     from upgini_spark.functions.text import dup_ngram_share
 
-    docs = _par(_t(spark, sf_dir, "documents"))
+    docs = spread_scan(_t(spark, sf_dir, "documents"))
     boosted = F.when(
         F.col("doc_id") % 10 == 0,
         F.concat_ws(" ", "text", "text", "text"),
@@ -6076,7 +6052,7 @@ def decontaminate_overlap(spark, sf_dir):
     the minhash family, replayed in SQL)."""
     from upgini_spark.functions.dedup import decontaminate_ngrams
 
-    docs = _par(_t(spark, sf_dir, "documents"))
+    docs = spread_scan(_t(spark, sf_dir, "documents"))
     bench = docs.filter(F.col("doc_id") % 25 == 0)
     corpus = docs.filter(F.col("doc_id") % 25 != 0)
     return decontaminate_ngrams(corpus, bench, "doc_id", "text", "text")

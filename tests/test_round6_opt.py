@@ -73,20 +73,40 @@ def test_nearest_cell_kernel_matches_jvm(spark):
          for c in range(6)],
         "cell int, cvec array<double>",
     )
-    rows = sorted(cent.collect(), key=lambda r: int(r["cell"]))
-    via_kernel = SIM._nearest_cell_kernel(df, rows, "v").collect()
-    # force the JVM broadcast-join path regardless of threshold
-    old = SIM._KERNEL_MIN_WORK
-    SIM._KERNEL_MIN_WORK = 10**9
-    try:
-        via_jvm = SIM._nearest_cell(df, cent, "v").collect()
-    finally:
-        SIM._KERNEL_MIN_WORK = old
-    key = lambda r: r["vid"]  # noqa: E731
-    for a, b in zip(sorted(via_kernel, key=key), sorted(via_jvm, key=key)):
-        assert a["vid"] == b["vid"]
-        assert a["cell"] == b["cell"]
-        assert list(a["v"]) == list(b["v"])
+    # rows and centroids of lengths 4 and 3 in ONE Arrow batch: a length
+    # mismatch is judged per (row, cell) pair, never against the batch's
+    # longest row; the 3-only batch has every row shorter than cell 0
+    mixed = spark.createDataFrame(
+        [(i, [float((i * 5 + d) % 7) - 3.0 for d in range(3 + i % 2)])
+         for i in range(30)] + [(97, None), (98, [])],
+        "vid long, v array<double>",
+    ).coalesce(1)
+    mixed_cent = spark.createDataFrame(
+        [(0, [1.0, 0.0, -1.0, 2.0]), (1, [0.0, 1.0, 1.0]),
+         (2, [-1.0, 2.0, 0.0, 1.0]), (3, [2.0, -1.0, 0.5])],
+        "cell int, cvec array<double>",
+    )
+    cases = [
+        (df, cent),
+        (mixed, mixed_cent),
+        (mixed.filter(F.size("v") == 3), mixed_cent),
+    ]
+    for frame, cells in cases:
+        rows = sorted(cells.collect(), key=lambda r: int(r["cell"]))
+        via_kernel = SIM._nearest_cell_kernel(frame, rows, "v").collect()
+        # force the JVM broadcast-join path regardless of threshold
+        old = SIM._KERNEL_MIN_WORK
+        SIM._KERNEL_MIN_WORK = 10**9
+        try:
+            via_jvm = SIM._nearest_cell(frame, cells, "v").collect()
+        finally:
+            SIM._KERNEL_MIN_WORK = old
+        assert len(via_kernel) == len(via_jvm)
+        key = lambda r: r["vid"]  # noqa: E731
+        for a, b in zip(sorted(via_kernel, key=key), sorted(via_jvm, key=key)):
+            assert a["vid"] == b["vid"]
+            assert a["cell"] == b["cell"]
+            assert a["v"] == b["v"]
 
 
 def test_pack_sequences_n_docs_gaps(spark):
@@ -163,13 +183,17 @@ def test_fused_index_matches_composed(spark):
 
     df = spark.createDataFrame(
         [(i, [float((i * 7 + d * 3) % 11) - 5.0 for d in range(16)])
-         for i in range(80)] + [(99, [0.0] * 16)],
+         for i in range(80)] + [(99, [0.0] * 16)]
+        # one longer row in the same Arrow batch as the 16-dim corpus
+        + [(100, [float(d % 5) - 2.0 for d in range(20)])],
         "vec_id long, v array<double>",
     )
     fit = SIM.fit_vector_sample(df, "vec_id", "v")
     cent = SIM.kmeans_centroids(df, "vec_id", "v", n_cells=3, n_iter=1, fit=fit)
     cb = SIM.pq_codebooks(df, "vec_id", "v", 16, m=2, k_sub=2, n_iter=1, fit=fit)
-    src = df.select(F.col("vec_id").alias("n_id"), F.col("v").alias("n_vec"))
+    src = df.select(
+        F.col("vec_id").alias("n_id"), F.col("v").alias("n_vec")
+    ).coalesce(1)
     composed = SIM._nearest_cell(src, cent, "n_vec").select("n_id", "cell").join(
         _composed_pq_encode(df, "vec_id", "v", cb, 16, 2)
         .select(F.col("vec_id").alias("n_id"), "codes"),
@@ -181,6 +205,38 @@ def test_fused_index_matches_composed(spark):
     )
     assert composed.exceptAll(fused).count() == 0
     assert fused.exceptAll(composed).count() == 0
+
+
+def test_nearest_subcell_matches_l2sq_struct_min(spark):
+    """_nearest_subcell on mixed-length subvectors in one Arrow batch
+    must equal the Spark form: _l2sq per (row, cell) pair, then
+    min(struct(d, cell)) — a NULL distance (length mismatch, NULL
+    subvector) wins, NaN loses, ties go to the smallest cell."""
+    import upgini_spark.functions.similarity as SIM
+
+    long_df = spark.createDataFrame(
+        [(1, 0, [0.9, 0.1]), (2, 0, [1.0, 2.0, 3.0]), (3, 0, [0.2, 0.7]),
+         (4, 0, None), (5, 0, []), (6, 0, [float("nan"), 0.0]),
+         (7, 0, [0.5, 0.5]),
+         (1, 1, [0.1, 0.9]), (2, 1, [1.0, 0.0, 0.0]), (3, 1, [0.0, 1.0, 2.0])],
+        "__pid__ long, sub int, sv array<double>",
+    ).coalesce(1)
+    cb = spark.createDataFrame(
+        [(0, 0, [0.0, 1.0]), (0, 1, [1.0, 0.0]),
+         (1, 0, [1.0, 0.0, 0.0]), (1, 1, [0.0, 1.0])],
+        "sub int, cell int, cvec array<double>",
+    )
+    ref = (
+        long_df.join(F.broadcast(cb), on="sub")
+        .withColumn("d", SIM._l2sq(F.col("sv"), F.col("cvec")))
+        .groupBy("__pid__", "sub")
+        .agg(F.min(F.struct("d", "cell")).alias("b"))
+        .select("__pid__", "sub", F.col("b.cell").alias("cell"))
+    )
+    got = SIM._nearest_subcell(long_df, cb).select("__pid__", "sub", "cell")
+    want = {(r[0], r[1]): r[2] for r in ref.collect()}
+    assert {(r[0], r[1]): r[2] for r in got.collect()} == want
+    assert want[(1, 0)] == 1
 
 
 def test_ts_features_masked_matches_parity(spark):

@@ -10,7 +10,9 @@ reproducible and oracle-checkable without storing plane matrices.
 from __future__ import annotations
 
 import math
+import sys
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -237,14 +239,93 @@ def embedding_near_dup_lsh(
     )
 
 
-def _pyfold_norm(v: list[float]) -> float:
-    """sqrt of the left-fold Σv² — the EXACT IEEE sequence of
-    operators.binary._norm2 (acc = acc + v*v, then sqrt), evaluated
-    driver-side for broadcast-small centroid tables."""
+# The Arrow kernels' closures call the module-level folds below: pickle
+# this module by value, so Python workers need not import upgini_spark.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+
+def _fold_sum(terms):
+    """Left fold ``acc = acc + t`` over ``terms`` in order — the IEEE
+    sequence of Spark's ``F.aggregate`` in ``_dot`` / ``_norm2`` /
+    ``_l2sq`` when each term is one dimension. numpy rounds every
+    multiply and add separately (no FMA), so folding whole columns of a
+    row matrix gives each row's bit-exact Spark value; ``np.dot``,
+    ``einsum`` and ``sum`` reorder the additions and do not."""
     acc = 0.0
-    for x in v:
-        acc = acc + x * x
-    return math.sqrt(acc)
+    for t in terms:
+        acc = acc + t
+    return acc
+
+
+def _fold_nearest(V, cells, l2=False):
+    """Nearest of ``cells`` — (id, vector) pairs, ascending ids — for
+    every row of the (n × dim) float64 matrix ``V``: argmax cosine, or
+    argmin squared L2 when ``l2``. Returns per-row (cell id, score,
+    NULL mask); the score is the winning cosine or L2 distance.
+
+    Each (row, cell) score is Spark's: NULL when the cell's length is
+    not ``dim`` (``zip_with`` pads with NULL) or, for cosine, when the
+    norm product is 0. The winner is Spark's struct order kept as one
+    max over (class, score): cosine is ``max(struct(s, -cell))`` — NULL
+    lowest, NaN highest; L2 is ``min(struct(d, cell))`` — NULL wins, NaN
+    loses — taken as the max of the negated pair (negation is exact).
+    Cells run ascending and only a strictly greater pair takes over, so
+    every tie goes to the smallest id."""
+    import numpy as np
+
+    n, dim = V.shape
+    null_cls, nan_cls = (3, 0) if l2 else (0, 3)
+    if not l2:
+        vn = np.sqrt(_fold_sum(x * x for x in V.T))
+    best_cls = np.full(n, -1, dtype=np.int8)
+    best_s = np.full(n, np.nan)
+    best_cell = np.full(n, cells[0][0] if cells else 0, dtype=np.int64)
+    for c_id, cv in cells:
+        if len(cv) != dim:
+            null, s = True, np.nan
+        elif l2:
+            null = False
+            s = -_fold_sum(t * t for t in (x - c for x, c in zip(V.T, cv)))
+        else:
+            denom = vn * math.sqrt(_fold_sum(c * c for c in cv))
+            with np.errstate(divide="ignore", invalid="ignore"):
+                s = _fold_sum(x * c for x, c in zip(V.T, cv)) / denom
+            null = denom == 0.0
+            # a NULL score is NaN here, so two NULLs never compare greater
+            s = np.where(null, np.nan, s)
+        cls = np.where(null, null_cls, np.where(np.isnan(s), nan_cls, 2))
+        take = (cls > best_cls) | ((cls == best_cls) & (s > best_s))
+        best_cls = np.where(take, cls, best_cls)
+        best_s = np.where(take, s, best_s)
+        best_cell = np.where(take, c_id, best_cell)
+    return best_cell, -best_s if l2 else best_s, best_cls == null_cls
+
+
+def _nearest(vecs, cells, l2=False):
+    """:func:`_fold_nearest` over a ragged vector list (an Arrow batch
+    column). Rows are grouped by their own length, so each row is
+    scored against every cell exactly as Spark scores the pair — never
+    padded to, or judged against, the batch's longest row. A NULL row
+    scores NULL against every cell and so takes the smallest cell id."""
+    import numpy as np
+
+    n = len(vecs)
+    lens = np.array([-1 if v is None else len(v) for v in vecs], dtype=np.int64)
+    cell = np.full(n, cells[0][0] if cells else 0, dtype=np.int64)
+    score = np.full(n, np.nan)
+    null = np.ones(n, dtype=bool)
+    for dim in np.unique(lens[lens >= 0]):
+        idx = np.flatnonzero(lens == dim)
+        V = np.array([vecs[i] for i in idx], dtype=np.float64)
+        cell[idx], score[idx], null[idx] = _fold_nearest(
+            V.reshape(len(idx), dim), cells, l2
+        )
+    return cell, score, null
+
+
+def _cells(rows) -> list[tuple[int, list[float]]]:
+    """(cell, cvec) rows as ascending (id, vector) pairs for the folds."""
+    return sorted((int(r["cell"]), [float(x) for x in r["cvec"]]) for r in rows)
 
 
 # Arrow-kernel dispatch threshold: the mapInPandas assignment pays a
@@ -271,26 +352,26 @@ def _nearest_cell(df: DataFrame, cent: DataFrame, vec_col: str) -> DataFrame:
     Norms are STAGED per row / per centroid BEFORE the crossJoin (the r4
     higher-order-lambda lesson applied to joins). When the per-row score
     work is heavy enough to amortize the Python boundary
-    (cells × dims ≥ _KERNEL_MIN_WORK), the score matrix is instead
+    (cells × dims ≥ _KERNEL_MIN_WORK), the per-row winners are instead
     computed in the bit-exact Arrow kernel :func:`_nearest_cell_kernel`.
     Both paths produce identical scores and ties."""
-    from upgini_spark.operators.binary import _dot, _norm2
-
     rows = sorted(
         cent.select("cell", "cvec").collect(), key=lambda r: int(r["cell"])
     )
     dim = len(rows[0]["cvec"]) if rows else 0
-    if len(rows) * dim >= _KERNEL_MIN_WORK:
-        return _nearest_cell_kernel(df, rows, vec_col)
-
     keys = [c for c in df.columns if c != vec_col]
-    dfn = df.withColumn("__vn__", _norm2(F.col(vec_col)))
-    centn = cent.withColumn("__cn__", _norm2(F.col("cvec")))
-    denom = F.col("__vn__") * F.col("__cn__")
-    scored = dfn.crossJoin(F.broadcast(centn)).withColumn(
-        "__s__",
-        F.when(denom != 0, _dot(F.col(vec_col), F.col("cvec")) / denom),
-    )
+    if len(rows) * dim >= _KERNEL_MIN_WORK:
+        scored = _nearest_cell_kernel(df, rows, vec_col)
+    else:
+        dfn = df.withColumn("__vn__", _norm2(F.col(vec_col)))
+        centn = cent.withColumn("__cn__", _norm2(F.col("cvec")))
+        denom = F.col("__vn__") * F.col("__cn__")
+        scored = dfn.crossJoin(F.broadcast(centn)).withColumn(
+            "__s__",
+            F.when(denom != 0, _dot(F.col(vec_col), F.col("cvec")) / denom),
+        )
+    # the kernel's per-row winners fold through the same struct-max (max
+    # over per-row maxes == max over all (row × cell) pairs)
     best = scored.groupBy(*keys).agg(
         F.max(
             F.struct(
@@ -308,127 +389,48 @@ def _nearest_cell(df: DataFrame, cent: DataFrame, vec_col: str) -> DataFrame:
 
 
 def _nearest_cell_kernel(df: DataFrame, rows: list, vec_col: str) -> DataFrame:
-    """Arrow-kernel form of :func:`_nearest_cell` for heavy score
-    matrices. ``rows`` is the collected (cell, cvec) table sorted by
-    cell id.
-
-    The N×k score matrix is computed in an Arrow ``mapInPandas`` kernel
-    (guide §4.2 — hand whole batches to vectorized numpy instead of
-    evaluating k interpreted higher-order dot-folds per row; measured
-    ~8× on the 20k×142 assignment at sf1.0). Bit-exactness contract: the
-    kernel accumulates dot products and norms PER DIMENSION in array
-    order (``acc = acc + x*y`` — numpy ufuncs round each multiply and
-    add separately, no FMA), i.e. the identical IEEE sequence as the
-    ``F.aggregate`` left fold in ``operators.binary._dot``/``_norm2``,
-    so every score is bit-identical to the previous crossJoin form and
-    the k-means oracles still hash-match. Spark's ordering semantics are
-    replicated per row: s=NULL (zero/NULL denom, NULL or
-    dimension-mismatched vectors) loses to any real score, NaN beats
-    every real score, and all ties fall to the smallest cell id.
-
-    Per-row winners then collapse through the same struct-max
-    aggregation as before (max over per-row maxes == max over all
-    (row × cell) pairs), so rows sharing the non-vector keys still fold
-    to one assignment with unchanged tie-break semantics."""
-    import numpy as np
-
+    """Per-row winners of :func:`_nearest_cell` — (keys…, vec, __s__,
+    cell) — from an Arrow ``mapInPandas`` kernel over the collected
+    (cell, cvec) ``rows`` (guide §4.2: hand whole batches to vectorized
+    numpy instead of evaluating k interpreted higher-order dot-folds
+    per row; measured ~8× on the 20k×142 assignment at sf1.0). Scores
+    and ties are bit-identical to the JVM form (:func:`_fold_nearest`)."""
     from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
     keys = [c for c in df.columns if c != vec_col]
-    cell_ids = [int(r["cell"]) for r in rows]
-    cvecs = [[float(x) for x in r["cvec"]] for r in rows]
-    cnorms = [_pyfold_norm(v) for v in cvecs]
-
+    cells = _cells(rows)
     out_schema = StructType(
         [df.schema[k] for k in keys]
         + [
             df.schema[vec_col],
             StructField("__s__", DoubleType(), True),
-            StructField("__cell__", IntegerType(), True),
+            StructField("cell", IntegerType(), True),
         ]
     )
 
     def assign(batches):
         import pandas as pd
 
-        if not cell_ids:
+        if not cells:
             return
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
-            raw = list(pdf[vec_col])
-            dims = {len(v) for v in raw if v is not None}
-            dim = max(dims) if dims else 0
-            # NULL or dimension-mismatched vectors score NULL against
-            # every cell (zip_with pads with null -> null dot) — model
-            # them as zero vectors, whose denom==0 path yields the same
-            # NULL score and smallest-cell fallback.
-            bad = np.array(
-                [v is None or len(v) != dim for v in raw], dtype=bool
-            )
-            V = np.zeros((n, dim), dtype=np.float64)
-            for i, v in enumerate(raw):
-                if not bad[i]:
-                    V[i, :] = v
-            V[bad, :] = 0.0
-            acc = np.zeros(n)
-            for d in range(dim):
-                x = V[:, d]
-                acc = acc + x * x
-            vn = np.sqrt(acc)
-            # per-row running best under Spark struct-max ordering:
-            # class 0 = NULL score (smallest), 2 = real, 3 = NaN (largest)
-            best_cls = np.full(n, -1, dtype=np.int8)
-            best_s = np.full(n, np.nan)
-            best_cell = np.full(n, cell_ids[0], dtype=np.int64)
-            for c_id, cv, cn in zip(cell_ids, cvecs, cnorms):
-                acc = np.zeros(n)
-                for d in range(len(cv)):
-                    acc = acc + V[:, d] * cv[d]
-                denom = vn * cn
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    s = acc / denom
-                isnull = denom == 0.0
-                # class-0 scores are NULL: force NaN so the tie compare
-                # below is always False (two NULLs tie -> smaller cell)
-                s = np.where(isnull, np.nan, s)
-                cls = np.where(
-                    isnull, 0, np.where(np.isnan(s), 3, 2)
-                ).astype(np.int8)
-                # iterate cells ASCENDING: strict > keeps the first
-                # (smallest) cell on every tie, matching max(struct(s,
-                # -cell)); NaN>NaN and NULL-vs-NULL both compare False
-                take = (cls > best_cls) | ((cls == best_cls) & (s > best_s))
-                best_cls = np.where(take, cls, best_cls)
-                best_s = np.where(take, s, best_s)
-                best_cell = np.where(take, c_id, best_cell)
+            cell, s, null = _nearest(list(pdf[vec_col]), cells)
             out = pdf[keys].copy()
             out[vec_col] = pdf[vec_col]
-            s_col = pd.Series(best_s)
-            s_col[best_cls == 0] = None
+            s_col = pd.Series(s)
+            s_col[null] = None
             out["__s__"] = s_col
-            out["__cell__"] = best_cell.astype("int32")
+            out["cell"] = cell.astype("int32")
             yield out
 
-    scored = df.mapInPandas(assign, out_schema)
-    best = scored.groupBy(*keys).agg(
-        F.max(
-            F.struct(
-                F.col("__s__").alias("s"),
-                (-F.col("__cell__")).alias("nc"),
-                F.col(vec_col).alias("v"),
-            )
-        ).alias("__b__")
-    )
-    return best.select(
-        *keys,
-        F.col("__b__.v").alias(vec_col),
-        (-F.col("__b__.nc")).cast("int").alias("cell"),
-    )
+    return df.mapInPandas(assign, out_schema)
 
 
 _DRIVER_FIT_ELEMS = 16_000_000  # sample rows × dims ceiling for driver-side fits
+_SAMPLE_CAP = 100_000  # fit-sample rows: Lloyd fits need a sample, not the corpus
+_ROUND_DP = 9  # Lloyd-mean rounding quantum (the DuckDB oracles replay 9 dp)
 
 
 def _round_half_up(v: float, dp: int) -> float:
@@ -454,7 +456,7 @@ def _round_half_up(v: float, dp: int) -> float:
 
 
 def collect_fit_matrix(fsample: DataFrame, n_sample: int, dim_hint: int):
-    """Collect the ≤sample_cap fit sample into one (n × dim) float64
+    """Collect the ≤_SAMPLE_CAP fit sample into one (n × dim) float64
     matrix for the driver-side Lloyd fits, or None to keep the
     distributed path. Engages only when the sample is CLEAN — every
     vector non-null and of one uniform length with no NULL elements
@@ -492,135 +494,68 @@ def collect_fit_matrix(fsample: DataFrame, n_sample: int, dim_hint: int):
     return np.stack([np.asarray(v, dtype=np.float64) for v in pdf["__fv__"]])
 
 
-def _kmeans_fit_driver(V, seed_vecs, n_cells, n_iter, round_dp):
-    """Driver-side twin of the distributed Lloyd loop in
-    :func:`kmeans_centroids` (engaged by :func:`collect_fit_matrix`):
-    the assignment replays `_nearest_cell_kernel`'s exact sequence —
-    per-dimension ``acc = acc + x*y`` folds, ``_pyfold_norm`` centroid
-    norms, NULL denom loses / NaN beats real / ties to the smallest
-    cell — and per-dim means round HALF_UP like ``F.round``; summation
-    order differences are absorbed by the round_dp quantum (the
+def _lloyd_driver(V, books, n_iter, l2):
+    """``n_iter`` driver-side Lloyd steps — the numpy form of the
+    distributed loops in :func:`kmeans_centroids` (one book, cosine)
+    and :func:`pq_codebooks` (one book per subspace, L2), engaged by
+    :func:`collect_fit_matrix`. Book j owns the j-th equal column block
+    of the sample matrix ``V``: each step assigns the block's rows with
+    :func:`_fold_nearest` and moves every cell to the per-dim mean of
+    its rows, rounded HALF_UP like ``F.round`` (summation-order
+    differences are absorbed by the ``_ROUND_DP`` quantum — the
     documented partition-invariance contract). Cells that lose every
-    point drop out, ids stay sparse ascending."""
-    import numpy as np
-
-    cents = [
-        (i, [float(x) for x in v]) for i, v in enumerate(seed_vecs[:n_cells])
-    ]
-    n, dim = V.shape
-    acc = np.zeros(n)
-    for d in range(dim):
-        x = V[:, d]
-        acc = acc + x * x
-    vn = np.sqrt(acc)
+    point drop out; ids stay sparse ascending."""
+    dm = V.shape[1] // len(books)
+    blocks = [V[:, j * dm:(j + 1) * dm] for j in range(len(books))]
     for _ in range(n_iter):
-        best_cls = np.full(n, -1, dtype=np.int8)
-        best_s = np.full(n, np.nan)
-        best_cell = np.full(n, cents[0][0] if cents else 0, dtype=np.int64)
-        for c_id, cv in cents:
-            if len(cv) != dim:
-                s = np.full(n, np.nan)
-                cls = np.zeros(n, dtype=np.int8)
-            else:
-                acc = np.zeros(n)
-                for d in range(dim):
-                    acc = acc + V[:, d] * cv[d]
-                cn = _pyfold_norm(cv)
-                denom = vn * cn
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    s = acc / denom
-                isnull = denom == 0.0
-                s = np.where(isnull, np.nan, s)
-                cls = np.where(
-                    isnull, 0, np.where(np.isnan(s), 3, 2)
-                ).astype(np.int8)
-            take = (cls > best_cls) | ((cls == best_cls) & (s > best_s))
-            best_cls = np.where(take, cls, best_cls)
-            best_s = np.where(take, s, best_s)
-            best_cell = np.where(take, c_id, best_cell)
-        new = []
-        for c_id, _cv in cents:
-            mask = best_cell == c_id
-            cnt = int(mask.sum())
-            if cnt == 0:
-                continue
-            mean = V[mask].sum(axis=0) / cnt
-            new.append(
-                (c_id, [_round_half_up(float(x), round_dp) for x in mean])
-            )
-        cents = new
-    return cents
-
-
-def _pq_fit_driver(V, seed_vecs, m, dim, k_sub, n_iter, round_dp):
-    """Driver-side twin of the distributed PQ Lloyd loop in
-    :func:`pq_codebooks`: per-subspace argmin-L2 with
-    `_nearest_subcell`'s exact per-dimension ``(x-y)^2`` folds and
-    min-struct ordering (ties to the smallest cell, NaN is the
-    maximum), HALF_UP per-dim means, and the same m×k_sub density
-    contract enforced after every step."""
-    import numpy as np
-
-    dm = dim // m
-    cb = {
-        j: [
-            (i, [float(x) for x in v[j * dm:(j + 1) * dm]])
-            for i, v in enumerate(seed_vecs[:k_sub])
-        ]
-        for j in range(m)
-    }
-    n = V.shape[0]
-    subs = [V[:, j * dm:(j + 1) * dm] for j in range(m)]
-    for _ in range(n_iter):
-        new_cb = {}
-        for j in range(m):
-            S = subs[j]
-            cells = cb[j]
-            best_cls = np.full(n, 4, dtype=np.int8)
-            best_d = np.full(n, np.nan)
-            best_cell = np.full(n, cells[0][0] if cells else 0, dtype=np.int64)
-            for c_id, cv in cells:
-                if len(cv) != dm:
-                    dd = np.full(n, np.nan)
-                    cls = np.zeros(n, dtype=np.int8)
-                else:
-                    acc = np.zeros(n)
-                    for d in range(dm):
-                        t = S[:, d] - cv[d]
-                        acc = acc + t * t
-                    dd = acc
-                    cls = np.where(np.isnan(dd), 3, 2).astype(np.int8)
-                take = (cls < best_cls) | ((cls == best_cls) & (dd < best_d))
-                best_cls = np.where(take, cls, best_cls)
-                best_d = np.where(take, dd, best_d)
-                best_cell = np.where(take, c_id, best_cell)
-            rows = []
+        new_books = []
+        for S, cells in zip(blocks, books):
+            cell = _fold_nearest(S, cells, l2)[0]
+            book = []
             for c_id, _cv in cells:
-                mask = best_cell == c_id
+                mask = cell == c_id
                 cnt = int(mask.sum())
-                if cnt == 0:
-                    continue
-                mean = S[mask].sum(axis=0) / cnt
-                rows.append(
-                    (c_id, [_round_half_up(float(x), round_dp) for x in mean])
-                )
-            new_cb[j] = rows
-        cb = new_cb
-        if sum(len(v) for v in cb.values()) != m * k_sub:
-            raise ValueError(
-                f"PQ codebook collapsed to "
-                f"{sum(len(v) for v in cb.values())} (sub, cell) rows, "
-                f"expected m*k_sub = {m * k_sub}: a Lloyd step emptied a "
-                "codebook cell (duplicate seed subvectors?) — lower k_sub "
-                "or dedup the training vectors"
-            )
-    return [(j, c, v) for j in range(m) for c, v in cb[j]]
+                if cnt:
+                    mean = S[mask].sum(axis=0) / cnt
+                    book.append(
+                        (c_id, [_round_half_up(float(x), _ROUND_DP) for x in mean])
+                    )
+            new_books.append(book)
+        books = new_books
+    return books
+
+
+def _seed_vecs(fsample: DataFrame, n: int) -> list:
+    """The first ``n`` fit-sample vectors in (md5(id), id) order — the
+    deterministic, engine-portable seed of every Lloyd fit (any SQL
+    engine picks the same rows)."""
+    return list(
+        fsample.orderBy(F.md5(F.col("__fid__").cast("string")), F.col("__fid__"))
+        .limit(n)
+        .select("__fv__")
+        .toPandas()["__fv__"]
+    )
+
+
+def _check_dense(n_rows: int, m: int, k_sub: int) -> None:
+    """Density contract (r5 advice): the ADC table lookup indexes ptab
+    by jx*k_sub + code + 1, assuming every subspace keeps exactly k_sub
+    cells — a Lloyd step that empties a cell (e.g. duplicate seed
+    subvectors) would silently shift every later subspace's lookups (or
+    raise INVALID_ARRAY_INDEX under ANSI). Fail loudly at build time."""
+    if n_rows != m * k_sub:
+        raise ValueError(
+            f"PQ codebook collapsed to {n_rows} (sub, cell) rows, "
+            f"expected m*k_sub = {m * k_sub}: a Lloyd step emptied a "
+            "codebook cell (duplicate seed subvectors?) — lower k_sub "
+            "or dedup the training vectors"
+        )
 
 
 def fit_vector_sample(
-    corpus: DataFrame, id_col: str, vec_col: str, sample_cap: int = 100_000
+    corpus: DataFrame, id_col: str, vec_col: str
 ) -> tuple[int, DataFrame]:
-    """(count, eager-checkpointed ≤``sample_cap``-row (__fid__, __fv__)
+    """(count, eager-checkpointed ≤``_SAMPLE_CAP``-row (__fid__, __fv__)
     training sample) — the shared fit input of ``kmeans_centroids`` and
     ``pq_codebooks``, split out so :func:`build_ivf_pq_index` counts and
     materializes the corpus ONCE instead of once per fit (each count +
@@ -632,12 +567,12 @@ def fit_vector_sample(
     s = corpus.select(
         F.col(id_col).alias("__fid__"), F.col(vec_col).alias("__fv__")
     )
-    if n > sample_cap:
-        s = hash_sample_exact(s, sample_cap, ["__fid__"])
+    if n > _SAMPLE_CAP:
+        s = hash_sample_exact(s, _SAMPLE_CAP, ["__fid__"])
     # the sample feeds ~5 jobs (init + per-iteration assign/update) —
     # materialize once so the corpus scan / top-n sort never re-executes;
-    # bounded by sample_cap rows.  Coalesce to ~6.25k rows/partition
-    # first: the fit stages are tiny (≤sample_cap rows) but inherit the
+    # bounded by _SAMPLE_CAP rows.  Coalesce to ~6.25k rows/partition
+    # first: the fit stages are tiny (≤_SAMPLE_CAP rows) but inherit the
     # CORPUS partitioning, so every Lloyd assign/update stage otherwise
     # schedules a full task wave (32 Arrow-kernel tasks for a 2k-row
     # sample — measured 2.3→1.0 s on the two overlapped IVF+PQ fits at
@@ -649,8 +584,31 @@ def fit_vector_sample(
     # coalesce beyond the current partition count is a no-op.  Partition
     # count does not change results: the 9dp round absorbs summation-
     # order noise (the documented partition-invariance contract).
-    parts = max(1, -(-min(n, sample_cap) // 6_250))
+    parts = max(1, -(-min(n, _SAMPLE_CAP) // 6_250))
     return n, s.coalesce(parts).localCheckpoint(eager=True)
+
+
+def _lloyd_means(assigned: DataFrame, keys: list[str], vec_col: str) -> list:
+    """One distributed Lloyd update: the per-(keys…, dim) mean of the
+    assigned vectors rounded to ``_ROUND_DP``, collected as (keys…,
+    cvec) rows — one row per cell, so each Lloyd step is one job. The
+    last key is the cell id."""
+    per_dim = (
+        assigned.select(*keys, F.posexplode(vec_col).alias("dim", "x"))
+        .groupBy(*keys, "dim")
+        .agg(F.round(F.avg("x"), _ROUND_DP).alias("m"))
+    )
+    return (
+        per_dim.groupBy(*keys)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("dim", "m"))),
+                lambda s: s["m"],
+            ).alias("cvec")
+        )
+        .select(*keys[:-1], F.col(keys[-1]).cast("int"), "cvec")
+        .collect()
+    )
 
 
 def kmeans_centroids(
@@ -659,8 +617,6 @@ def kmeans_centroids(
     vec_col: str,
     n_cells: int | None = None,
     n_iter: int = 2,
-    sample_cap: int = 100_000,
-    round_dp: int = 9,
     fit: tuple[int, DataFrame] | None = None,
     seed_vecs: list | None = None,
     fit_matrix=None,
@@ -668,7 +624,7 @@ def kmeans_centroids(
     """Deterministic Lloyd-refined IVF centroids as a (cell, cvec)
     DataFrame. Init = the md5-hash-ordered corpus sample (the round-2
     ``deterministic_centroids`` seed), then ``n_iter`` Lloyd steps:
-    assign → per-dim mean → round to ``round_dp`` decimals.
+    assign → per-dim mean → round to ``_ROUND_DP`` decimals.
     ``seed_vecs`` (optional) injects an already-fetched ordered seed
     prefix — :func:`build_ivf_pq_index` fetches ONE (md5(id), id)-ordered
     prefix and shares it between this fit and :func:`pq_codebooks`
@@ -676,75 +632,43 @@ def kmeans_centroids(
     ``fit_matrix`` (optional) likewise shares one
     :func:`collect_fit_matrix` collect; when the sample is clean and
     driver-bounded the whole Lloyd loop runs in numpy on the driver
-    (`_kmeans_fit_driver` — a chain of ~2 tiny Spark jobs per iteration
-    becomes zero), with the distributed loop unchanged as the fallback
-    and for ragged/oversized samples.
+    (:func:`_lloyd_driver` — a chain of ~2 tiny Spark jobs per iteration
+    becomes zero), with the distributed loop for ragged/oversized
+    samples.
 
     Every step is engine-portable and SQL-replayable: the rounding
     quantum (1e-9) dwarfs float-summation order noise (~1e-12 for 1e5-row
     cells), so Spark and DuckDB converge to bit-identical centroids.
-    Training runs on an md5 sample capped at ``sample_cap`` rows (k-means
+    Training runs on an md5 sample capped at ``_SAMPLE_CAP`` rows (k-means
     needs a representative sample, not the corpus); the full corpus is
     only touched by the single final assignment in the caller.
     ``n_cells=None`` auto-sizes to ~sqrt(N) via :func:`auto_n_cells`.
     Cells that lose every point drop out (ids stay sparse, consistently
     on both engines)."""
     if fit is None:
-        fit = fit_vector_sample(corpus, id_col, vec_col, sample_cap)
+        fit = fit_vector_sample(corpus, id_col, vec_col)
     n, fsample = fit
     if n_cells is None:
         n_cells = auto_n_cells(n)
+    if seed_vecs is None:
+        seed_vecs = _seed_vecs(fsample, n_cells)
+    cents = [(i, [float(x) for x in v]) for i, v in enumerate(seed_vecs[:n_cells])]
+    spark = corpus.sparkSession
+    schema = "cell int, cvec array<double>"
+    if n_iter > 0 and cents:
+        if fit_matrix is None:
+            dim_hint = max(len(v) for _c, v in cents)
+            fit_matrix = collect_fit_matrix(fsample, min(n, _SAMPLE_CAP), dim_hint)
+        if fit_matrix is not None:
+            (cents,) = _lloyd_driver(fit_matrix, [cents], n_iter, l2=False)
+            return local_frame(spark, cents, schema)
     sample = fsample.select(
         F.col("__fid__").alias("__kid__"), F.col("__fv__").alias("__kv__")
     )
-    if seed_vecs is None:
-        h = F.md5(F.col("__kid__").cast("string"))
-        seed_vecs = list(
-            sample.orderBy(h, F.col("__kid__"))
-            .limit(n_cells)
-            .select("__kv__")
-            .toPandas()["__kv__"]
-        )
-    spark = corpus.sparkSession
-    if n_iter > 0 and seed_vecs:
-        if fit_matrix is None:
-            dim_hint = max(len(v) for v in seed_vecs[:n_cells])
-            fit_matrix = collect_fit_matrix(
-                fsample, min(n, sample_cap), dim_hint
-            )
-        if fit_matrix is not None:
-            cents = _kmeans_fit_driver(
-                fit_matrix, seed_vecs, n_cells, n_iter, round_dp
-            )
-            return local_frame(
-                spark, [(c, v) for c, v in cents], "cell int, cvec array<double>"
-            )
-    cent_df = local_frame(
-        spark,
-        [(i, [float(x) for x in v]) for i, v in enumerate(seed_vecs[:n_cells])],
-        "cell int, cvec array<double>",
-    )
+    cent_df = local_frame(spark, cents, schema)
     for _ in range(n_iter):
         assigned = _nearest_cell(sample, cent_df, "__kv__")
-        per_dim = (
-            assigned.select("cell", F.posexplode("__kv__").alias("dim", "x"))
-            .groupBy("cell", "dim")
-            .agg(F.round(F.avg("x"), round_dp).alias("m"))
-        )
-        cent_df = (
-            per_dim.groupBy("cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "m"))),
-                    lambda s: s["m"],
-                ).alias("cvec")
-            )
-            .select(F.col("cell").cast("int"), "cvec")
-        )
-        # small (n_cells rows) — materialize so each Lloyd step is one job
-        cent_df = local_frame(
-            spark, cent_df.collect(), "cell int, cvec array<double>"
-        )
+        cent_df = local_frame(spark, _lloyd_means(assigned, ["cell"], "__kv__"), schema)
     return cent_df
 
 
@@ -856,32 +780,18 @@ def _subvectors(vec_col: str, m: int, dim: int) -> F.Column:
 
 
 def _nearest_subcell(long_df: DataFrame, cb: DataFrame) -> DataFrame:
-    """Per-(row, subspace) argmin-L2 codebook assignment — ties to the
-    SMALLEST cell id, subvector riding inside the min struct exactly
-    like ``_nearest_cell``'s cosine twin.
-
-    Same Arrow-kernel design as :func:`_nearest_cell` (guide §4.2): the
-    row×cell L2 table is computed per batch in numpy with PER-DIMENSION
-    accumulation ``acc = acc + (x-y)*(x-y)`` — the identical IEEE
-    sequence as the ``_l2sq`` left fold, so distances are bit-identical
-    and the PQ oracles still hash-match. Spark min-struct ordering is
-    replicated: a NULL distance (NULL or dimension-mismatched
-    subvector) is the MINIMUM, NaN the maximum, ties fall to the
-    smallest cell id; per-row winners then collapse through the same
-    struct-min aggregation (min over per-row minima == min over all
-    pairs), keeping duplicate-key semantics unchanged."""
-    import numpy as np
-
+    """Per-(row, subspace) argmin-L2 codebook assignment, ties to the
+    SMALLEST cell id: the (__pid__, sub, sv) rows of ``long_df`` get
+    their winner per Arrow batch from :func:`_fold_nearest` (bit-exact
+    ``_l2sq`` distances, ``min(struct(d, cell))`` order: a NULL distance
+    — NULL subvector or one whose length differs from the cell's — is
+    the minimum, NaN the maximum), then fold through the struct-min
+    aggregation (min over per-row minima == min over all pairs), so
+    rows sharing (__pid__, sub) still collapse to one assignment. The
+    subvector rides inside the min struct."""
     from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
-    by_sub: dict[int, list[tuple[int, list[float]]]] = {}
-    for r in cb.select("sub", "cell", "cvec").collect():
-        by_sub.setdefault(int(r["sub"]), []).append(
-            (int(r["cell"]), [float(x) for x in r["cvec"]])
-        )
-    for cells in by_sub.values():
-        cells.sort()
-
+    by_sub = _cb_by_sub(cb)
     out_schema = StructType(
         [
             long_df.schema["__pid__"],
@@ -903,44 +813,13 @@ def _nearest_subcell(long_df: DataFrame, cb: DataFrame) -> DataFrame:
                 cells = by_sub.get(int(sub))
                 if not cells:
                     continue  # inner join: subspaces absent from cb drop
-                n = len(g)
-                raw = list(g["sv"])
-                dims = {len(v) for v in raw if v is not None}
-                dim = max(dims) if dims else 0
-                bad = np.array(
-                    [v is None or len(v) != dim for v in raw], dtype=bool
-                )
-                V = np.zeros((n, dim), dtype=np.float64)
-                for i, v in enumerate(raw):
-                    if not bad[i]:
-                        V[i, :] = v
-                # min-struct ordering: class 0 = NULL d (minimum),
-                # 2 = real, 3 = NaN (maximum)
-                best_cls = np.full(n, 4, dtype=np.int8)
-                best_d = np.full(n, np.nan)
-                best_cell = np.full(n, cells[0][0], dtype=np.int64)
-                for c_id, cv in cells:
-                    mismatch = bad | (len(cv) != dim)
-                    acc = np.zeros(n)
-                    for d in range(min(dim, len(cv))):
-                        t = V[:, d] - cv[d]
-                        acc = acc + t * t
-                    dd = np.where(mismatch, np.nan, acc)
-                    cls = np.where(
-                        mismatch, 0, np.where(np.isnan(dd), 3, 2)
-                    ).astype(np.int8)
-                    take = (cls < best_cls) | (
-                        (cls == best_cls) & (dd < best_d)
-                    )
-                    best_cls = np.where(take, cls, best_cls)
-                    best_d = np.where(take, dd, best_d)
-                    best_cell = np.where(take, c_id, best_cell)
+                cell, d, null = _nearest(list(g["sv"]), cells, l2=True)
                 out = g[["__pid__", "sub"]].copy()
                 out["sv"] = g["sv"]
-                d_col = pd.Series(best_d, index=g.index)
-                d_col[best_cls == 0] = None
+                d_col = pd.Series(d, index=g.index)
+                d_col[null] = None
                 out["__d__"] = d_col
-                out["__cell__"] = best_cell.astype("int32")
+                out["__cell__"] = cell.astype("int32")
                 parts.append(out)
             if parts:
                 yield pd.concat(parts)
@@ -970,8 +849,6 @@ def pq_codebooks(
     m: int = 2,
     k_sub: int = 8,
     n_iter: int = 1,
-    sample_cap: int = 100_000,
-    round_dp: int = 9,
     fit: tuple[int, DataFrame] | None = None,
     seed_vecs: list | None = None,
     fit_matrix=None,
@@ -979,90 +856,49 @@ def pq_codebooks(
     """Deterministic PQ codebooks as a (sub, cell, cvec) DataFrame: the
     md5-hash-ordered sample seeds ALL subspaces (one seed row yields m
     sliced centroids), then ``n_iter`` Lloyd steps per subspace — argmin
-    L2 → per-dim mean rounded to ``round_dp`` — run over one exploded
+    L2 → per-dim mean rounded to ``_ROUND_DP`` — run over one exploded
     (id, sub, subvector) frame so every subspace trains in the same
     jobs. Engine-portable for the same reason as ``kmeans_centroids``:
     the 1e-9 rounding quantum dwarfs summation-order noise.
     ``seed_vecs`` / ``fit_matrix`` share one ordered seed prefix and one
     collected sample matrix with the coarse fit — see
     :func:`kmeans_centroids`; a clean driver-bounded sample runs the
-    whole loop in `_pq_fit_driver` (zero Spark jobs), the distributed
-    loop below is the unchanged fallback."""
+    whole loop in :func:`_lloyd_driver` (zero Spark jobs), others the
+    distributed loop below."""
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     dm = dim // m
     if fit is None:
-        fit = fit_vector_sample(corpus, id_col, vec_col, sample_cap)
-    _n, fsample = fit
-    sample = fsample.select(
-        F.col("__fid__").alias("__pid__"), F.col("__fv__").alias("__pv__")
-    )
+        fit = fit_vector_sample(corpus, id_col, vec_col)
+    n, fsample = fit
     if seed_vecs is None:
-        seed_vecs = list(
-            sample.orderBy(
-                F.md5(F.col("__pid__").cast("string")), F.col("__pid__")
-            )
-            .limit(k_sub)
-            .select("__pv__")
-            .toPandas()["__pv__"]
-        )
+        seed_vecs = _seed_vecs(fsample, k_sub)
+    books = [
+        [(i, [float(x) for x in v[j * dm:(j + 1) * dm]])
+         for i, v in enumerate(seed_vecs[:k_sub])]
+        for j in range(m)
+    ]
     spark = corpus.sparkSession
+    schema = "sub int, cell int, cvec array<double>"
     if n_iter > 0 and seed_vecs:
         if fit_matrix is None:
-            fit_matrix = collect_fit_matrix(fsample, min(_n, sample_cap), dim)
+            fit_matrix = collect_fit_matrix(fsample, min(n, _SAMPLE_CAP), dim)
         if fit_matrix is not None and fit_matrix.shape[1] == dim:
-            out = _pq_fit_driver(
-                fit_matrix, seed_vecs, m, dim, k_sub, n_iter, round_dp
-            )
-            return local_frame(
-                spark, out, "sub int, cell int, cvec array<double>"
-            )
-    rows = []
-    for i, v in enumerate(seed_vecs[:k_sub]):
-        v = [float(x) for x in v]
-        for j in range(m):
-            rows.append((j, i, v[j * dm:(j + 1) * dm]))
-    cb = local_frame(spark, rows, "sub int, cell int, cvec array<double>")
-    long_df = sample.select(
-        "__pid__", F.posexplode(_subvectors("__pv__", m, dim)).alias("sub", "sv")
+            books = _lloyd_driver(fit_matrix, books, n_iter, l2=True)
+            rows = [(j, c, v) for j, book in enumerate(books) for c, v in book]
+            _check_dense(len(rows), m, k_sub)
+            return local_frame(spark, rows, schema)
+    cb = local_frame(
+        spark, [(j, c, v) for j, book in enumerate(books) for c, v in book], schema
+    )
+    long_df = fsample.select(
+        F.col("__fid__").alias("__pid__"),
+        F.posexplode(_subvectors("__fv__", m, dim)).alias("sub", "sv"),
     )
     for _ in range(n_iter):
-        assigned = _nearest_subcell(long_df, cb)
-        per_dim = (
-            assigned.select(
-                "sub", "cell", F.posexplode("sv").alias("dim", "x")
-            )
-            .groupBy("sub", "cell", "dim")
-            .agg(F.round(F.avg("x"), round_dp).alias("m"))
-        )
-        cb = (
-            per_dim.groupBy("sub", "cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "m"))),
-                    lambda s: s["m"],
-                ).alias("cvec")
-            )
-            .select("sub", F.col("cell").cast("int"), "cvec")
-        )
-        # small (m × k_sub rows) — materialize so each step is one job
-        cb_rows = cb.collect()
-        # density contract (r5 advice): the ADC table lookup indexes
-        # ptab by jx*k_sub + code + 1, assuming every subspace keeps
-        # exactly k_sub cells — a Lloyd step that empties a cell (e.g.
-        # duplicate seed subvectors) would silently shift every later
-        # subspace's lookups (or raise INVALID_ARRAY_INDEX under ANSI).
-        # Fail loudly at build time instead.
-        if len(cb_rows) != m * k_sub:
-            raise ValueError(
-                f"PQ codebook collapsed to {len(cb_rows)} (sub, cell) rows, "
-                f"expected m*k_sub = {m * k_sub}: a Lloyd step emptied a "
-                "codebook cell (duplicate seed subvectors?) — lower k_sub "
-                "or dedup the training vectors"
-            )
-        cb = local_frame(
-            spark, cb_rows, "sub int, cell int, cvec array<double>"
-        )
+        cb_rows = _lloyd_means(_nearest_subcell(long_df, cb), ["sub", "cell"], "sv")
+        _check_dense(len(cb_rows), m, k_sub)
+        cb = local_frame(spark, cb_rows, schema)
     return cb
 
 
@@ -1081,14 +917,10 @@ def _index_rows_kernel(
     with a single ``mapInPandas`` stage — zero shuffles, which is what
     the (row-local by construction) encode actually needs.
 
-    Bit-exactness contract — same as :func:`_nearest_cell_kernel` /
-    :func:`_nearest_subcell`, whose per-row logic this reuses verbatim:
-    per-dimension sequential accumulation (identical IEEE sequence as
-    the ``_l2sq`` / ``_dot`` left folds), L2 ties to the smallest cell,
-    NULL distance (NULL / dimension-mismatched subvector) is the
-    struct-min MINIMUM, NaN the maximum; cosine cell assignment uses the
-    struct-MAX ordering (NULL score smallest, NaN largest, ties to the
-    smallest cell).  Subvector slicing replicates ``_subvectors``:
+    Both assignments are :func:`_fold_nearest`'s: the coarse cell under
+    cosine struct-max order against the collected (cell, cvec)
+    ``cent_rows``, each code under L2 struct-min order against its
+    subspace's cells.  Subvector slicing replicates ``_subvectors``:
     ``v[j*dm : j*dm+dm]`` (short slices for short vectors, NULL vector →
     every subvector NULL).  Subspaces absent from ``by_sub`` drop out of
     the codes array (the composed form's inner join).
@@ -1096,124 +928,45 @@ def _index_rows_kernel(
     One output row per input row: callers must hold the documented
     unique-id contract (the composed form's groupBy collapse is the
     identity there)."""
-    import numpy as np
-
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, IntegerType, StructField, StructType,
-    )
+    from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
     dm = dim // m
     subs = sorted(by_sub)
+    cells = None if cent_rows is None else _cells(cent_rows)
     fields = [df.schema[id_col]]
-    if cent_rows is not None:
-        cell_ids = [int(r["cell"]) for r in cent_rows]
-        cvecs = [[float(x) for x in r["cvec"]] for r in cent_rows]
-        cnorms = [_pyfold_norm(v) for v in cvecs]
+    if cells is not None:
         fields.append(StructField("cell", IntegerType(), True))
     fields.append(StructField("codes", ArrayType(IntegerType(), True), True))
     out_schema = StructType(fields)
 
     def encode(batches):
-        import pandas as pd
-
         for pdf in batches:
-            n = len(pdf)
-            if n == 0 or (not subs and cent_rows is None):
+            if len(pdf) == 0 or (not subs and cells is None):
                 continue
             raw = list(pdf[vec_col])
             out = pdf[[id_col]].copy()
-
-            if cent_rows is not None:
-                # ---- coarse cell: _nearest_cell_kernel per-row logic ----
-                dims = {len(v) for v in raw if v is not None}
-                cdim = max(dims) if dims else 0
-                bad = np.array(
-                    [v is None or len(v) != cdim for v in raw], dtype=bool
-                )
-                V = np.zeros((n, cdim), dtype=np.float64)
-                for i, v in enumerate(raw):
-                    if not bad[i]:
-                        V[i, :] = v
-                acc = np.zeros(n)
-                for d in range(cdim):
-                    x = V[:, d]
-                    acc = acc + x * x
-                vn = np.sqrt(acc)
-                best_cls = np.full(n, -1, dtype=np.int8)
-                best_s = np.full(n, np.nan)
-                best_cell = np.full(
-                    n, cell_ids[0] if cell_ids else 0, dtype=np.int64
-                )
-                for c_id, cv, cn in zip(cell_ids, cvecs, cnorms):
-                    acc = np.zeros(n)
-                    for d in range(len(cv)):
-                        acc = acc + V[:, d] * cv[d]
-                    denom = vn * cn
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        s = acc / denom
-                    isnull = denom == 0.0
-                    s = np.where(isnull, np.nan, s)
-                    cls = np.where(
-                        isnull, 0, np.where(np.isnan(s), 3, 2)
-                    ).astype(np.int8)
-                    take = (cls > best_cls) | ((cls == best_cls) & (s > best_s))
-                    best_cls = np.where(take, cls, best_cls)
-                    best_s = np.where(take, s, best_s)
-                    best_cell = np.where(take, c_id, best_cell)
-                out["cell"] = best_cell.astype("int32")
-
-            # ---- PQ codes: _nearest_subcell per-row logic per subspace --
-            code_cols = []
-            for sub in subs:
-                cells = by_sub[sub]
-                svs = [
-                    None if v is None else list(v[sub * dm:sub * dm + dm])
-                    for v in raw
-                ]
-                sdims = {len(v) for v in svs if v is not None}
-                sdim = max(sdims) if sdims else 0
-                sbad = np.array(
-                    [v is None or len(v) != sdim for v in svs], dtype=bool
-                )
-                S = np.zeros((n, sdim), dtype=np.float64)
-                for i, v in enumerate(svs):
-                    if not sbad[i]:
-                        S[i, :] = v
-                b_cls = np.full(n, 4, dtype=np.int8)
-                b_d = np.full(n, np.nan)
-                b_cell = np.full(n, cells[0][0], dtype=np.int64)
-                for c_id, cv in cells:
-                    mismatch = sbad | (len(cv) != sdim)
-                    acc = np.zeros(n)
-                    for d in range(min(sdim, len(cv))):
-                        t = S[:, d] - cv[d]
-                        acc = acc + t * t
-                    dd = np.where(mismatch, np.nan, acc)
-                    cls = np.where(
-                        mismatch, 0, np.where(np.isnan(dd), 3, 2)
-                    ).astype(np.int8)
-                    take = (cls < b_cls) | ((cls == b_cls) & (dd < b_d))
-                    b_cls = np.where(take, cls, b_cls)
-                    b_d = np.where(take, dd, b_d)
-                    b_cell = np.where(take, c_id, b_cell)
-                code_cols.append(b_cell.astype("int32"))
-            out["codes"] = (
-                [list(t) for t in zip(*code_cols)] if code_cols else None
-            )
+            if cells is not None:
+                out["cell"] = _nearest(raw, cells)[0].astype("int32")
+            codes = [
+                _nearest(
+                    [None if v is None else v[j * dm:j * dm + dm] for v in raw],
+                    by_sub[j],
+                    l2=True,
+                )[0].astype("int32")
+                for j in subs
+            ]
+            out["codes"] = [list(t) for t in zip(*codes)] if codes else None
             yield out
 
     return df.select(id_col, vec_col).mapInPandas(encode, out_schema)
 
 
 def _cb_by_sub(codebooks: DataFrame) -> dict[int, list[tuple[int, list[float]]]]:
-    by_sub: dict[int, list[tuple[int, list[float]]]] = {}
+    """(sub, cell, cvec) codebook rows as {sub: ascending (id, vector)}."""
+    by_sub: dict[int, list] = {}
     for r in codebooks.select("sub", "cell", "cvec").collect():
-        by_sub.setdefault(int(r["sub"]), []).append(
-            (int(r["cell"]), [float(x) for x in r["cvec"]])
-        )
-    for cells in by_sub.values():
-        cells.sort()
-    return by_sub
+        by_sub.setdefault(int(r["sub"]), []).append(r)
+    return {sub: _cells(rows) for sub, rows in by_sub.items()}
 
 
 def pq_encode(
@@ -1442,18 +1195,11 @@ def build_ivf_pq_index(
     # (same sample, same total order), one small job instead of two.
     n_corpus, fsample = fit
     n_seed = max(n_cells or auto_n_cells(n_corpus), k_sub)
-    seed_vecs = list(
-        fsample.orderBy(
-            F.md5(F.col("__fid__").cast("string")), F.col("__fid__")
-        )
-        .limit(n_seed)
-        .select("__fv__")
-        .toPandas()["__fv__"]
-    )
+    seed_vecs = _seed_vecs(fsample, n_seed)
     # ONE sample collect serves both driver-side Lloyd fits (None for
     # ragged/oversized samples — the fits then run their unchanged
     # distributed loops)
-    fit_matrix = collect_fit_matrix(fsample, min(n_corpus, 100_000), dim)
+    fit_matrix = collect_fit_matrix(fsample, min(n_corpus, _SAMPLE_CAP), dim)
     # the coarse k-means and the PQ codebook fits are INDEPENDENT chains
     # of small sequential jobs over the shared checkpointed sample — run
     # them concurrently so the second fit's jobs back-fill the idle
