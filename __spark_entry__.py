@@ -1630,8 +1630,10 @@ def mask_tokens_mlm(spark, sf_dir):
             )
         )
 
-    return mk.join(enc.select("doc_id", "n_tok"), "doc_id").select(
-        "doc_id", "n_tok", "n_masked",
+    # masked is token_ids position for position, so its size is n_tok:
+    # no self-join back to enc, whose vocab map would be planned twice
+    return mk.select(
+        "doc_id", F.size("masked").cast("int").alias("n_tok"), "n_masked",
         _md5("masked").alias("masked_md5"),
         _md5("labels").alias("labels_md5"),
     )

@@ -86,10 +86,23 @@ def test_nearest_cell_kernel_matches_jvm(spark):
          (2, [-1.0, 2.0, 0.0, 1.0]), (3, [2.0, -1.0, 0.5])],
         "cell int, cvec array<double>",
     )
+    # a NULL element makes the row score NULL against every cell (Spark's
+    # _dot folds the NULL product in), so it takes the smallest cell even
+    # where NaN would win; a NaN element comes back as NaN, not NULL
+    null_elems = spark.createDataFrame(
+        [(1, [1.0, None, 0.0]), (2, [None, 1.0]), (3, [0.0, 1.0, 0.0]),
+         (4, [1.0, float("nan"), 0.0]), (5, [1.0, 0.0, 0.0])],
+        "vid long, v array<double>",
+    ).coalesce(1)
+    null_cent = spark.createDataFrame(
+        [(0, [0.0, 1.0]), (1, [0.0, 1.0, 0.0]), (2, [1.0, 0.0, 0.0])],
+        "cell int, cvec array<double>",
+    )
     cases = [
         (df, cent),
         (mixed, mixed_cent),
         (mixed.filter(F.size("v") == 3), mixed_cent),
+        (null_elems, null_cent),
     ]
     for frame, cells in cases:
         rows = sorted(cells.collect(), key=lambda r: int(r["cell"]))
@@ -106,7 +119,7 @@ def test_nearest_cell_kernel_matches_jvm(spark):
         for a, b in zip(sorted(via_kernel, key=key), sorted(via_jvm, key=key)):
             assert a["vid"] == b["vid"]
             assert a["cell"] == b["cell"]
-            assert a["v"] == b["v"]
+            assert repr(a["v"]) == repr(b["v"])  # tells NaN from NULL
 
 
 def test_pack_sequences_n_docs_gaps(spark):
@@ -207,6 +220,61 @@ def test_fused_index_matches_composed(spark):
     assert fused.exceptAll(composed).count() == 0
 
 
+def test_index_rows_kernel_null_elements_match_jvm(spark):
+    """_index_rows_kernel against the JVM forms — _nearest_cell's
+    crossJoin scoring for the cell, _l2sq + min(struct(d, cell)) per
+    _subvectors slice for the codes. A NULL element makes its whole
+    vector score NULL for the cell but only its own subvector NULL for
+    the codes; NULL then takes the smallest id, where NaN would lose to
+    (L2) or beat (cosine) a length-mismatched cell."""
+    import upgini_spark.functions.similarity as SIM
+
+    df = spark.createDataFrame(
+        [(1, [1.0, None, 0.5, 0.5]), (2, [0.5, 0.5, None, 1.0]),
+         (3, [1.0, float("nan"), 0.5, 0.5]), (4, [0.0, 1.0, 1.0, 0.0]),
+         (5, [1.0, 0.0, 0.0, 1.0]), (6, None), (7, [0.2, 0.9])],
+        "n_id long, n_vec array<double>",
+    ).coalesce(1)
+    cent = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0]), (1, [1.0, 0.0, 0.0, 0.0]),
+         (2, [0.0, 1.0, 0.0, 0.0])],
+        "cell int, cvec array<double>",
+    )
+    cb = spark.createDataFrame(
+        [(0, 0, [1.0, 0.0]), (0, 1, [0.0, 1.0, 0.0]),
+         (1, 0, [1.0, 0.0]), (1, 1, [0.0, 1.0, 0.0])],
+        "sub int, cell int, cvec array<double>",
+    )
+    old = SIM._KERNEL_MIN_WORK
+    SIM._KERNEL_MIN_WORK = 10**9  # force the JVM crossJoin path
+    try:
+        ref_cell = {
+            r["n_id"]: r["cell"]
+            for r in SIM._nearest_cell(df, cent, "n_vec").collect()
+        }
+    finally:
+        SIM._KERNEL_MIN_WORK = old
+    ref_codes = (
+        df.select(
+            "n_id", F.posexplode(SIM._subvectors("n_vec", 2, 4)).alias("sub", "sv")
+        )
+        .join(F.broadcast(cb), on="sub")
+        .withColumn("d", SIM._l2sq(F.col("sv"), F.col("cvec")))
+        .groupBy("n_id", "sub")
+        .agg(F.min(F.struct("d", "cell")).alias("b"))
+        .collect()
+    )
+    want = {i: (c, [None, None]) for i, c in ref_cell.items()}
+    for r in ref_codes:
+        want[r["n_id"]][1][r["sub"]] = r["b"]["cell"]
+    got = SIM._index_rows_kernel(
+        df, "n_id", "n_vec", SIM._cb_by_sub(cb), 4, 2,
+        cent_rows=sorted(cent.collect(), key=lambda r: int(r["cell"])),
+    ).collect()
+    assert {r["n_id"]: (r["cell"], list(r["codes"])) for r in got} == want
+    assert want[1] == (0, [0, 1]) and want[2] == (0, [1, 0])
+
+
 def test_nearest_subcell_matches_l2sq_struct_min(spark):
     """_nearest_subcell on mixed-length subvectors in one Arrow batch
     must equal the Spark form: _l2sq per (row, cell) pair, then
@@ -217,8 +285,11 @@ def test_nearest_subcell_matches_l2sq_struct_min(spark):
     long_df = spark.createDataFrame(
         [(1, 0, [0.9, 0.1]), (2, 0, [1.0, 2.0, 3.0]), (3, 0, [0.2, 0.7]),
          (4, 0, None), (5, 0, []), (6, 0, [float("nan"), 0.0]),
-         (7, 0, [0.5, 0.5]),
-         (1, 1, [0.1, 0.9]), (2, 1, [1.0, 0.0, 0.0]), (3, 1, [0.0, 1.0, 2.0])],
+         (7, 0, [0.5, 0.5]), (8, 0, [None, 0.5]),
+         (1, 1, [0.1, 0.9]), (2, 1, [1.0, 0.0, 0.0]), (3, 1, [0.0, 1.0, 2.0]),
+         # NULL element: NULL against every cell, so the smallest cell
+         # wins (a NaN distance would lose to cell 1's length mismatch)
+         (9, 1, [1.0, None, 0.0])],
         "__pid__ long, sub int, sv array<double>",
     ).coalesce(1)
     cb = spark.createDataFrame(
@@ -233,10 +304,13 @@ def test_nearest_subcell_matches_l2sq_struct_min(spark):
         .agg(F.min(F.struct("d", "cell")).alias("b"))
         .select("__pid__", "sub", F.col("b.cell").alias("cell"))
     )
-    got = SIM._nearest_subcell(long_df, cb).select("__pid__", "sub", "cell")
+    got = SIM._nearest_subcell(long_df, cb).collect()
     want = {(r[0], r[1]): r[2] for r in ref.collect()}
-    assert {(r[0], r[1]): r[2] for r in got.collect()} == want
-    assert want[(1, 0)] == 1
+    assert {(r["__pid__"], r["sub"]): r["cell"] for r in got} == want
+    assert want[(1, 0)] == 1 and want[(9, 1)] == 0
+    # the subvector rides through the kernel untouched: NaN stays NaN
+    sv = {(r[0], r[1]): repr(r[2]) for r in long_df.collect()}
+    assert {(r["__pid__"], r["sub"]): repr(r["sv"]) for r in got} == sv
 
 
 def test_ts_features_masked_matches_parity(spark):
@@ -503,3 +577,32 @@ def test_asof_arrow_bucket_invariance(spark):
     for o in outs[1:]:
         assert outs[0].exceptAll(o).count() == 0
         assert o.exceptAll(outs[0]).count() == 0
+
+
+def test_mask_tokens_mlm_builds_vocab_map_once(spark, tmp_path):
+    """The mask_tokens_mlm query takes n_tok from the masked array: no
+    self-join back to the encoder, so the plan encodes the documents and
+    aggregates the vocabulary map once (the self-join planned both
+    twice; at run time AQE reused the map's exchange but still
+    re-encoded every document for the join)."""
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+    import __spark_entry__ as E
+
+    words = ["the", "a", "cat", "dog", "sat"]
+    spark.createDataFrame(
+        [(i, " ".join(words[: i % 6]) or None) for i in range(30)],
+        "doc_id long, text string",
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    df = E.mask_tokens_mlm(spark, str(tmp_path))
+    rows = df.collect()
+    adaptive = df._jdf.queryExecution().executedPlan()
+    initial = adaptive.initialPlan().toString()
+    final = adaptive.executedPlan().toString()
+    assert initial.count("output=[__vmap__") == 1
+    assert final.count("BroadcastExchange") == 1  # the vocab map only
+    assert "BroadcastHashJoin" not in final
+    assert len(rows) == 30
+    assert all(r["n_tok"] == r["doc_id"] % 6 for r in rows)

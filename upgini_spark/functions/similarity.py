@@ -301,25 +301,62 @@ def _fold_nearest(V, cells, l2=False):
     return best_cell, -best_s if l2 else best_s, best_cls == null_cls
 
 
-def _nearest(vecs, cells, l2=False):
-    """:func:`_fold_nearest` over a ragged vector list (an Arrow batch
-    column). Rows are grouped by their own length, so each row is
-    scored against every cell exactly as Spark scores the pair — never
-    padded to, or judged against, the batch's longest row. A NULL row
-    scores NULL against every cell and so takes the smallest cell id."""
+def _arrow_vectors(col):
+    """An Arrow list column (one batch of a vector column) as the tuple
+    ``(values, nulls, starts, lens)`` that :func:`_nearest` reads: the
+    flat float64 element values, the running count of NULL elements
+    (``values[s:e]`` holds ``nulls[e] - nulls[s]`` of them), and each
+    row's start and length (-1 for a NULL row). The kernels read Arrow,
+    not pandas: pandas turns a NULL element into NaN, and the two score
+    differently (NULL vs NaN) in Spark's folds."""
     import numpy as np
 
-    n = len(vecs)
-    lens = np.array([-1 if v is None else len(v) for v in vecs], dtype=np.int64)
+    offsets = col.offsets.to_numpy().astype(np.int64)
+    child = col.values
+    values = child.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+    nulls = np.concatenate(
+        ([0], np.cumsum(child.is_null().to_numpy(zero_copy_only=False)))
+    )
+    lens = np.diff(offsets)
+    lens[col.is_null().to_numpy(zero_copy_only=False)] = -1
+    return values, nulls, offsets[:-1], lens
+
+
+def _slice(vecs, lo, width):
+    """Every row's ``v[lo:lo + width]`` of an :func:`_arrow_vectors`
+    tuple — short slices for short rows, a NULL row stays NULL (Spark's
+    ``slice``)."""
+    import numpy as np
+
+    values, nulls, starts, lens = vecs
+    n = np.maximum(lens, 0)
+    return (
+        values, nulls, starts + np.minimum(lo, n),
+        np.where(lens < 0, -1, np.clip(n - lo, 0, width)),
+    )
+
+
+def _nearest(vecs, cells, l2=False):
+    """:func:`_fold_nearest` over the ragged rows of an
+    :func:`_arrow_vectors` tuple. Rows are grouped by their own length,
+    so each row is scored against every cell exactly as Spark scores the
+    pair — never padded to, or judged against, the batch's longest row.
+    A NULL row, or one holding a NULL element, scores NULL against every
+    cell (``_dot`` / ``_l2sq`` fold the NULL product into the sum) and so
+    takes the smallest cell id."""
+    import numpy as np
+
+    values, nulls, starts, lens = vecs
+    n = len(lens)
+    ends = starts + np.maximum(lens, 0)
+    lens = np.where(nulls[ends] > nulls[starts], -1, lens)
     cell = np.full(n, cells[0][0] if cells else 0, dtype=np.int64)
     score = np.full(n, np.nan)
     null = np.ones(n, dtype=bool)
     for dim in np.unique(lens[lens >= 0]):
         idx = np.flatnonzero(lens == dim)
-        V = np.array([vecs[i] for i in idx], dtype=np.float64)
-        cell[idx], score[idx], null[idx] = _fold_nearest(
-            V.reshape(len(idx), dim), cells, l2
-        )
+        V = values[starts[idx, None] + np.arange(dim)]
+        cell[idx], score[idx], null[idx] = _fold_nearest(V, cells, l2)
     return cell, score, null
 
 
@@ -328,7 +365,7 @@ def _cells(rows) -> list[tuple[int, list[float]]]:
     return sorted((int(r["cell"]), [float(x) for x in r["cvec"]]) for r in rows)
 
 
-# Arrow-kernel dispatch threshold: the mapInPandas assignment pays a
+# Arrow-kernel dispatch threshold: the mapInArrow assignment pays a
 # fixed Python/Arrow toll per stage, so it only wins when the per-row
 # score work is big enough — measured at sf1.0/local[32]: 142 cells x
 # 64 dims (9088 mul-adds/row) runs 2.6 s JVM vs 1.6 s kernel, while the
@@ -390,7 +427,7 @@ def _nearest_cell(df: DataFrame, cent: DataFrame, vec_col: str) -> DataFrame:
 
 def _nearest_cell_kernel(df: DataFrame, rows: list, vec_col: str) -> DataFrame:
     """Per-row winners of :func:`_nearest_cell` — (keys…, vec, __s__,
-    cell) — from an Arrow ``mapInPandas`` kernel over the collected
+    cell) — from an Arrow ``mapInArrow`` kernel over the collected
     (cell, cvec) ``rows`` (guide §4.2: hand whole batches to vectorized
     numpy instead of evaluating k interpreted higher-order dot-folds
     per row; measured ~8× on the 20k×142 assignment at sf1.0). Scores
@@ -409,23 +446,25 @@ def _nearest_cell_kernel(df: DataFrame, rows: list, vec_col: str) -> DataFrame:
     )
 
     def assign(batches):
-        import pandas as pd
+        import pyarrow as pa
 
         if not cells:
             return
-        for pdf in batches:
-            if len(pdf) == 0:
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            cell, s, null = _nearest(list(pdf[vec_col]), cells)
-            out = pdf[keys].copy()
-            out[vec_col] = pdf[vec_col]
-            s_col = pd.Series(s)
-            s_col[null] = None
-            out["__s__"] = s_col
-            out["cell"] = cell.astype("int32")
-            yield out
+            cell, s, null = _nearest(_arrow_vectors(rb.column(vec_col)), cells)
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(k) for k in keys]
+                + [
+                    rb.column(vec_col),
+                    pa.array(s, mask=null),
+                    pa.array(cell.astype("int32")),
+                ],
+                names=out_schema.names,
+            )
 
-    return df.mapInPandas(assign, out_schema)
+    return df.mapInArrow(assign, out_schema)
 
 
 _DRIVER_FIT_ELEMS = 16_000_000  # sample rows × dims ceiling for driver-side fits
@@ -803,28 +842,37 @@ def _nearest_subcell(long_df: DataFrame, cb: DataFrame) -> DataFrame:
     )
 
     def assign(batches):
-        import pandas as pd
+        import numpy as np
+        import pyarrow as pa
 
-        for pdf in batches:
-            if len(pdf) == 0:
+        for rb in batches:
+            n = rb.num_rows
+            if n == 0:
                 continue
-            parts = []
-            for sub, g in pdf.groupby("sub", sort=False):
+            values, nulls, starts, lens = _arrow_vectors(rb.column("sv"))
+            subs = rb.column("sub").to_numpy(zero_copy_only=False)
+            cell = np.zeros(n, dtype=np.int32)
+            d = np.full(n, np.nan)
+            null = np.ones(n, dtype=bool)
+            keep = np.zeros(n, dtype=bool)
+            for sub in np.unique(subs):
                 cells = by_sub.get(int(sub))
                 if not cells:
                     continue  # inner join: subspaces absent from cb drop
-                cell, d, null = _nearest(list(g["sv"]), cells, l2=True)
-                out = g[["__pid__", "sub"]].copy()
-                out["sv"] = g["sv"]
-                d_col = pd.Series(d, index=g.index)
-                d_col[null] = None
-                out["__d__"] = d_col
-                out["__cell__"] = cell.astype("int32")
-                parts.append(out)
-            if parts:
-                yield pd.concat(parts)
+                idx = np.flatnonzero(subs == sub)
+                cell[idx], d[idx], null[idx] = _nearest(
+                    (values, nulls, starts[idx], lens[idx]), cells, l2=True
+                )
+                keep[idx] = True
+            if keep.any():
+                kept = rb.filter(pa.array(keep))
+                yield pa.RecordBatch.from_arrays(
+                    [kept.column(c) for c in ("__pid__", "sub", "sv")]
+                    + [pa.array(d[keep], mask=null[keep]), pa.array(cell[keep])],
+                    names=out_schema.names,
+                )
 
-    scored = long_df.mapInPandas(assign, out_schema)
+    scored = long_df.mapInArrow(assign, out_schema)
     best = scored.groupBy("__pid__", "sub").agg(
         F.min(
             F.struct(
@@ -914,7 +962,7 @@ def _index_rows_kernel(
     """One-pass Arrow kernel computing, per input ROW, the PQ codes (and
     optionally the coarse cell): (id[, cell], codes).  Replaces the
     explode → broadcast-join → struct-min → regroup [→ join] pipeline
-    with a single ``mapInPandas`` stage — zero shuffles, which is what
+    with a single ``mapInArrow`` stage — zero shuffles, which is what
     the (row-local by construction) encode actually needs.
 
     Both assignments are :func:`_fold_nearest`'s: the coarse cell under
@@ -940,25 +988,34 @@ def _index_rows_kernel(
     out_schema = StructType(fields)
 
     def encode(batches):
-        for pdf in batches:
-            if len(pdf) == 0 or (not subs and cells is None):
-                continue
-            raw = list(pdf[vec_col])
-            out = pdf[[id_col]].copy()
-            if cells is not None:
-                out["cell"] = _nearest(raw, cells)[0].astype("int32")
-            codes = [
-                _nearest(
-                    [None if v is None else v[j * dm:j * dm + dm] for v in raw],
-                    by_sub[j],
-                    l2=True,
-                )[0].astype("int32")
-                for j in subs
-            ]
-            out["codes"] = [list(t) for t in zip(*codes)] if codes else None
-            yield out
+        import numpy as np
+        import pyarrow as pa
 
-    return df.select(id_col, vec_col).mapInPandas(encode, out_schema)
+        for rb in batches:
+            n = rb.num_rows
+            if n == 0 or (not subs and cells is None):
+                continue
+            vecs = _arrow_vectors(rb.column(vec_col))
+            out = [rb.column(id_col)]
+            if cells is not None:
+                out.append(pa.array(_nearest(vecs, cells)[0].astype("int32")))
+            if subs:
+                codes = np.stack(
+                    [
+                        _nearest(_slice(vecs, j * dm, dm), by_sub[j], l2=True)[0]
+                        for j in subs
+                    ],
+                    axis=1,
+                ).astype("int32")
+                offsets = np.arange(0, codes.size + 1, len(subs), dtype="int32")
+                out.append(
+                    pa.ListArray.from_arrays(pa.array(offsets), pa.array(codes.ravel()))
+                )
+            else:
+                out.append(pa.nulls(n, pa.list_(pa.int32())))
+            yield pa.RecordBatch.from_arrays(out, names=out_schema.names)
+
+    return df.select(id_col, vec_col).mapInArrow(encode, out_schema)
 
 
 def _cb_by_sub(codebooks: DataFrame) -> dict[int, list[tuple[int, list[float]]]]:
