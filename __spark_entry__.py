@@ -5686,8 +5686,11 @@ def cluster_assign(spark, sf_dir):
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
     cent = SIM.kmeans_centroids(emb, "vec_id", "v", n_cells=4, n_iter=1)
+    # sort the ≤ 4 collected rows here: an orderBy over the centroids'
+    # LocalRelation plans a shuffle and a sort (3 jobs)
     cents = [
-        [float(x) for x in r["cvec"]] for r in cent.orderBy("cell").collect()
+        [float(x) for x in r["cvec"]]
+        for r in sorted(cent.collect(), key=lambda r: r["cell"])
     ]
     node = parse_formula("cluster(v)")
     set_op_params(node, {"centroids": _json.dumps(cents)})

@@ -515,7 +515,7 @@ def test_driver_lloyd_fits_match_distributed(spark):
     ragged = corpus.union(
         spark.createDataFrame([(999, None)], "vid long, v array<double>"))
     fit = SIM.fit_vector_sample(ragged, "vid", "v")
-    assert SIM.collect_fit_matrix(fit[1], fit[0], 8) is None
+    assert SIM.collect_fit_matrix(fit, 5, 8)[1] is None
     # and the public entry still works (falls back internally)
     cent_ragged = SIM.kmeans_centroids(
         ragged, "vid", "v", n_cells=5, n_iter=1, fit=fit).collect()
@@ -606,3 +606,127 @@ def test_mask_tokens_mlm_builds_vocab_map_once(spark, tmp_path):
     assert "BroadcastHashJoin" not in final
     assert len(rows) == 30
     assert all(r["n_tok"] == r["doc_id"] % 6 for r in rows)
+
+
+def _fit_sample(spark, rows, id_type="long"):
+    """A checkpointed (__fid__, __fv__) fit sample over 3 partitions, so
+    both seed paths read the same rows in the same partition order."""
+    from upgini_spark.util import local_frame
+
+    df = local_frame(spark, rows, f"__fid__ {id_type}, __fv__ array<double>")
+    return len(rows), df.repartition(3).localCheckpoint(eager=True)
+
+
+def test_driver_seed_order_matches_seed_vecs(spark):
+    """collect_fit_matrix sorts the seeds on the driver; the order must
+    be _seed_vecs' (md5(cast(id as string)) asc NULLS FIRST, id asc)
+    TakeOrdered. Duplicate ids tie on both keys, where Spark's order is
+    unspecified, so they carry one vector."""
+    import upgini_spark.functions.similarity as SIM
+
+    def vec(i):
+        return [float((i * 13 + d * 7) % 23) / 7.0 - 1.5 for d in range(4)]
+
+    cases = {
+        "string ids": ([(f"k{i}", vec(i)) for i in range(40)], "string"),
+        "int ids": ([(i, vec(i)) for i in range(40)], "long"),
+        "a NULL id": ([(i, vec(i)) for i in range(39)] + [(None, vec(99))], "long"),
+        "duplicate ids": (
+            [(i, vec(i)) for i in range(30)] + [(7, vec(7)), (7, vec(7)), (21, vec(21))],
+            "long",
+        ),
+    }
+    for name, (rows, id_type) in cases.items():
+        fit = _fit_sample(spark, rows, id_type)
+        for n_seed in (5, len(rows)):
+            seeds, matrix = SIM.collect_fit_matrix(fit, n_seed)
+            assert matrix is not None and matrix.shape == (len(rows), 4), name
+            want = SIM._seed_vecs(fit[1], n_seed)
+            assert [list(v) for v in seeds] == [list(v) for v in want], name
+
+
+def test_unclean_fit_sample_takes_distributed_loop(spark, monkeypatch):
+    """A ragged, NULL-vector, NULL-element or oversized sample gets no
+    fit matrix and _seed_vecs' seeds, and kmeans_centroids runs the
+    distributed Lloyd loop on it; a NaN element is clean (NaN flows
+    through both paths identically)."""
+    import upgini_spark.functions.similarity as SIM
+
+    base = [(i, [float(i % 5), float(i % 3), 1.0, -1.0]) for i in range(40)]
+    unclean = {
+        "ragged": base + [(40, [1.0, 2.0, 3.0])],
+        "NULL vector": base + [(40, None)],
+        "NULL element": base + [(40, [1.0, None, 0.0, 2.0])],
+    }
+    for name, rows in unclean.items():
+        fit = _fit_sample(spark, rows)
+        seeds, matrix = SIM.collect_fit_matrix(fit, 6)
+        assert matrix is None, name
+        assert [repr(list(v)) for v in seeds] == [
+            repr(list(v)) for v in SIM._seed_vecs(fit[1], 6)
+        ], name
+
+    fit = _fit_sample(spark, base + [(40, [1.0, float("nan"), 0.0, 2.0])])
+    assert SIM.collect_fit_matrix(fit, 6)[1] is not None
+    monkeypatch.setattr(SIM, "_DRIVER_FIT_ELEMS", 4 * 41 - 1)  # one element short
+    assert SIM.collect_fit_matrix(fit, 6)[1] is None
+    assert SIM.collect_fit_matrix(fit, 6, dim=4)[1] is None
+    monkeypatch.undo()
+
+    def driver_fit(*_a, **_kw):
+        raise AssertionError("driver-side Lloyd fit on an unclean sample")
+
+    steps = []
+    means = SIM._lloyd_means
+
+    def counted_means(*a, **kw):
+        steps.append(1)
+        return means(*a, **kw)
+
+    monkeypatch.setattr(SIM, "_lloyd_driver", driver_fit)
+    monkeypatch.setattr(SIM, "_lloyd_means", counted_means)
+    for rows in unclean.values():
+        fit = _fit_sample(spark, rows)
+        SIM.kmeans_centroids(fit[1], "__fid__", "__fv__", n_cells=3, n_iter=1, fit=fit).collect()
+    assert len(steps) == len(unclean)
+
+
+def test_ivf_pq_fit_inputs_are_one_collect(spark, monkeypatch):
+    """build_ivf_pq_index on a clean sample: after the shared sample is
+    counted and checkpointed, the seeds and the fit matrix of both fits
+    come from ONE collect (the TakeOrdered seed fetch, the cleanliness
+    agg and the toPandas of the sample used to be three actions)."""
+    import upgini_spark.functions.similarity as SIM
+    from upgini_spark.util import local_frame
+
+    corpus = local_frame(
+        spark,
+        [(i, [float((i * 13 + d * 7) % 23) / 7.0 - 1.5 for d in range(8)])
+         for i in range(300)],
+        "vid long, v array<double>",
+    )
+    sc = spark.sparkContext
+    sample = SIM.fit_vector_sample
+
+    def sample_in_own_group(*a, **kw):
+        sc.setJobGroup("ivfpq_sample", "fit sample")
+        try:
+            return sample(*a, **kw)
+        finally:
+            sc.setJobGroup("ivfpq_fit", "fit inputs")
+
+    monkeypatch.setattr(SIM, "fit_vector_sample", sample_in_own_group)
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup("ivfpq_fit", "fit inputs")
+    try:
+        idx = SIM.build_ivf_pq_index(
+            corpus, "vid", "v", 8, m=2, k_sub=3, n_cells=4, materialize=False)
+    finally:
+        sc.setJobGroup(None, None)
+    # the fits run in pool threads, whose jobs carry no group
+    pool_jobs = set(sc.statusTracker().getJobIdsForGroup(None)) - ungrouped
+    fit_jobs = sc.statusTracker().getJobIdsForGroup("ivfpq_fit")
+    assert len(fit_jobs) + len(pool_jobs) <= 2, (fit_jobs, pool_jobs)
+    assert sc.statusTracker().getJobIdsForGroup("ivfpq_sample")
+    assert idx["index"].count() == 300
+

@@ -1,12 +1,20 @@
 """``get_spark`` sizes Spark's JVM-wide generated-code cache to the
 engine's working set: a query whose plan generates more classes than
-Spark's default 100-entry cache must not recompile them on a rerun."""
+Spark's default 100-entry cache must not recompile them on a rerun. It
+also turns off PySpark's per-call DataFrame call-site capture, which
+costs every ``Column`` call several extra py4j round trips."""
 
 import logging
 
+from py4j import clientserver
 from pyspark.sql import functions as F
 
-from upgini_spark.session import CODEGEN_CACHE_CONF, CODEGEN_CACHE_ENTRIES, get_spark
+from upgini_spark.session import (
+    CODEGEN_CACHE_CONF,
+    CODEGEN_CACHE_ENTRIES,
+    DATAFRAME_DEBUGGING_CONF,
+    get_spark,
+)
 
 
 def _compiles(spark) -> int:
@@ -49,3 +57,27 @@ def test_attach_without_cache_size_warns(spark, caplog):
         get_spark(**kw, extra_conf={CODEGEN_CACHE_CONF: "500"})
     assert len(caplog.records) == 1
     assert CODEGEN_CACHE_CONF in caplog.records[0].getMessage()
+
+
+def test_get_spark_turns_off_call_site_capture(spark):
+    assert spark.conf.get(DATAFRAME_DEBUGGING_CONF) == "false"
+    assert spark.sparkContext.getConf().get(DATAFRAME_DEBUGGING_CONF) == "false"
+
+
+def test_column_expressions_cost_few_round_trips(spark, monkeypatch):
+    """With call-site capture on, each wrapped ``functions.*`` call and
+    ``Column`` method adds ~5 JVM calls: building the expression below
+    costs ~35-39 round trips then, ~5-7 with it off."""
+    sent = [0]
+    send = clientserver.ClientServerConnection.send_command
+
+    def counted(self, command):
+        sent[0] += 1
+        return send(self, command)
+
+    _ = (F.col("x") + 0).alias("y")  # first call: lazy imports, conf reads
+    monkeypatch.setattr(clientserver.ClientServerConnection, "send_command", counted)
+    for i in range(100):
+        _ = (F.col("x") + i).alias("y")
+    monkeypatch.undo()
+    assert sent[0] <= 10 * 100, sent[0] / 100

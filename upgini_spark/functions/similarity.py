@@ -494,43 +494,65 @@ def _round_half_up(v: float, dp: int) -> float:
     return r + 0.0 if r == 0.0 else r
 
 
-def collect_fit_matrix(fsample: DataFrame, n_sample: int, dim_hint: int):
-    """Collect the ≤_SAMPLE_CAP fit sample into one (n × dim) float64
-    matrix for the driver-side Lloyd fits, or None to keep the
-    distributed path. Engages only when the sample is CLEAN — every
-    vector non-null and of one uniform length with no NULL elements
-    (verified by one tiny agg over the checkpointed sample; Spark's avg
-    SKIPS null elements, a dense matrix cannot, while NaN flows through
-    both paths identically) — and bounded (n × dim ≤ 16M elements ≈
-    128 MB, the same driver-bound spirit as the ≤100k metrics collect
-    and the ≤1M-edge union-find dispatch). At any corpus size the fit
-    sample is already ≤100k rows by construction, so this is a latency
-    dispatch, not a scale gamble: ragged/huge-dim inputs keep the
-    unchanged distributed loop."""
-    import numpy as np
+def collect_fit_matrix(fit: tuple[int, DataFrame], n_seed: int, dim: int | None = None):
+    """``(seed_vecs, fit_matrix)`` for the Lloyd fits from ONE Arrow
+    collect of the fit sample's ``(md5(cast(__fid__ as string)), __fid__,
+    __fv__)``: the first ``n_seed`` vectors in :func:`_seed_vecs` order
+    and the (n × dim) float64 sample matrix the driver-side fits
+    (:func:`_lloyd_driver`) run on — one job where the seed TakeOrdered,
+    a cleanliness agg and a ``toPandas`` used to run three.
 
-    if n_sample <= 0 or dim_hint <= 0 or n_sample * dim_hint > _DRIVER_FIT_ELEMS:
-        return None
-    st = fsample.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("__fv__").isNull(), 1).otherwise(0)).alias("nv"),
-        F.min(F.size("__fv__")).alias("lo"),
-        F.max(F.size("__fv__")).alias("hi"),
-        F.max(
-            F.when(F.exists("__fv__", lambda x: x.isNull()), 1).otherwise(0)
-        ).alias("ne"),
-    ).collect()[0]
+    ``fit`` is :func:`fit_vector_sample`'s ``(count, sample)``. The
+    matrix is returned only for a CLEAN sample — no NULL vector, no NULL
+    element, one length — decided on the Arrow arrays (pandas would read
+    a NULL element as NaN; Spark's avg SKIPS null elements, a dense
+    matrix cannot, while NaN flows through both paths identically), and
+    a driver-bounded one: n × dim ≤ ``_DRIVER_FIT_ELEMS`` (16M elements
+    ≈ 128 MB, the driver-bound spirit of the ≤100k metrics collect and
+    the ≤1M-edge union-find dispatch). The bound holds before anything
+    is shipped: a vector longer than ``_DRIVER_FIT_ELEMS // n`` is
+    collected as NULL (so the sample reads as not clean), and a known
+    ``dim`` past the bound skips the collect. Otherwise ``fit_matrix``
+    is None, the seeds come from :func:`_seed_vecs` as before, and the
+    fits keep their distributed loops.
+
+    Seeds are sorted on the driver in Spark's ``(md5 asc NULLS FIRST, id
+    asc)`` order with a stable sort on the md5 alone: the md5 is of the
+    id's string form, so rows with one md5 share one id and the id key
+    never reorders them; full ties keep collect order (Spark leaves
+    their order unspecified)."""
+    import pyarrow.compute as pc
+
+    n, fsample = fit
+    n_sample = min(n, _SAMPLE_CAP)
+    if n_sample <= 0:
+        return [], None
+    if dim is not None and (dim <= 0 or n_sample * dim > _DRIVER_FIT_ELEMS):
+        return _seed_vecs(fsample, n_seed), None
+    fv = F.col("__fv__")
+    table = fsample.select(
+        F.md5(F.col("__fid__").cast("string")).alias("__h__"),
+        "__fid__",
+        F.when(F.size(fv) <= _DRIVER_FIT_ELEMS // n_sample, fv).alias("__fv__"),
+    ).toArrow()
+    rows = table.num_rows
+    if rows == 0:
+        return [], None
+    values, nulls, starts, lens = _arrow_vectors(table.column("__fv__").combine_chunks())
+    width, lo = int(lens[0]), int(starts[0])
+    hi = lo + rows * width
     if (
-        not st["n"]
-        or (st["nv"] or 0) > 0
-        or (st["ne"] or 0) > 0
-        or st["lo"] != st["hi"]
-        or not st["lo"]
-        or st["n"] * st["lo"] > _DRIVER_FIT_ELEMS
+        width <= 0
+        or (lens != width).any()
+        or nulls[hi] != nulls[lo]
+        or rows * width > _DRIVER_FIT_ELEMS
     ):
-        return None
-    pdf = fsample.select("__fv__").toPandas()
-    return np.stack([np.asarray(v, dtype=np.float64) for v in pdf["__fv__"]])
+        return _seed_vecs(fsample, n_seed), None
+    matrix = values[lo:hi].reshape(rows, width)
+    order = pc.sort_indices(
+        table, sort_keys=[("__h__", "ascending")], null_placement="at_start"
+    ).to_numpy()
+    return [matrix[i] for i in order[:n_seed]], matrix
 
 
 def _lloyd_driver(V, books, n_iter, l2):
@@ -664,16 +686,15 @@ def kmeans_centroids(
     DataFrame. Init = the md5-hash-ordered corpus sample (the round-2
     ``deterministic_centroids`` seed), then ``n_iter`` Lloyd steps:
     assign → per-dim mean → round to ``_ROUND_DP`` decimals.
-    ``seed_vecs`` (optional) injects an already-fetched ordered seed
-    prefix — :func:`build_ivf_pq_index` fetches ONE (md5(id), id)-ordered
-    prefix and shares it between this fit and :func:`pq_codebooks`
-    instead of each fit running its own TakeOrdered job.
-    ``fit_matrix`` (optional) likewise shares one
-    :func:`collect_fit_matrix` collect; when the sample is clean and
-    driver-bounded the whole Lloyd loop runs in numpy on the driver
-    (:func:`_lloyd_driver` — a chain of ~2 tiny Spark jobs per iteration
-    becomes zero), with the distributed loop for ragged/oversized
-    samples.
+    Seeds and fit sample come from one :func:`collect_fit_matrix`
+    collect; when the sample is clean and driver-bounded the whole Lloyd
+    loop runs in numpy on the driver (:func:`_lloyd_driver` — a chain of
+    ~2 tiny Spark jobs per iteration becomes zero), with the distributed
+    loop for ragged/oversized samples. ``seed_vecs`` / ``fit_matrix``
+    (optional) inject a pair already fetched that way —
+    :func:`build_ivf_pq_index` shares one collect between this fit and
+    :func:`pq_codebooks`; with ``seed_vecs`` given, a None ``fit_matrix``
+    means the distributed loop.
 
     Every step is engine-portable and SQL-replayable: the rounding
     quantum (1e-9) dwarfs float-summation order noise (~1e-12 for 1e5-row
@@ -690,17 +711,16 @@ def kmeans_centroids(
     if n_cells is None:
         n_cells = auto_n_cells(n)
     if seed_vecs is None:
-        seed_vecs = _seed_vecs(fsample, n_cells)
+        if n_iter > 0:
+            seed_vecs, fit_matrix = collect_fit_matrix(fit, n_cells)
+        else:
+            seed_vecs = _seed_vecs(fsample, n_cells)
     cents = [(i, [float(x) for x in v]) for i, v in enumerate(seed_vecs[:n_cells])]
     spark = corpus.sparkSession
     schema = "cell int, cvec array<double>"
-    if n_iter > 0 and cents:
-        if fit_matrix is None:
-            dim_hint = max(len(v) for _c, v in cents)
-            fit_matrix = collect_fit_matrix(fsample, min(n, _SAMPLE_CAP), dim_hint)
-        if fit_matrix is not None:
-            (cents,) = _lloyd_driver(fit_matrix, [cents], n_iter, l2=False)
-            return local_frame(spark, cents, schema)
+    if n_iter > 0 and cents and fit_matrix is not None:
+        (cents,) = _lloyd_driver(fit_matrix, [cents], n_iter, l2=False)
+        return local_frame(spark, cents, schema)
     sample = fsample.select(
         F.col("__fid__").alias("__kid__"), F.col("__fv__").alias("__kv__")
     )
@@ -908,8 +928,8 @@ def pq_codebooks(
     (id, sub, subvector) frame so every subspace trains in the same
     jobs. Engine-portable for the same reason as ``kmeans_centroids``:
     the 1e-9 rounding quantum dwarfs summation-order noise.
-    ``seed_vecs`` / ``fit_matrix`` share one ordered seed prefix and one
-    collected sample matrix with the coarse fit — see
+    Seeds and fit sample come from one :func:`collect_fit_matrix`
+    collect, or are injected through ``seed_vecs`` / ``fit_matrix`` — see
     :func:`kmeans_centroids`; a clean driver-bounded sample runs the
     whole loop in :func:`_lloyd_driver` (zero Spark jobs), others the
     distributed loop below."""
@@ -920,7 +940,10 @@ def pq_codebooks(
         fit = fit_vector_sample(corpus, id_col, vec_col)
     n, fsample = fit
     if seed_vecs is None:
-        seed_vecs = _seed_vecs(fsample, k_sub)
+        if n_iter > 0:
+            seed_vecs, fit_matrix = collect_fit_matrix(fit, k_sub, dim)
+        else:
+            seed_vecs = _seed_vecs(fsample, k_sub)
     books = [
         [(i, [float(x) for x in v[j * dm:(j + 1) * dm]])
          for i, v in enumerate(seed_vecs[:k_sub])]
@@ -928,14 +951,11 @@ def pq_codebooks(
     ]
     spark = corpus.sparkSession
     schema = "sub int, cell int, cvec array<double>"
-    if n_iter > 0 and seed_vecs:
-        if fit_matrix is None:
-            fit_matrix = collect_fit_matrix(fsample, min(n, _SAMPLE_CAP), dim)
-        if fit_matrix is not None and fit_matrix.shape[1] == dim:
-            books = _lloyd_driver(fit_matrix, books, n_iter, l2=True)
-            rows = [(j, c, v) for j, book in enumerate(books) for c, v in book]
-            _check_dense(len(rows), m, k_sub)
-            return local_frame(spark, rows, schema)
+    if n_iter > 0 and seed_vecs and fit_matrix is not None and fit_matrix.shape[1] == dim:
+        books = _lloyd_driver(fit_matrix, books, n_iter, l2=True)
+        rows = [(j, c, v) for j, book in enumerate(books) for c, v in book]
+        _check_dense(len(rows), m, k_sub)
+        return local_frame(spark, rows, schema)
     cb = local_frame(
         spark, [(j, c, v) for j, book in enumerate(books) for c, v in book], schema
     )
@@ -1236,7 +1256,12 @@ def build_ivf_pq_index(
     :func:`pq_topk_ivf_adc`, split out so it runs ONCE per corpus and
     amortizes across every query batch (same build/query split as the
     as-of family's ``build_asof_hist``): coarse k-means fit, full-corpus
-    cell assignment, PQ codebook fit, and the m-code encode. Returns
+    cell assignment, PQ codebook fit, and the m-code encode. Both fits
+    share one counted, checkpointed sample (:func:`fit_vector_sample`)
+    and ONE Arrow collect of it (:func:`collect_fit_matrix`) that yields
+    every seed and, for a clean driver-bounded sample, the matrix both
+    driver-side Lloyd loops run on: one Spark job between the sample
+    and the lazy index frame. Returns
     {"centroids": (cell, cvec), "codebooks": (sub, cell, cvec),
     "index": (n_id, cell, codes)} — the index frame is ~m bytes + a
     cell id per corpus row (the vectors themselves are NOT in it).
@@ -1246,17 +1271,18 @@ def build_ivf_pq_index(
     the assignment (on a cluster, write it to a bucketed table on
     ``cell`` instead — then the candidate fetch is exchange-free)."""
     fit = fit_vector_sample(corpus, corpus_id, corpus_vec)
-    # ONE (md5(id), id)-ordered TakeOrdered serves both fits' seeds: the
-    # coarse fit uses the first n_cells vectors, the PQ fit the first
-    # k_sub — identical rows to the per-fit fetches by construction
-    # (same sample, same total order), one small job instead of two.
+    # ONE Arrow collect of the sample serves both fits: the coarse fit
+    # seeds from the first n_cells md5-ordered vectors, the PQ fit from
+    # the first k_sub (identical rows to per-fit fetches: same sample,
+    # same total order), and both driver-side Lloyd loops run on its
+    # matrix. A ragged or oversized sample gets the TakeOrdered seeds and
+    # no matrix, and the fits run their unchanged distributed loops.
     n_corpus, fsample = fit
     n_seed = max(n_cells or auto_n_cells(n_corpus), k_sub)
-    seed_vecs = _seed_vecs(fsample, n_seed)
-    # ONE sample collect serves both driver-side Lloyd fits (None for
-    # ragged/oversized samples — the fits then run their unchanged
-    # distributed loops)
-    fit_matrix = collect_fit_matrix(fsample, min(n_corpus, _SAMPLE_CAP), dim)
+    if coarse_iter > 0 or pq_iter > 0:
+        seed_vecs, fit_matrix = collect_fit_matrix(fit, n_seed, dim)
+    else:
+        seed_vecs, fit_matrix = _seed_vecs(fsample, n_seed), None
     # the coarse k-means and the PQ codebook fits are INDEPENDENT chains
     # of small sequential jobs over the shared checkpointed sample — run
     # them concurrently so the second fit's jobs back-fill the idle

@@ -15,6 +15,26 @@ a 100-entry cache evicts them all and every pass compiles them again
 and the fresh classes run JIT-cold in the tasks). The cache is static
 and JVM-wide: Spark sizes it once, at the JVM's first compile, so it
 must be set when the session is built.
+
+DataFrame call-site capture (``spark.python.sql.dataFrameDebugging.enabled``,
+:data:`DATAFRAME_DEBUGGING_CONF`) is off. PySpark 4 wraps every
+``functions.*`` call and every ``Column`` method in ``_with_origin``
+(``pyspark/errors/utils.py``); with the flag on (Spark's default) each
+call reads the active session, looks up ``PySparkCurrentOrigin``, reads
+a conf and sets and clears the origin through the JVM, walks the Python
+stack and tries ``import IPython`` / ``import ipykernel``. Building
+``(F.col("x") + i).alias("y")`` then costs 35-39 py4j round trips
+instead of 5-7, and the first ``Column`` call in a process with IPython
+installed imports it (~540 modules, ~0.3-0.4 s, ~19 MB of driver RSS),
+while a process without ``ipykernel`` retries that import, a
+``sys.path`` scan, on every later call. The engine
+builds thousands of expressions per lifecycle pass, so the flag alone
+roughly halves the driver's round trips. What it drops is the "DataFrame
+call site" section of Spark runtime error messages; the error itself is
+unchanged. To get it back while debugging, pass
+``extra_conf={DATAFRAME_DEBUGGING_CONF: "true"}`` before the process
+builds its first ``Column``: PySpark reads the flag once per process
+(``pyspark.errors.utils.is_debugging_enabled``) and caches it.
 """
 
 from __future__ import annotations
@@ -29,6 +49,7 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 # ~3x the ~320 classes of one lifecycle pass (the enrich flagship needs 53)
 CODEGEN_CACHE_ENTRIES = 1000
 CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
+DATAFRAME_DEBUGGING_CONF = "spark.python.sql.dataFrameDebugging.enabled"
 
 logger = logging.getLogger(__name__)
 
@@ -73,6 +94,7 @@ def get_spark(
         "spark.ui.enabled": "false",
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         CODEGEN_CACHE_CONF: str(CODEGEN_CACHE_ENTRIES),
+        DATAFRAME_DEBUGGING_CONF: "false",
         **(extra_conf or {}),
     }
     attached = SparkContext._active_spark_context
