@@ -517,62 +517,12 @@ def entry(spark: SparkSession) -> DataFrame:
     return feat
 
 
-# The driver evaluates the declared queries in REGISTRATION order (the
-# correctness window leads with the first 50), so registration order is
-# the coverage lever.
-#
-# Steady-state rotation invariant (r5 verdict item 1): with 137 queries
-# and a 50-slot window, a strict round-robin retires every query within
-# ceil(137/50) = 3 rounds — max staleness 3 — as long as each round's
-# window is (never-attested) + (stalest first) + (code-changed this
-# round), which is exactly the priority order below. New/changed queries
-# preempt one stale slot each; the preempted rows move to the front of
-# the next round's stale section.
-#
-# Round-6 window (50):
-#   1. the 3 never-driver-verified rows (r5 verdict item 1);
-#   2. the 24 deferred stale rows enumerated in the r5 window comment
-#      (7 late-r5 yields + 17 r03-stale);
-#   3. 23 queries whose CODE changed in the r6 optimization round
-#      (util.spread_scan, Arrow nearest-cell kernel, shared ANN fit,
-#      psi/pack/sampling job restructuring, rolling-quantile fusion,
-#      connected-components dispatch) — every one is hash-green under
-#      tools/check_oracle.py on the new code, re-attested here.
-# Remaining rows are all r5-green (attested at most one round ago).
-_R06_DRIVER_WINDOW = [
-    # 1. never driver-verified
-    "mask_tokens_mlm", "dedup_incremental", "temperature_mix_tokens",
-    # 2. the 24 deferred stale rows (late-r5 yields first)
-    "asof_join_forward", "asof_join_arrow", "asof_join_backward",
-    "hash_sample_exact_1000", "feature_validator_stats",
-    "dedup_components", "session_stats",
-    "unary_scalars", "freq_operators", "date_anniversary",
-    "date_list_bounded", "string_similarity", "row_lag_delta",
-    "cross_series_ratio", "class_balance", "quality_filter_decisions",
-    "pii_redaction_stats", "text_stats", "time_lag_1d", "trend_per_user",
-    "knn_cosine_top3", "mix_sources_sample", "psi_halves",
-    "sessionize_30m",
-    # 3. code changed in the r6 optimization round
-    "pack_sequences_512", "pack_by_source_256", "roll_quantiles_7d",
-    "roll_windows_7d", "knn_cosine_ivf", "knn_cosine_ivf_kmeans",
-    "cluster_assign", "knn_cosine_pq_adc", "knn_cosine_ivf_pq",
-    "psi_monthly", "psi_categorical", "psi_sparsity_halves",
-    "ts_id_priority_sample", "simhash_32", "minhash_signatures",
-    "embedding_near_dup", "repetition_share", "decontaminate_overlap",
-    "groupby_then_ops", "chunk_sliding_tokens", "text_bm25_topk",
-    "url_canonical_dedup", "system_record_ids",
-]
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out = {k: _QUERIES[k] for k in _R06_DRIVER_WINDOW if k in _QUERIES}
-    out.update({k: v for k, v in _QUERIES.items() if k not in out})
-    return out
+    return dict(_QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
-    ordered = queries()
-    return {k: _ORACLES[k] for k in ordered if k in _ORACLES}
+    return dict(_ORACLES)
 
 
 # ===========================================================================

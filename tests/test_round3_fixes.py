@@ -122,20 +122,6 @@ def test_ts_sampling_fallback_distributed(spark):
     )
 
 
-# -- VERDICT #8: hash_sample_exact regimes return identical rows -------------
-
-def test_hash_sample_exact_ceiling_regimes(spark):
-    from upgini_spark.functions.sampling import hash_sample_exact
-
-    df = spark.range(5000).select(
-        F.col("id"), (F.col("id") % 13).alias("k")
-    ).repartition(8)
-    a = hash_sample_exact(df, 700, ["id"]).toPandas()
-    b = hash_sample_exact(df, 700, ["id"], heap_ceiling=100).toPandas()
-    assert sorted(a["id"]) == sorted(b["id"])
-    assert len(a) == 700
-
-
 # -- VERDICT #4: ANN auto-sizing rules + bounded buckets ---------------------
 
 def test_auto_sizing_rules():

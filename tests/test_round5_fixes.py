@@ -263,38 +263,6 @@ def test_cobucketed_flagship_zero_exchange(spark):
         spark.sql("DROP TABLE IF EXISTS bkt_hist_r5")
 
 
-def test_enricher_hist_engines_match_native(spark):
-    """enricher asof_engine='hist'/'hist_broadcast': same enriched values
-    as the native engine, and the per-entity history collapse is built
-    ONCE per enricher (reused across transform calls)."""
-    from pyspark.sql import functions as F
-    from upgini_spark.fixtures import feature_source, tokenized_sequences
-    from upgini_spark.pipeline.enricher import SparkFeaturesEnricher
-
-    seq = tokenized_sequences(spark, 1200)
-    src = feature_source(spark, 1200, points_per_entity=3)
-
-    def run(engine):
-        enr = SparkFeaturesEnricher(src, asof_engine=engine)
-        enr.fit(seq, "doc_id", "event_time", validate_features=False)
-        out = enr.transform(seq, keep_cyclical=False)
-        got = {
-            (r["doc_id"], str(r["event_time"])): (str(r["matched_ts"]),
-                                                  str(r["f_ext_num_1"]))
-            for r in out.select("doc_id", "event_time", "matched_ts",
-                                "f_ext_num_1").collect()
-        }
-        return enr, got
-
-    _, native = run("native")
-    for engine in ("hist", "hist_broadcast"):
-        enr, got = run(engine)
-        assert got == native, engine
-        h1 = enr._hist
-        enr.transform(seq, keep_cyclical=False)  # second transform
-        assert enr._hist is h1  # collapse reused, not rebuilt
-
-
 def test_pipeline_crash_resume_e2e(spark, tmp_path):
     """North-rule resumability, end to end: the flagship pipeline staged
     through StageLedger crashes after stage 1, resumes in a fresh ledger

@@ -29,7 +29,7 @@ def test_enricher_bucketed_transform_zero_exchange(spark):
         enr = SparkFeaturesEnricher(src)
         enr.fit(seq, "doc_id", "event_time", validate_features=False)
         enr.materialize_source_bucketed("r5b_hist_bkt", 8)
-        assert enr.asof_engine == "hist"
+        assert enr._hist is not None
         bl = SparkFeaturesEnricher.bucketize_input(
             seq, "r5b_seq_bkt", "doc_id", "event_time", 8
         )
@@ -38,7 +38,7 @@ def test_enricher_bucketed_transform_zero_exchange(spark):
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan[:4000]
 
-        ref_enr = SparkFeaturesEnricher(src, asof_engine="native")
+        ref_enr = SparkFeaturesEnricher(src)
         ref_enr.fit(seq, "doc_id", "event_time", validate_features=False)
         ref = ref_enr.transform(seq)
 

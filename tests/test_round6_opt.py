@@ -1,12 +1,11 @@
 """Round-6 optimization regression tests: the rewritten internals must
 produce bit-identical results to their previous forms.
 
-- connected_components gained a size-dispatched driver-side union-find
-  (small edge sets) next to the distributed min-label loop: both paths
-  must emit the same (node, component) frame.
-- _nearest_cell/_nearest_subcell gained an Arrow kernel for heavy score
-  matrices: kernel and JVM-join paths must agree exactly (scores are
-  required bit-identical; ties to the smallest cell).
+- _nearest_subcell and the fused index kernel must agree exactly with
+  the JVM forms (scores bit-identical; ties to the smallest cell). The
+  size dispatches themselves (connected_components' union-find,
+  _nearest_cell's Arrow kernel, the driver-side Lloyd fits) are forced
+  to both sides in test_dispatch_sides.
 - pack_sequences dropped its countDistinct (Expand rewrite) for an
   in-struct doc id: n_docs must still count distinct docs per chunk.
 """
@@ -21,23 +20,6 @@ def spark():
 
     s = get_spark("t_r06", master="local[4]", shuffle_partitions=8)
     yield s
-
-
-def test_cc_driver_matches_distributed(spark):
-    from upgini_spark.functions.dedup import connected_components
-
-    # chain 1-2-3-4, clique {10,11,12}, pair (20, 21), self-contained dup
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21),
-         (2, 1)],
-        "id_a long, id_b long",
-    )
-    drv = connected_components(pairs).collect()
-    dist = connected_components(pairs, driver_edge_cap=0).collect()
-    assert sorted(map(tuple, drv)) == sorted(map(tuple, dist))
-    comp = {r["node"]: r["component"] for r in drv}
-    assert comp == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10,
-                    20: 20, 21: 20}
 
 
 def test_cc_driver_path_is_one_collect_job(spark):
@@ -59,67 +41,6 @@ def test_cc_driver_path_is_one_collect_job(spark):
     assert len(jobs) <= 2, jobs
     assert comp.filter("component != node AND component != node - 1").count() == 0
     assert comp.count() == 200_000
-
-def test_nearest_cell_kernel_matches_jvm(spark):
-    import upgini_spark.functions.similarity as SIM
-
-    df = spark.createDataFrame(
-        [(i, [float((i * 7 + d * 3) % 11) - 5.0 for d in range(8)])
-         for i in range(50)] + [(99, [0.0] * 8)],  # zero vector -> NULL score
-        "vid long, v array<double>",
-    )
-    cent = spark.createDataFrame(
-        [(c, [float((c * 5 + d) % 7) - 3.0 for d in range(8)])
-         for c in range(6)],
-        "cell int, cvec array<double>",
-    )
-    # rows and centroids of lengths 4 and 3 in ONE Arrow batch: a length
-    # mismatch is judged per (row, cell) pair, never against the batch's
-    # longest row; the 3-only batch has every row shorter than cell 0
-    mixed = spark.createDataFrame(
-        [(i, [float((i * 5 + d) % 7) - 3.0 for d in range(3 + i % 2)])
-         for i in range(30)] + [(97, None), (98, [])],
-        "vid long, v array<double>",
-    ).coalesce(1)
-    mixed_cent = spark.createDataFrame(
-        [(0, [1.0, 0.0, -1.0, 2.0]), (1, [0.0, 1.0, 1.0]),
-         (2, [-1.0, 2.0, 0.0, 1.0]), (3, [2.0, -1.0, 0.5])],
-        "cell int, cvec array<double>",
-    )
-    # a NULL element makes the row score NULL against every cell (Spark's
-    # _dot folds the NULL product in), so it takes the smallest cell even
-    # where NaN would win; a NaN element comes back as NaN, not NULL
-    null_elems = spark.createDataFrame(
-        [(1, [1.0, None, 0.0]), (2, [None, 1.0]), (3, [0.0, 1.0, 0.0]),
-         (4, [1.0, float("nan"), 0.0]), (5, [1.0, 0.0, 0.0])],
-        "vid long, v array<double>",
-    ).coalesce(1)
-    null_cent = spark.createDataFrame(
-        [(0, [0.0, 1.0]), (1, [0.0, 1.0, 0.0]), (2, [1.0, 0.0, 0.0])],
-        "cell int, cvec array<double>",
-    )
-    cases = [
-        (df, cent),
-        (mixed, mixed_cent),
-        (mixed.filter(F.size("v") == 3), mixed_cent),
-        (null_elems, null_cent),
-    ]
-    for frame, cells in cases:
-        rows = sorted(cells.collect(), key=lambda r: int(r["cell"]))
-        via_kernel = SIM._nearest_cell_kernel(frame, rows, "v").collect()
-        # force the JVM broadcast-join path regardless of threshold
-        old = SIM._KERNEL_MIN_WORK
-        SIM._KERNEL_MIN_WORK = 10**9
-        try:
-            via_jvm = SIM._nearest_cell(frame, cells, "v").collect()
-        finally:
-            SIM._KERNEL_MIN_WORK = old
-        assert len(via_kernel) == len(via_jvm)
-        key = lambda r: r["vid"]  # noqa: E731
-        for a, b in zip(sorted(via_kernel, key=key), sorted(via_jvm, key=key)):
-            assert a["vid"] == b["vid"]
-            assert a["cell"] == b["cell"]
-            assert repr(a["v"]) == repr(b["v"])  # tells NaN from NULL
 
 
 def test_pack_sequences_n_docs_gaps(spark):
@@ -220,7 +141,7 @@ def test_fused_index_matches_composed(spark):
     assert fused.exceptAll(composed).count() == 0
 
 
-def test_index_rows_kernel_null_elements_match_jvm(spark):
+def test_index_rows_kernel_null_elements_match_jvm(spark, monkeypatch):
     """_index_rows_kernel against the JVM forms — _nearest_cell's
     crossJoin scoring for the cell, _l2sq + min(struct(d, cell)) per
     _subvectors slice for the codes. A NULL element makes its whole
@@ -245,15 +166,11 @@ def test_index_rows_kernel_null_elements_match_jvm(spark):
          (1, 0, [1.0, 0.0]), (1, 1, [0.0, 1.0, 0.0])],
         "sub int, cell int, cvec array<double>",
     )
-    old = SIM._KERNEL_MIN_WORK
-    SIM._KERNEL_MIN_WORK = 10**9  # force the JVM crossJoin path
-    try:
-        ref_cell = {
-            r["n_id"]: r["cell"]
-            for r in SIM._nearest_cell(df, cent, "n_vec").collect()
-        }
-    finally:
-        SIM._KERNEL_MIN_WORK = old
+    monkeypatch.setattr(SIM, "_KERNEL_MIN_WORK", 10**9)  # the JVM crossJoin path
+    ref_cell = {
+        r["n_id"]: r["cell"]
+        for r in SIM._nearest_cell(df, cent, "n_vec").collect()
+    }
     ref_codes = (
         df.select(
             "n_id", F.posexplode(SIM._subvectors("n_vec", 2, 4)).alias("sub", "sv")
@@ -477,51 +394,6 @@ def test_encode_words_map_matches_exploded(spark):
     assert enc1["token_ids"][4] == 1  # second 'the'
 
 
-def test_driver_lloyd_fits_match_distributed(spark):
-    """kmeans_centroids / pq_codebooks driver-side numpy fits must equal
-    the distributed Lloyd loops exactly (same seeds, same assignment
-    ordering, same HALF_UP-rounded means), and ragged samples must fall
-    back to the distributed path."""
-    import upgini_spark.functions.similarity as SIM
-
-    corpus = spark.createDataFrame(
-        [(i, [float((i * 13 + d * 7) % 23) / 7.0 - 1.5 for d in range(8)])
-         for i in range(300)],
-        "vid long, v array<double>",
-    )
-    old = SIM._DRIVER_FIT_ELEMS
-    try:
-        SIM._DRIVER_FIT_ELEMS = 10**9
-        cent_drv = SIM.kmeans_centroids(
-            corpus, "vid", "v", n_cells=5, n_iter=2).collect()
-        cb_drv = SIM.pq_codebooks(
-            corpus, "vid", "v", 8, m=2, k_sub=3, n_iter=2).collect()
-        SIM._DRIVER_FIT_ELEMS = 0  # force the distributed loops
-        cent_dist = SIM.kmeans_centroids(
-            corpus, "vid", "v", n_cells=5, n_iter=2).collect()
-        cb_dist = SIM.pq_codebooks(
-            corpus, "vid", "v", 8, m=2, k_sub=3, n_iter=2).collect()
-    finally:
-        SIM._DRIVER_FIT_ELEMS = old
-    k = lambda r: (r[0] if len(r) < 3 else (r[0], r[1]))  # noqa: E731
-    for a, b in zip(sorted(cent_drv, key=k), sorted(cent_dist, key=k)):
-        assert a["cell"] == b["cell"]
-        assert list(a["cvec"]) == list(b["cvec"])  # exact float equality
-    for a, b in zip(sorted(cb_drv, key=k), sorted(cb_dist, key=k)):
-        assert (a["sub"], a["cell"]) == (b["sub"], b["cell"])
-        assert list(a["cvec"]) == list(b["cvec"])
-
-    # ragged sample (one NULL vector) -> collect_fit_matrix refuses
-    ragged = corpus.union(
-        spark.createDataFrame([(999, None)], "vid long, v array<double>"))
-    fit = SIM.fit_vector_sample(ragged, "vid", "v")
-    assert SIM.collect_fit_matrix(fit, 5, 8)[1] is None
-    # and the public entry still works (falls back internally)
-    cent_ragged = SIM.kmeans_centroids(
-        ragged, "vid", "v", n_cells=5, n_iter=1, fit=fit).collect()
-    assert len(cent_ragged) >= 1
-
-
 def test_round_half_up_matches_spark_round(spark):
     """_round_half_up must agree with F.round(double, 9) bit for bit on
     representative values (incl. shortest-repr decimal midpoints, where
@@ -553,30 +425,6 @@ def test_range_partitions_bounds(spark):
     # a checkpointed frame has an exact (small) size estimate -> floor
     ck = spark.range(1000).toDF("id").localCheckpoint(eager=True)
     assert _range_partitions(ck) == max(1, min(conf_n, dp))
-
-
-def test_asof_arrow_bucket_invariance(spark):
-    """The arrow engine's result must not depend on the bucket count
-    (the adaptive default changes it with input size)."""
-    from upgini_spark.joins.asof import asof_join
-
-    left = spark.createDataFrame(
-        [(i, i % 7, float(i)) for i in range(300)], "eid long, k long, t double"
-    ).select("eid", "k", F.timestamp_seconds(F.col("t") * 60).alias("ts"))
-    right = spark.createDataFrame(
-        [(i % 7, float(i) + 0.5, i * 10) for i in range(0, 300, 3)],
-        "rk long, rt double, v long",
-    ).select("rk", F.timestamp_seconds(F.col("rt") * 60).alias("rts"), "v")
-    outs = []
-    for nb in (None, 3, 64):
-        o = asof_join(
-            left, right, left_on="ts", right_on="rts", by_left="k",
-            by_right="rk", engine="arrow", n_buckets=nb, keep_match_ts=True,
-        )
-        outs.append(o)
-    for o in outs[1:]:
-        assert outs[0].exceptAll(o).count() == 0
-        assert o.exceptAll(outs[0]).count() == 0
 
 
 def test_mask_tokens_mlm_builds_vocab_map_once(spark, tmp_path):
@@ -730,3 +578,38 @@ def test_ivf_pq_fit_inputs_are_one_collect(spark, monkeypatch):
     assert sc.statusTracker().getJobIdsForGroup("ivfpq_sample")
     assert idx["index"].count() == 300
 
+
+
+def test_minhash_band_join_broadcasts_one_bigint_key(spark):
+    """minhash_band_pairs' band self-join broadcasts on ONE bigint key
+    (the xxhash64 of band number and band key; the exact band match is a
+    residual): a (int, string) key builds an UnsafeHashedRelation holding
+    a full 64 MB Tungsten page on the driver for a few KB of rows. The
+    pairs equal the docs sharing a full band of their minhash signature."""
+    import re
+    from itertools import combinations
+
+    from upgini_spark.functions import dedup as DD
+
+    words = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta"]
+    docs = spark.createDataFrame(
+        [(i, " ".join(words[(i * j) % 8] for j in range(1, 7 + i % 3)))
+         for i in range(40)],
+        "doc_id long, text string",
+    )
+    pairs = DD.minhash_band_pairs(docs, "doc_id", "text", k=8, bands=4)
+    got = sorted((r["id_a"], r["id_b"]) for r in pairs.collect())
+
+    sig = {r["doc_id"]: [r[f"mh{j}"] for j in range(8)]
+           for r in DD.minhash_signature(docs, "text", k=8).collect()}
+    want = sorted({
+        (a, b) for a, b in combinations(sorted(sig), 2)
+        if any(sig[a][2 * band:2 * band + 2] == sig[b][2 * band:2 * band + 2]
+               for band in range(4))
+    })
+    assert got == want and got
+
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    keys = re.findall(r"HashedRelationBroadcastMode\(List\(([^)]*)\)", plan)
+    assert keys and all(re.fullmatch(r"input\[\d+, bigint, false\]", k)
+                        for k in keys), keys

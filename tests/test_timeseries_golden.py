@@ -15,7 +15,7 @@ from upgini_spark.operators.timeseries import (
     roll_feature,
     sessionize,
     trend_coefficient,
-    ts_feature_parity,
+    ts_features_parity,
     volatility_ratio,
 )
 
@@ -53,10 +53,10 @@ def _check(got, expected):
 def test_lag_date(spark):
     df = _mkdf(spark, ["2024-05-06", "2024-05-07", "2024-05-08", "2024-05-09"], [1, 2, 3, 4])
     for n, exp in [(1, [NAN, 1.0, 2.0, 3.0]), (2, [NAN, NAN, 1.0, 2.0])]:
-        out = ts_feature_parity(
+        out = ts_features_parity(
             df, "ts", [], "value",
-            lambda s, n=n: lag_feature(s, "ts", [], "value", n, "D", out_col="lag"),
-            "lag", order_col="ord",
+            [("lag", lambda s, n=n: lag_feature(s, "ts", [], "value", n, "D", out_col="lag"))],
+            order_col="ord",
         )
         _check(_result(out, "lag"), exp)
 
@@ -72,10 +72,11 @@ def test_lag_date_groups(spark):
         (1, [NAN, NAN, NAN, 1.0, 1.0, NAN]),
         (2, [NAN, NAN, NAN, NAN, NAN, NAN]),
     ]:
-        out = ts_feature_parity(
+        out = ts_features_parity(
             df, "ts", ["f1", "f2"], "value",
-            lambda s, n=n: lag_feature(s, "ts", ["f1", "f2"], "value", n, "D", out_col="lag"),
-            "lag", order_col="ord",
+            [("lag", lambda s, n=n: lag_feature(
+                s, "ts", ["f1", "f2"], "value", n, "D", out_col="lag"))],
+            order_col="ord",
         )
         _check(_result(out, "lag"), exp)
 
@@ -93,10 +94,11 @@ def test_lag_hours(spark):
         (1, "h", [NAN, NAN, 2.0, NAN, 4.0]),
     ]
     for n, unit, exp in cases:
-        out = ts_feature_parity(
+        out = ts_features_parity(
             df, "ts", [], "value",
-            lambda s, n=n, u=unit: lag_feature(s, "ts", [], "value", n, u, out_col="lag"),
-            "lag", order_col="ord",
+            [("lag", lambda s, n=n, u=unit: lag_feature(
+                s, "ts", [], "value", n, u, out_col="lag"))],
+            order_col="ord",
         )
         _check(_result(out, "lag"), exp)
 
@@ -113,10 +115,10 @@ def test_lag_with_offset(spark):
         (2, 1, [NAN, NAN, NAN, 1.0, 1.0]),
     ]
     for n, off, exp in cases:
-        out = ts_feature_parity(
+        out = ts_features_parity(
             df, "ts", [], "value",
-            lambda s, n=n: lag_feature(s, "ts", [], "value", n, "D", out_col="lag"),
-            "lag", order_col="ord",
+            [("lag", lambda s, n=n: lag_feature(s, "ts", [], "value", n, "D", out_col="lag"))],
+            order_col="ord",
             offset=(off, "D") if off else None,
         )
         _check(_result(out, "lag"), exp)
@@ -146,10 +148,10 @@ def test_roll_date(spark, agg, expected):
         ["2024-05-06", "2024-05-09", "---", "2024-05-07", "2024-05-08", "2024-05-08", "2024-05-08"],
         [1, 2, 3, 4, 5, 5, 6],
     )
-    out = ts_feature_parity(
+    out = ts_features_parity(
         df, "ts", [], "value",
-        lambda s: roll_feature(s, "ts", [], "value", 2, "D", agg, out_col="roll"),
-        "roll", order_col="ord",
+        [("roll", lambda s: roll_feature(s, "ts", [], "value", 2, "D", agg, out_col="roll"))],
+        order_col="ord",
     )
     _check(_result(out, "roll"), expected)
 
@@ -167,10 +169,11 @@ def test_roll_date_groups(spark):
         (2, "norm_mean", [1.0, 1.0, NAN, 1.6, 1.6, 1.0]),
     ]
     for n, agg, exp in cases:
-        out = ts_feature_parity(
+        out = ts_features_parity(
             df, "ts", ["f1", "f2"], "value",
-            lambda s, n=n, a=agg: roll_feature(s, "ts", ["f1", "f2"], "value", n, "D", a, out_col="roll"),
-            "roll", order_col="ord",
+            [("roll", lambda s, n=n, a=agg: roll_feature(
+                s, "ts", ["f1", "f2"], "value", n, "D", a, out_col="roll"))],
+            order_col="ord",
         )
         _check(_result(out, "roll"), exp)
 
@@ -187,10 +190,11 @@ def test_roll_with_offset(spark):
         (3, 1, "median", [NAN, 1.0, 1.5, 2.0, 2.0]),
     ]
     for n, off, agg, exp in cases:
-        out = ts_feature_parity(
+        out = ts_features_parity(
             df, "ts", [], "value",
-            lambda s, n=n, a=agg: roll_feature(s, "ts", [], "value", n, "D", a, out_col="roll"),
-            "roll", order_col="ord",
+            [("roll", lambda s, n=n, a=agg: roll_feature(
+                s, "ts", [], "value", n, "D", a, out_col="roll"))],
+            order_col="ord",
             offset=(off, "D") if off else None,
         )
         _check(_result(out, "roll"), exp)
@@ -209,10 +213,11 @@ def test_roll_with_offset_and_groups(spark):
         (3, 1, "median", [NAN, 1.0, 1.5, 2.0, 2.0, NAN, 10.0, 15.0, 20.0, 20.0]),
     ]
     for n, off, agg, exp in cases:
-        out = ts_feature_parity(
+        out = ts_features_parity(
             df, "ts", ["grp"], "value",
-            lambda s, n=n, a=agg: roll_feature(s, "ts", ["grp"], "value", n, "D", a, out_col="roll"),
-            "roll", order_col="ord",
+            [("roll", lambda s, n=n, a=agg: roll_feature(
+                s, "ts", ["grp"], "value", n, "D", a, out_col="roll"))],
+            order_col="ord",
             offset=(off, "D") if off else None,
         )
         _check(_result(out, "roll"), exp)
@@ -231,10 +236,11 @@ def test_roll_hours(spark):
         (2, "h", "norm_mean", [1.0, 1.0, 1.2, 1.0, 1.111111]),
     ]
     for n, unit, agg, exp in cases:
-        out = ts_feature_parity(
+        out = ts_features_parity(
             df, "ts", [], "value",
-            lambda s, n=n, u=unit, a=agg: roll_feature(s, "ts", [], "value", n, u, a, out_col="roll"),
-            "roll", order_col="ord",
+            [("roll", lambda s, n=n, u=unit, a=agg: roll_feature(
+                s, "ts", [], "value", n, u, a, out_col="roll"))],
+            order_col="ord",
         )
         _check(_result(out, "roll"), exp)
 
@@ -280,10 +286,10 @@ def test_delta_golden(spark):
     df = _mkdf(spark, ["2024-05-05", "2024-05-06", "2024-05-07", "2024-05-09"], [1, 2, 3, 5])
     cases = [(1, [NAN, 1.0, 1.0, NAN]), (2, [NAN, NAN, 2.0, 2.0])]
     for n, exp in cases:
-        out = ts_feature_parity(
+        out = ts_features_parity(
             df, "ts", [], "value",
-            lambda s, n=n: delta_feature(s, "ts", [], "value", n, "D", out_col="d"),
-            "d", order_col="ord",
+            [("d", lambda s, n=n: delta_feature(s, "ts", [], "value", n, "D", out_col="d"))],
+            order_col="ord",
         )
         _check(_result(out, "d"), exp)
 
@@ -300,10 +306,11 @@ def test_delta_groups_golden(spark):
         (2, [NAN, NAN, NAN, NAN, NAN, NAN]),
     ]
     for n, exp in cases:
-        out = ts_feature_parity(
+        out = ts_features_parity(
             df, "ts", ["f1", "f2"], "value",
-            lambda s, n=n: delta_feature(s, "ts", ["f1", "f2"], "value", n, "D", out_col="d"),
-            "d", order_col="ord",
+            [("d", lambda s, n=n: delta_feature(
+                s, "ts", ["f1", "f2"], "value", n, "D", out_col="d"))],
+            order_col="ord",
         )
         _check(_result(out, "d"), exp)
 
@@ -319,10 +326,11 @@ def test_delta2_golden(spark):
         (2, [NAN, NAN, NAN, NAN, 4.0]),
     ]
     for n, exp in cases:
-        out = ts_feature_parity(
+        out = ts_features_parity(
             df, "ts", [], "value",
-            lambda s, n=n: delta_feature(s, "ts", [], "value", n, "D", order=2, out_col="d"),
-            "d", order_col="ord",
+            [("d", lambda s, n=n: delta_feature(
+                s, "ts", [], "value", n, "D", order=2, out_col="d"))],
+            order_col="ord",
         )
         _check(_result(out, "d"), exp)
 
@@ -342,10 +350,10 @@ VOL_VALUES = [100, 110, 99, 121, 115]
 ])
 def test_rolling_volatility_golden(spark, n, expected):
     df = _mkdf(spark, VOL_DATES, VOL_VALUES)
-    out = ts_feature_parity(
+    out = ts_features_parity(
         df, "ts", [], "value",
-        lambda s: rolling_volatility(s, "ts", [], "value", n, "D", out_col="v"),
-        "v", order_col="ord",
+        [("v", lambda s: rolling_volatility(s, "ts", [], "value", n, "D", out_col="v"))],
+        order_col="ord",
     )
     _check(_result(out, "v"), expected)
 
@@ -357,10 +365,10 @@ def test_rolling_volatility_golden(spark, n, expected):
 ])
 def test_ewma_volatility_golden(spark, span, expected):
     df = _mkdf(spark, VOL_DATES, VOL_VALUES)
-    out = ts_feature_parity(
+    out = ts_features_parity(
         df, "ts", [], "value",
-        lambda s: ewma_volatility(s, "ts", [], "value", span, out_col="v"),
-        "v", order_col="ord",
+        [("v", lambda s: ewma_volatility(s, "ts", [], "value", span, out_col="v"))],
+        order_col="ord",
     )
     _check(_result(out, "v"), expected)
 
@@ -410,12 +418,12 @@ def test_volatility_ratio_golden(spark):
 
     df = _mkdf(spark, dates, vals)
     for short, long in [(2, 4), (3, 6)]:
-        out = ts_feature_parity(
+        out = ts_features_parity(
             df, "ts", [], "value",
-            lambda s, a=short, b=long: volatility_ratio(
+            [("vr", lambda s, a=short, b=long: volatility_ratio(
                 s, "ts", [], "value", a, b, "D", out_col="vr"
-            ),
-            "vr", order_col="ord",
+            ))],
+            order_col="ord",
         )
         _check(_result(out, "vr"), pandas_expected(short, long))
 
@@ -470,9 +478,9 @@ def test_rolling_volatility2_golden(spark):
     expected = pandas_vol(stage1, 3, False).tolist()
 
     df = _mkdf(spark, dates, vals)
-    out = ts_feature_parity(
+    out = ts_features_parity(
         df, "ts", [], "value",
-        lambda sl: rolling_volatility2(sl, "ts", [], "value", 3, "D", out_col="v2"),
-        "v2", order_col="ord",
+        [("v2", lambda sl: rolling_volatility2(sl, "ts", [], "value", 3, "D", out_col="v2"))],
+        order_col="ord",
     )
     _check(_result(out, "v2"), expected)

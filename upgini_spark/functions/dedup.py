@@ -103,13 +103,6 @@ def shingle_array(words: F.Column, n: int, fallback: F.Column) -> F.Column:
     return F.when(k >= 1, zipped).otherwise(F.array(fallback))
 
 
-def word_shingles(text_col: str, n: int = 3) -> F.Column:
-    """n-word shingles of a whitespace-tokenized text column (native
-    higher-order functions, no Python)."""
-    c = F.col(text_col)
-    return shingle_array(F.split(c, " "), n, c)
-
-
 def _minhash_perm_constants(k: int) -> list[int]:
     """Deterministic 60-bit XOR masks, one per permutation — md5-derived so
     any engine can regenerate them."""
@@ -209,21 +202,35 @@ def minhash_band_pairs(
                 for b in range(bands)
             ])
         ).alias("bk"),
-    ).select(id_col, "bk.band_no", "bk.band_key")
+    ).select(
+        id_col, "bk.band_no", "bk.band_key",
+        F.xxhash64("bk.band_no", "bk.band_key").alias("band_h"),
+    )
     # materialize the melted band keys ONCE (eager localCheckpoint): the
     # band SELF-join consumes the frame as both sides and exchange reuse
     # does not fire for the aliased twin, so the shingle+minhash
     # signature chain otherwise computes twice (the
-    # embedding_near_dup_lsh lesson; the frame is 16-byte keys ×
-    # bands per doc — tiny at any scale)
+    # embedding_near_dup_lsh lesson; the frame is a few dozen bytes of
+    # keys × bands per doc — tiny at any scale)
     melted = melted.localCheckpoint(eager=True)
     a = melted.alias("a")
     b = melted.alias("b")
+
+    def same(c):
+        # exact band match as a RESIDUAL: Spark lifts every plain
+        # ``a.x = b.x`` conjunct into the hash key, and a (int, string)
+        # key builds an UnsafeHashedRelation holding a full Tungsten
+        # page (64 MB) for a few KB of rows; greatest = least is the same
+        # test but references both sides, so the key stays the one
+        # bigint ``band_h`` (a LongHashedRelation)
+        x, y = F.col(f"a.{c}"), F.col(f"b.{c}")
+        return F.greatest(x, y) == F.least(x, y)
+
     pairs = (
         a.join(
             b,
-            (F.col("a.band_no") == F.col("b.band_no"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
+            (F.col("a.band_h") == F.col("b.band_h"))
+            & same("band_no") & same("band_key")
             & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
         )
         .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
@@ -419,12 +426,16 @@ def remove_fintech_duplicates(
 # --------------------------------------------------------------------------
 
 
+# connected_components driver bound: up to this many distinct edges the
+# labels come from a driver-side union-find (see the docstring)
+DRIVER_EDGE_CAP = 1_000_000
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 20,
-    driver_edge_cap: int = 1_000_000,
 ) -> DataFrame:
     """Connected components of the duplicate-pair graph → (node, component)
     where ``component`` is the MINIMUM node id in the component (canonical,
@@ -450,7 +461,7 @@ def connected_components(
     missing ids as singleton components.
 
     Size dispatch (same spirit as Spark's broadcast-join threshold): up
-    to ``driver_edge_cap`` DISTINCT edges, the component labels are
+    to ``DRIVER_EDGE_CAP`` DISTINCT edges, the component labels are
     computed with a driver-side union-find instead — a near-dup pair
     graph from banded LSH is tiny relative to its corpus (edges ∝
     duplicates, not rows), and the distributed loop costs ~2 jobs per
@@ -464,8 +475,8 @@ def connected_components(
     # One task reads at most cap + 1 rows, so it is ONE job at any
     # partition count (a plain limit collect scans partitions in growing
     # waves, one job per wave).
-    rows = dedges.coalesce(1).limit(driver_edge_cap + 1).collect()
-    if len(rows) <= driver_edge_cap:
+    rows = dedges.coalesce(1).limit(DRIVER_EDGE_CAP + 1).collect()
+    if len(rows) <= DRIVER_EDGE_CAP:
         parent: dict = {}
 
         def find(x):

@@ -159,10 +159,6 @@ def phone_with_country_prefix(phone: Column, country: Column) -> Column:
 _V4 = r"^((25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\.){3}(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])$"
 
 
-def ipv4_valid(c: Column) -> Column:
-    return F.trim(c).rlike(_V4)
-
-
 def ipv4_to_int(c: Column) -> Column:
     """Dotted-quad → uint32 as long (ip_utils.py:59-86 v4 path)."""
     s = F.trim(c)

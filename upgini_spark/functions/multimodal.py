@@ -78,9 +78,7 @@ def _fake_decode_features(content: bytes, dim: int = FEATURE_DIM) -> list[float]
     ]
 
 
-def extract_media_features(
-    df: DataFrame, strict: bool = False, batch_size_hint: int = 256
-) -> DataFrame:
+def extract_media_features(df: DataFrame, strict: bool = False) -> DataFrame:
     """Decode/feature-extract media rows via ``mapInPandas``.
 
     Arrow moves the binary column in batches (cap

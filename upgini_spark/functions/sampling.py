@@ -31,9 +31,7 @@ HASH_SAMPLE_HEAP_CEILING = 5_000
 
 
 def hash_sample_exact(
-    df: DataFrame, n: int, id_cols: list[str],
-    heap_ceiling: int = HASH_SAMPLE_HEAP_CEILING,
-    total: int | None = None,
+    df: DataFrame, n: int, id_cols: list[str], total: int | None = None,
 ) -> DataFrame:
     """Deterministic exact-n sample: keep the n rows with the smallest
     md5 of the id tuple.
@@ -43,17 +41,17 @@ def hash_sample_exact(
     through one partition. Same rows on any cluster size.
 
     Ceiling: each task holds an n-row heap and the driver merges the
-    per-partition top-n sets, so above ``heap_ceiling`` rows an
-    approx-quantile threshold on the hash pre-filters to ~1.25n candidate
-    rows first (superset by construction — verified, with a full-table
-    fallback if the sketch undershoots), keeping the heap small at any n.
+    per-partition top-n sets, so above ``HASH_SAMPLE_HEAP_CEILING`` rows
+    a closed-form cut on the hash prefix pre-filters to ~1.25n candidate
+    rows first (with a full-table fallback if the cut undershoots n),
+    keeping the heap small at any n.
     Both regimes return identical rows: the final exact order/limit runs
     either way.
     """
     h = F.md5(F.concat_ws("\x1f", *[F.col(c).cast("string") for c in id_cols]))
     order = [h.asc()] + [F.col(c).asc() for c in id_cols]
     work = df
-    if n > heap_ceiling:
+    if n > HASH_SAMPLE_HEAP_CEILING:
         # ``total`` lets callers that already counted skip a full scan
         if total is None:
             total = df.count()
@@ -75,17 +73,6 @@ def hash_sample_exact(
             cand = df
         work = cand
     return work.orderBy(*order).limit(n)
-
-
-def threshold_downsample(
-    df: DataFrame, id_cols: list[str], threshold: int = FIT_SAMPLE_THRESHOLD
-) -> DataFrame:
-    """>threshold rows → exact-threshold deterministic sample
-    (sample_utils.py:62-152)."""
-    n = df.count()
-    if n <= threshold:
-        return df
-    return hash_sample_exact(df, threshold, id_cols, total=n)
 
 
 BINARY_MIN_SAMPLE_THRESHOLD = 5_000       # reference utils/config.py:13
@@ -215,6 +202,12 @@ TS_HIGH_FREQ_TRUNC = [(30, 0), (24, 7)]     # (months, days): 2y6m, 2y+7d
 TS_LOW_FREQ_TRUNC = [(84, 0), (60, 0)]      # 7y, 5y
 TS_TIME_UNIT_THRESHOLD_S = 4 * 7 * 86400    # Timedelta(weeks=4)
 
+# sample_time_series driver bound: a budget (or fallback id count) up to
+# this many rows is ranked by a per-partition top-k collect and a Python
+# cumsum; above it the distributed global_running_sum runs. Identical
+# keep decisions on either side.
+DRIVER_CUMSUM_ROWS = 100_000
+
 
 def modal_time_unit_seconds(
     df: DataFrame, id_cols: list[str], date_col: str
@@ -310,7 +303,7 @@ def sample_time_series(
         else [F.col("__cnt__").desc(), _id_hash(ids).desc()]
     )
     spark = df.sparkSession
-    if sample_size <= 100_000:
+    if sample_size <= DRIVER_CUMSUM_ROWS:
         # every kept id holds ≥1 row, so the kept set lives in the first
         # ``sample_size`` rows of the priority order — a per-partition
         # top-k (TakeOrderedAndProject) + driver cumsum over ≤sample_size
@@ -320,7 +313,7 @@ def sample_time_series(
         # path for budgets past the driver bound.
         # Materialize the per-id aggregate once: the top-k job and the
         # id-count job below would otherwise each re-run the full
-        # scan + groupBy (the >100k path already reads its cumsum's
+        # scan + groupBy (the distributed path already reads its cumsum's
         # checkpoint for both); at any scale one write of the id table
         # beats two extra full-table passes.
         stats = stats.localCheckpoint(eager=True)
@@ -363,21 +356,20 @@ def sample_time_series(
             .limit(ids_limit)
             .select(*ids)
         )
-        if ids_limit <= 100_000:
+        if ids_limit <= DRIVER_CUMSUM_ROWS:
             # the kept-id frame feeds TWO broadcast semi-joins (the
             # per-date counts and the final filter) — left lazy, each
             # broadcast re-runs the full scan + distinct-date agg +
-            # top-k chain. Collect the ≤100k id rows once and rebuild
-            # the frame from driver rows (same driver-bound dispatch as
-            # the quota path above); larger id budgets keep the lazy
-            # plan.
+            # top-k chain. Collect the id rows once and rebuild the
+            # frame from driver rows (same driver bound as the quota
+            # path above); larger id budgets keep the lazy plan.
             ids_to_sample = local_frame(
                 spark,
                 ids_to_sample.collect(), date_counts.select(*ids).schema
             )
         sub = df.join(F.broadcast(ids_to_sample), on=ids, how="leftsemi")
         per_date = sub.groupBy(d.alias("__d__")).count()
-        if sample_size <= 100_000:
+        if sample_size <= DRIVER_CUMSUM_ROWS:
             # every kept date holds ≥1 row → the kept set lives in the
             # most-recent ``sample_size`` dates: per-partition top-k +
             # driver cumsum, same dispatch as the id path above

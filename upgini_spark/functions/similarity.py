@@ -159,7 +159,6 @@ def cosine_topk_lsh(
     n_planes: int | None = 8,
     dims: int = 64,
     n_bands: int = 1,
-    target_bucket_rows: int = 64,
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's LSH
     bucket(s), then exact cosine rank within the candidate set. The
@@ -168,10 +167,10 @@ def cosine_topk_lsh(
     OR) for recall; duplicates collapse before ranking.
 
     ``n_planes=None`` auto-sizes from the corpus count via
-    :func:`auto_n_planes`, keeping the expected bucket at
-    ``target_bucket_rows`` as N grows."""
+    :func:`auto_n_planes`, keeping the expected bucket at its default
+    64 rows as N grows."""
     if n_planes is None:
-        n_planes = auto_n_planes(corpus.count(), target_bucket_rows)
+        n_planes = auto_n_planes(corpus.count())
     q = _banded(queries, "q_id", "q_vec", query_id, query_vec, n_planes,
                 n_bands, dims, norm_alias="__qn__")
     c = _banded(corpus, "n_id", "n_vec", corpus_id, corpus_vec, n_planes,
@@ -199,7 +198,6 @@ def embedding_near_dup_lsh(
     n_planes: int | None = 8,
     n_bands: int = 4,
     dims: int = 64,
-    target_bucket_rows: int = 64,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs through banded hyperplane LSH —
     the scale path for dedup.embedding_near_dup_pairs (whose all-pairs
@@ -211,12 +209,12 @@ def embedding_near_dup_lsh(
     1 − acos(cos)/π, so at 0.95+ thresholds a handful of bands gives
     ~certain recall (miss = (1−p^b)^L). Giant identical buckets are
     still quadratic in bucket size — ``n_planes=None`` auto-sizes via
-    :func:`auto_n_planes` so the EXPECTED bucket stays at
-    ``target_bucket_rows`` as N grows (identical-vector clusters remain
-    quadratic by nature; cap them upstream with exact dedup first).
+    :func:`auto_n_planes` so the EXPECTED bucket stays at its default 64
+    rows as N grows (identical-vector clusters remain quadratic by
+    nature; cap them upstream with exact dedup first).
     """
     if n_planes is None:
-        n_planes = auto_n_planes(df.count(), target_bucket_rows)
+        n_planes = auto_n_planes(df.count())
     # materialize the banded frame ONCE (eager localCheckpoint): the
     # bucket SELF-join consumes it as both sides and neither static
     # ReuseExchange nor AQE stage reuse fires for the aliased twin, so

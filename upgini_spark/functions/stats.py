@@ -242,28 +242,6 @@ PSI_CAT_TOP_PCT = 0.7
 _PSI_EPS = 0.0001
 
 
-def date_interval_index(
-    df: DataFrame, date_col: str, n_intervals: int, out_col: str = "__itv__"
-) -> DataFrame:
-    """qcut-style interval assignment on the date column
-    (psi.py:153-170): edges are date quantiles (linear interpolation,
-    duplicates dropped), bins right-inclusive, index 0 = the
-    chronologically first interval (the reference uses the first interval
-    in ROW order — under a distributed engine the chronological first is
-    the deterministic equivalent)."""
-    d = df.filter(F.col(date_col).isNotNull())
-    us = F.unix_micros(F.col(date_col).cast("timestamp")).cast("double")
-    qs = [i / n_intervals for i in range(1, n_intervals)]
-    edges_row = d.agg(
-        F.percentile(us, F.array(*[F.lit(q) for q in qs])).alias("e")
-    ).collect()[0]["e"]
-    interior = sorted(set(float(e) for e in (edges_row or [])))
-    expr = F.lit(0)
-    for e in interior:
-        expr = expr + F.when(us > F.lit(e), 1).otherwise(0)
-    return d.withColumn(out_col, expr.cast("int"))
-
-
 def _fill_zeroes(percents: list[float]) -> list[float]:
     """psi.py:283-293: all-zero → eps; else zeros → min(nonzero)/1e6
     (or eps when that min is itself <= eps)."""
@@ -598,6 +576,14 @@ def psi_monthly_report(
     return out
 
 
+# is_time_series driver bound: the relativedelta pass is calendar-bounded
+# in practice (~365×years distinct dates); a pathological sub-second
+# series would otherwise collect unbounded rows — and a series with more
+# distinct "dates" than this is not the constant-calendar-step shape the
+# gate looks for anyway. A driver-memory safety bound, not a tuning knob.
+_TS_MAX_DATES = 100_000
+
+
 def is_time_series(df: DataFrame, date_col: str) -> bool:
     """is_time_series decision parity (datetime_utils.py:303-332): no null
     dates; per-date row count constant; consecutive UNIQUE dates separated
@@ -614,16 +600,12 @@ def is_time_series(df: DataFrame, date_col: str) -> bool:
     vc = df.groupBy(d.alias("__d__")).count()
     if vc.select(F.countDistinct("count")).collect()[0][0] != 1:
         return False
-    # explicit driver bound (r5 verdict hygiene): the relativedelta pass
-    # is calendar-bounded in practice (~365×years distinct dates); a
-    # pathological sub-second series would otherwise collect unbounded
-    # rows — and a series with >100k distinct "dates" is not the
-    # constant-calendar-step shape this gate looks for anyway
     dates = [
         r["__d__"]
-        for r in vc.select("__d__").orderBy("__d__").limit(100_001).collect()
+        for r in vc.select("__d__").orderBy("__d__")
+        .limit(_TS_MAX_DATES + 1).collect()
     ]
-    if len(dates) > 100_000:
+    if len(dates) > _TS_MAX_DATES:
         return False
     if len(dates) < 2:
         return False

@@ -53,18 +53,6 @@ def mean_word_length(c: Column) -> Column:
     return F.try_divide(total.cast("double"), F.size(toks))
 
 
-def quality_score(c: Column) -> Column:
-    """Composite heuristic in [0,1]: length band + word-length sanity +
-    punctuation sanity (Gopher-rule-flavored; deterministic)."""
-    n_tok = token_count_ws(c).cast("double")
-    len_ok = F.when((n_tok >= 5) & (n_tok <= 100000), 1.0).otherwise(0.0)
-    mwl = mean_word_length(c)
-    mwl_ok = F.when((mwl >= 2.0) & (mwl <= 12.0), 1.0).otherwise(0.0)
-    pr = F.coalesce(punct_ratio(c), F.lit(0.0))
-    punct_ok = F.when(pr <= 0.2, 1.0).otherwise(0.0)
-    return (len_ok + mwl_ok + punct_ok) / 3.0
-
-
 def lang_id_en_score(c: Column) -> Column:
     """English-likelihood = stopword hit ratio (n-gram/stopword heuristic)."""
     return F.coalesce(stopword_ratio(c), F.lit(0.0))

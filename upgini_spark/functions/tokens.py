@@ -37,7 +37,6 @@ def pack_sequences(
     tokens_col: str,
     max_len: int,
     group_cols: list[str] | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Concat-and-chunk sequence packing (the standard pretraining
     layout): documents are laid end-to-end along the deterministic total
@@ -103,7 +102,6 @@ def pack_sequences(
         offs = global_running_sum(
             d.select("__pid__", "__pnt__"),
             [F.col("__pid__").asc()], "__pnt__", "__pend__",
-            num_partitions=num_partitions,
         ).select("__pid__", "__pend__")
         d = d.join(offs, "__pid__")
     # Chunk assembly shuffles ONE ROW PER (doc, chunk) INTERSECTION, not

@@ -7,25 +7,34 @@ is enforced server-side by mandatory DATE/DATETIME search keys
 join itself: every matched right row satisfies ``right_ts <= left_ts``
 (backward direction) — zero temporal leakage by construction.
 
-Three engines:
+:func:`asof_join` runs one of three engines:
 
-- ``native``: union + window trick. Left and right rows are unioned on the
-  entity key, totally ordered by (ts, side-marker), and each right value
-  column is propagated with ``last(..., ignorenulls=True)`` over an
-  unbounded-preceding running frame. One shuffle, no Python, whole-stage
-  codegen throughout — the default at scale.
+- ``native`` (default): union + window trick. Left and right rows are
+  unioned on the entity key, totally ordered by (ts, side-marker), and
+  each left row takes the last right match struct with
+  ``last(..., ignorenulls=True)`` over an unbounded-preceding running
+  frame. One shuffle, no Python, whole-stage codegen throughout.
 - ``arrow``: cogrouped ``applyInPandas`` running ``pandas.merge_asof`` per
-  entity-hash bucket, with optional salting for hot entities (right side
-  replicated across salts). This is the kernel mandated by the north rule;
-  it also gives exact pandas parity semantics for tolerance handling.
+  entity-hash bucket (bucket count sized from the left input, like the
+  record-id range exchange), with optional salting for hot entities
+  (right side replicated across salts). Exact pandas parity semantics
+  for tolerance handling.
 - ``broadcast``: the right side collapses to per-entity sorted history
   arrays and broadcasts; the left never shuffles (zero exchanges on the
   event stream) — the plan of choice when the feature source is
   dimension-sized relative to a 100TB event table.
 
-Both engines produce identical results (tested against each other and a
-pandas ``merge_asof`` oracle). Token payload columns ride through
-untouched; in the arrow engine they cross Arrow as fixed int32 lists.
+The history collapse is also a public pair: :func:`build_asof_hist`
+builds the per-entity history frame once and :func:`asof_join_hist`
+joins against it, broadcast or sort-merge. Written as a table bucketed
+on the entity key and joined to an input bucketed the same way, the
+sort-merge form plans with zero Exchange (the enricher's
+``materialize_source_bucketed`` deployment).
+
+All engines and the history pair produce identical results (tested
+against each other and a pandas ``merge_asof`` oracle). Token payload
+columns ride through untouched; in the arrow engine they cross Arrow as
+fixed int32 lists.
 """
 
 from __future__ import annotations
@@ -57,7 +66,6 @@ def asof_join(
     direction: str = "backward",
     tolerance_seconds: float | None = None,
     engine: str = "native",
-    n_buckets: int | None = None,
     salt: int | str = 1,
     keep_match_ts: bool = False,
 ) -> DataFrame:
@@ -91,8 +99,7 @@ def asof_join(
     if engine == "arrow":
         return _asof_arrow(
             left, right, left_on, right_on, by_left, by_right,
-            direction, tolerance_seconds, keep_match_ts,
-            n_buckets=n_buckets, salt=salt,
+            direction, tolerance_seconds, keep_match_ts, salt,
         )
     if engine == "broadcast":
         return _asof_broadcast(
@@ -205,7 +212,6 @@ def _asof_arrow(
     direction: str,
     tolerance_seconds: float | None,
     keep_match_ts: bool,
-    n_buckets: int | None,
     salt: int,
 ) -> DataFrame:
     """Cogrouped-pandas engine: bucket by entity hash (+salt), merge_asof.
@@ -216,17 +222,16 @@ def _asof_arrow(
     entities. Use salt>1 when the entity histogram is hot-skewed
     (SURVEY.md §4 custom-strategy 2).
     """
-    vcols = _value_cols(right, right_on, by_right)
-    if n_buckets is None:
-        # size-adaptive (the record_ids range-exchange heuristic): a flat
-        # shuffle_partitions default fans small inputs into hundreds of
-        # sub-1k-row cogroups whose per-group pandas overhead dominates
-        # (measured 1.75 → 1.16 s at 1M rows with 128 → 32 buckets);
-        # floor = default parallelism, ceiling = the configured shuffle
-        # width (~64 MB pandas frames per cogroup at the ceiling)
-        from upgini_spark.pipeline.record_ids import _range_partitions
+    # size-adaptive bucket count (the record_ids range-exchange
+    # heuristic): a flat shuffle_partitions default fans small inputs
+    # into hundreds of sub-1k-row cogroups whose per-group pandas
+    # overhead dominates (measured 1.75 → 1.16 s at 1M rows with 128 →
+    # 32 buckets); floor = default parallelism, ceiling = the configured
+    # shuffle width (~64 MB pandas frames per cogroup at the ceiling)
+    from upgini_spark.pipeline.record_ids import _range_partitions
 
-        n_buckets = _range_partitions(left)
+    vcols = _value_cols(right, right_on, by_right)
+    n_buckets = _range_partitions(left)
 
     # NB: both cogroup sides MUST carry identical key dtypes — Spark hashes
     # 0 (int) and 0L (bigint) to different partitions, silently misaligning

@@ -17,23 +17,6 @@ SYSTEM_RECORD_ID = "system_record_id"
 EVAL_SET_INDEX = "eval_set_index"
 
 
-def add_entity_record_id(
-    df: DataFrame,
-    key_cols: list[str],
-    feature_cols: list[str] | None = None,
-    out_col: str = ENTITY_SYSTEM_RECORD_ID,
-) -> DataFrame:
-    """Deterministic entity id = hash of (sorted keys + features).
-
-    The reference hashes with pandas' hash_pandas_object
-    (src/upgini/features_enricher.py:2906-2910); we use ``xxhash64`` — a
-    different hash family by design (SURVEY.md §1.3): parity is defined on
-    feature *values*, the id only needs determinism + uniformity.
-    """
-    cols = sorted(key_cols) + sorted(feature_cols or [])
-    return df.withColumn(out_col, F.xxhash64(*[F.col(c) for c in cols]))
-
-
 def enrich(
     left: DataFrame,
     features: DataFrame,
@@ -57,7 +40,6 @@ def range_join(
     lo_col: str,
     hi_col: str,
     how: str = "left",
-    broadcast_ranges: bool = True,
     bucket_width: int | None = None,
 ) -> DataFrame:
     """Interval/range enrichment (SearchKey.IP_RANGE_*, reference
@@ -82,7 +64,7 @@ def range_join(
                 )
             ),
         )
-        b = F.broadcast(buckets) if broadcast_ranges else buckets
+        b = F.broadcast(buckets)
         joined = left.join(
             b,
             on=(
@@ -93,6 +75,6 @@ def range_join(
             how=how,
         )
         return joined.drop("__rb__")
-    r = F.broadcast(ranges) if broadcast_ranges else ranges
+    r = F.broadcast(ranges)
     cond = (left[value_col] >= r[lo_col]) & (left[value_col] <= r[hi_col])
     return left.join(r, on=cond, how=how)

@@ -71,7 +71,6 @@ def group_by_then_features(
     df,
     key_cols: list[str],
     aggs: list[tuple[str, str, str]],
-    use_broadcast: bool = True,
 ):
     """Batched GroupByThen* as ONE aggregation + join-back — the scale
     path for per-group SCALAR aggregates (groupby.py:8-39).
@@ -91,6 +90,4 @@ def group_by_then_features(
     }
     exprs = [_AGGS[a](F.col(v)).alias(out) for a, v, out in aggs]
     small = df.groupBy(*[F.col(k) for k in key_cols]).agg(*exprs)
-    if use_broadcast:
-        small = F.broadcast(small)
-    return df.join(small, on=key_cols, how="left")
+    return df.join(F.broadcast(small), on=key_cols, how="left")

@@ -97,55 +97,6 @@ def dedup_first(
     )
 
 
-def ts_feature_parity(
-    df: DataFrame,
-    ts_col: str,
-    groups: list[str],
-    value_col: str,
-    feature_fn,
-    out_col: str,
-    order_col: str | None = None,
-    offset: tuple[int, str] | None = None,
-) -> DataFrame:
-    """Exact reference TimeSeriesBase.calculate_vector semantics
-    (base.py:25-55):
-
-    1. keep-first dedup on (groups, ts) (``order_col`` = explicit "first");
-    2. drop rows with unparsable/null ts;
-    3. optional offset: value series shifted forward by exactly
-       ``offset``; rows with no exact t−offset point drop out entirely
-       (the reference's inner merge, base.py:48-55);
-    4. compute the feature on the slim series via ``feature_fn(slim_df)``
-       (must add ``out_col``);
-    5. broadcast back to every original row by (groups, ts) equi-join.
-    """
-    key = groups + [ts_col]
-    slim = dedup_first(
-        df.select(*key, value_col, *( [order_col] if order_col else [] )),
-        ts_col, groups, order_col,
-    ).filter(F.col(ts_col).isNotNull())
-    if order_col:
-        slim = slim.drop(order_col)
-    if offset is not None:
-        n_off, u_off = offset
-        shifted = slim.select(
-            *groups,
-            (epoch_us(F.col(ts_col)) + F.lit(unit_us(n_off, u_off))).alias("__sh_us__"),
-            F.col(value_col).alias("__sh_val__"),
-        )
-        # exact-timestamp shift: replace value with value(t - offset), inner
-        slim_us = slim.withColumn("__us__", epoch_us(F.col(ts_col)))
-        cond = [slim_us["__us__"] == shifted["__sh_us__"]] + [
-            slim_us[g] == shifted[g] for g in groups
-        ]
-        slim = (
-            slim_us.join(shifted, on=cond, how="inner")
-            .select(*[slim_us[c] for c in key], F.col("__sh_val__").alias(value_col))
-        )
-    feat = feature_fn(slim).select(*key, out_col)
-    return df.join(feat, on=key, how="left")
-
-
 def ts_features_parity(
     df: DataFrame,
     ts_col: str,
@@ -155,14 +106,24 @@ def ts_features_parity(
     order_col: str | None = None,
     offset: tuple[int, str] | None = None,
 ) -> DataFrame:
-    """Multi-feature :func:`ts_feature_parity`: same dedup/offset
-    semantics, but the slim series is built ONCE, every
-    ``(out_col, feature_fn)`` chains on it (window stages share the
-    (groups) exchange — one shuffle for N features instead of N), and a
-    single (groups, ts) join broadcasts ALL feature columns back.
-    Compiling k formulas over the same (date, groups, value) previously
-    re-ran the entire upstream plan k times (22 exchanges for 3 formulas
-    in the enricher's transform — round-4 plan audit)."""
+    """Exact reference TimeSeriesBase.calculate_vector semantics
+    (base.py:25-55) for one or more features over the same series:
+
+    1. keep-first dedup on (groups, ts) (``order_col`` = explicit "first");
+    2. drop rows with unparsable/null ts;
+    3. optional offset: value series shifted forward by exactly
+       ``offset``; rows with no exact t−offset point drop out entirely
+       (the reference's inner merge, base.py:48-55);
+    4. every ``(out_col, feature_fn)`` in ``features`` chains on the
+       slim series (``feature_fn(slim_df)`` must add ``out_col``);
+    5. broadcast back to every original row by (groups, ts) equi-join.
+
+    The slim series is built ONCE and a single join carries ALL feature
+    columns back; window stages share the (groups) exchange — one
+    shuffle for N features instead of N. Compiling k formulas over the
+    same (date, groups, value) one by one re-ran the entire upstream plan
+    k times (22 exchanges for 3 formulas in the enricher's transform —
+    round-4 plan audit)."""
     key = groups + [ts_col]
     slim = dedup_first(
         df.select(*key, value_col, *([order_col] if order_col else [])),
@@ -177,6 +138,7 @@ def ts_features_parity(
             (epoch_us(F.col(ts_col)) + F.lit(unit_us(n_off, u_off))).alias("__sh_us__"),
             F.col(value_col).alias("__sh_val__"),
         )
+        # exact-timestamp shift: replace value with value(t - offset), inner
         slim_us = slim.withColumn("__us__", epoch_us(F.col(ts_col)))
         cond = [slim_us["__us__"] == shifted["__sh_us__"]] + [
             slim_us[g] == shifted[g] for g in groups

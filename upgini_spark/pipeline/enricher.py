@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from upgini_spark.functions import dedup as DD
-from upgini_spark.joins.asof import asof_join
+from upgini_spark.joins.asof import asof_join, asof_join_hist, build_asof_hist
 from upgini_spark.operators.date import cyclical_features
 from upgini_spark.pipeline import normalizer as N
 from upgini_spark.pipeline.record_ids import add_system_record_id
@@ -75,6 +75,10 @@ class SparkFeaturesEnricher:
     formulas : generated-feature formulas evaluated after enrichment
         (the stand-in for server-selected AutoFE formulas,
         metadata.py:332-337); ``None`` → a default temporal set.
+
+    The as-of engine follows the feature source's layout: after
+    :meth:`materialize_source_bucketed` the enricher joins against the
+    bucketed history table, otherwise it runs the native as-of join.
     """
 
     def __init__(
@@ -83,16 +87,14 @@ class SparkFeaturesEnricher:
         source_entity_col: str = "entity_id",
         source_ts_col: str = "feature_ts",
         formulas: dict[str, str] | None = None,
-        asof_engine: str = "native",
-        salt: int = 1,
     ) -> None:
         self.feature_source = feature_source
         self.source_entity_col = source_entity_col
         self.source_ts_col = source_ts_col
         self.formulas = formulas
-        self.asof_engine = asof_engine
-        self.salt = salt
         self.state: FitState | None = None
+        # the bucketed history table, set by materialize_source_bucketed
+        self._hist: DataFrame | None = None
 
     # -- lifecycle ----------------------------------------------------------
 
@@ -151,9 +153,9 @@ class SparkFeaturesEnricher:
         self, table_name: str, n_buckets: int = 64
     ) -> "SparkFeaturesEnricher":
         """Persist the per-entity history collapse as a BUCKETED table
-        (bucketed on the entity key) and switch the enricher to the
-        'hist' engine reading from it. When the input frame passed to
-        :meth:`transform` is itself read from a table bucketed on the
+        (bucketed on the entity key); :meth:`transform` then joins
+        against it instead of the raw source. When the input frame passed
+        to :meth:`transform` is itself read from a table bucketed on the
         entity key with the SAME bucket count (see
         :meth:`bucketize_input`), the as-of join plans bucket-to-bucket
         (zero Exchange on either side) and every downstream window
@@ -165,7 +167,6 @@ class SparkFeaturesEnricher:
         re-joins the same feature store on every transform,
         features_enricher.py:4630-4698). Idempotent across sessions via
         ``ensure_bucketed`` (re-registers an existing layout)."""
-        from upgini_spark.joins.asof import build_asof_hist
         from upgini_spark.sources.io import ensure_bucketed
 
         spark = self.feature_source.sparkSession
@@ -188,8 +189,6 @@ class SparkFeaturesEnricher:
         # hash keys (default requires ALL keys → it reshuffles both sides
         # by (entity, ts)). Relaxing is plan-only — never changes results.
         spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-        if self.asof_engine not in ("hist", "hist_broadcast"):
-            self.asof_engine = "hist"
         return self
 
     @staticmethod
@@ -225,24 +224,13 @@ class SparkFeaturesEnricher:
             cyc = cyclical_features(F.col(st.ts_col))
             out = out.select("*", *[e.alias(name) for name, e in cyc.items()])
 
-        if self.asof_engine in ("hist", "hist_broadcast"):
-            # collapse the feature source ONCE per enricher (r5): repeated
-            # transform() calls (train + eval segments + OOT) reuse the
-            # same per-entity history frame instead of re-running the
-            # groupBy + sort_array collapse each time. 'hist' sort-merge
-            # joins (shuffle-free when the hist rides a bucketed table —
-            # see sources/io.write_bucketed); 'hist_broadcast' ships it.
-            from upgini_spark.joins.asof import asof_join_hist, build_asof_hist
-
-            if getattr(self, "_hist", None) is None:
-                self._hist = build_asof_hist(
-                    self.feature_source, self.source_ts_col,
-                    [self.source_entity_col],
-                ).localCheckpoint(eager=True)
+        if self._hist is not None:
+            # sort-merge join against the bucketed history table:
+            # bucket-to-bucket (zero Exchange) when the input is bucketed
+            # the same way (see bucketize_input)
             out = asof_join_hist(
                 out, self._hist, st.ts_col, [st.entity_col],
                 [self.source_entity_col], keep_match_ts=True,
-                broadcast=(self.asof_engine == "hist_broadcast"),
             )
         else:
             out = asof_join(
@@ -252,8 +240,6 @@ class SparkFeaturesEnricher:
                 right_on=self.source_ts_col,
                 by_left=st.entity_col,
                 by_right=self.source_entity_col,
-                engine=self.asof_engine,
-                salt=self.salt,
                 keep_match_ts=True,
             )
         if st.generated_formulas:

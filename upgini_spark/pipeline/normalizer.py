@@ -20,14 +20,7 @@ import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BooleanType,
-    DateType,
-    NumericType,
-    StringType,
-    TimestampNTZType,
-    TimestampType,
-)
+from pyspark.sql.types import BooleanType, NumericType, StringType
 
 MAX_STRING_FEATURE_LENGTH = 24_573  # normalize_utils.py:36
 
@@ -76,17 +69,6 @@ def normalize_types(
         else:
             exprs.append(c.cast("string").alias(fld.name))
     return df.select(*exprs)
-
-
-def drop_datetime_features(df: DataFrame, feature_cols: list[str]) -> tuple[DataFrame, list[str]]:
-    """Datetime-typed feature columns are dropped entirely
-    (normalize_utils.py:147-156)."""
-    dropped = [
-        f.name for f in df.schema.fields
-        if f.name in feature_cols
-        and isinstance(f.dataType, (TimestampType, TimestampNTZType, DateType))
-    ]
-    return df.drop(*dropped), dropped
 
 
 def detect_decimal_comma(df: DataFrame, feature_cols: list[str], probe_rows: int = 10) -> list[str]:

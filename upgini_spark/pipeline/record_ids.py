@@ -8,8 +8,9 @@ gets an explicit total order: (date, hash, tie-break hash of all columns).
 
 The row-hash here is md5 of the concatenated normalized values — chosen
 over xxhash64 because it is reproducible in ANSI SQL (DuckDB oracle
-parity), while remaining deterministic and uniform. Ids are dense
-row_numbers per eval segment, exactly like the reference's reset_index.
+parity), while remaining deterministic and uniform. Ids are one dense
+0-based sequence across the train-first segment blocks, exactly like the
+reference's reset_index after its concat.
 
 Scale: a naive ``row_number() OVER (ORDER BY ...)`` is a single-partition
 exchange — every row funnels through one task. Instead this uses the
@@ -19,17 +20,15 @@ distributed zipWithIndex pattern:
    all partitions in parallel, partition p holds keys < partition p+1);
 2. ``monotonically_increasing_id()`` = (partition_id << 33) + local index,
    monotone with the total order within each partition;
-3. one tiny aggregation job collects per-(partition, segment) row counts
-   and min-ids (≤ partitions × segments rows on the driver);
-4. dense id = cumulative-offset(partition, segment) + (mid − min_mid) + 1,
+3. one tiny aggregation job collects per-partition row counts and
+   min-ids (one row per partition on the driver);
+4. dense id = cumulative-offset(partition) + (mid − min_mid) + base,
    attached via a broadcast join — no second full-data shuffle.
 
 ``.explain()`` shows no ``Exchange SinglePartition`` (asserted in tests).
 """
 
 from __future__ import annotations
-
-from collections import defaultdict
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -95,16 +94,13 @@ def zip_with_index(
     df: DataFrame,
     order,
     out_col: str,
-    seg_col: str | None = None,
-    num_partitions: int | None = None,
     keep_cols: list[str] | None = None,
     base: int = 1,
 ) -> DataFrame:
     """Distributed dense ``base``-based row index along a total order —
     the zipWithIndex pattern described in the module docstring. ``order``
-    is a list of Column sort expressions; when ``seg_col`` is given,
-    numbering restarts per segment (the segment column must lead the
-    order).
+    is a list of Column sort expressions; the index is one continuous
+    sequence over the whole frame.
 
     The sorted+indexed intermediate is materialized with an eager
     checkpoint so the offsets job and the final pass see ONE consistent
@@ -127,49 +123,33 @@ def zip_with_index(
     """
     spark = df.sparkSession
     out_cols = keep_cols or list(df.columns)
-    n = num_partitions or _range_partitions(df)
     work = (
-        df.repartitionByRange(n, *order)
+        df.repartitionByRange(_range_partitions(df), *order)
         .sortWithinPartitions(*order)
         .withColumn("__sri_mid__", F.monotonically_increasing_id())
     )
     work = _consistent_checkpoint(work)
 
-    pid = F.shiftright(F.col("__sri_mid__"), _MID_BITS).alias("__sri_pid__")
-    # null-safe segment key: the offsets equi-join would silently drop
-    # null-segment rows (null never matches), so nulls map to a sentinel.
-    # INT_MIN also sorts first, consistent with asc_nulls_first ordering.
-    seg_expr = (
-        F.coalesce(F.col(seg_col).cast("int"), F.lit(-(2**31)).cast("int"))
-        if seg_col
-        else F.lit(0)
-    )
+    pid = F.shiftright(F.col("__sri_mid__"), _MID_BITS)
     stats = (
-        work.groupBy(pid, seg_expr.alias("__sri_seg__"))
+        work.groupBy(pid.alias("__sri_pid__"))
         .agg(F.count(F.lit(1)).alias("cnt"), F.min("__sri_mid__").alias("min_mid"))
         .collect()
     )
     if not stats:
         return df.select(*out_cols).withColumn(out_col, F.lit(None).cast("long"))
 
-    by_seg: dict = defaultdict(list)
+    stats.sort(key=lambda r: r["__sri_pid__"])
+    offsets, acc = [], 0
     for r in stats:
-        by_seg[r["__sri_seg__"]].append(r)
-    offsets = []
-    for s, rows in by_seg.items():
-        rows.sort(key=lambda r: r["__sri_pid__"])
-        acc = 0
-        for r in rows:
-            offsets.append((int(r["__sri_pid__"]), s, acc, int(r["min_mid"])))
-            acc += int(r["cnt"])
+        offsets.append((int(r["__sri_pid__"]), acc, int(r["min_mid"])))
+        acc += int(r["cnt"])
     map_df = local_frame(
-        spark, offsets, "__sri_pid__ long, __sri_seg__ int, __sri_off__ long, __sri_minmid__ long"
+        spark, offsets, "__sri_pid__ long, __sri_off__ long, __sri_minmid__ long"
     )
 
-    keyed = work.withColumn(
-        "__sri_pid__", F.shiftright(F.col("__sri_mid__"), _MID_BITS)
-    ).withColumn("__sri_seg__", seg_expr.cast("int"))
-    out = keyed.join(F.broadcast(map_df), ["__sri_pid__", "__sri_seg__"])
+    keyed = work.withColumn("__sri_pid__", pid)
+    out = keyed.join(F.broadcast(map_df), "__sri_pid__")
     rid = (
         F.col("__sri_off__") + (F.col("__sri_mid__") - F.col("__sri_minmid__"))
         + base
@@ -181,11 +161,9 @@ def add_system_record_id(
     df: DataFrame,
     sort_date_col: str | None,
     hash_cols: list[str],
-    out_col: str = SYSTEM_RECORD_ID,
-    per_eval_segment: bool = True,
-    num_partitions: int | None = None,
 ) -> DataFrame:
-    """Assign order-defining ids after the deterministic sort.
+    """Assign order-defining ``system_record_id`` values after the
+    deterministic sort.
 
     Mirrors _add_fit_system_record_id (features_enricher.py:4488-4595):
     each eval_set_index segment is sorted by [date, row-hash, tie-break
@@ -203,7 +181,7 @@ def add_system_record_id(
     the block layout and id density do not.
     """
     orig_cols = list(df.columns)
-    seg = EVAL_SET_INDEX if (per_eval_segment and EVAL_SET_INDEX in df.columns) else None
+    seg = EVAL_SET_INDEX if EVAL_SET_INDEX in df.columns else None
 
     work = df.withColumn("__sri_h__", row_hash(hash_cols)).withColumn(
         "__sri_tie__", row_hash(orig_cols)
@@ -214,8 +192,7 @@ def add_system_record_id(
         + [F.col("__sri_h__").asc(), F.col("__sri_tie__").asc()]
     )
     return zip_with_index(
-        work, order, out_col, seg_col=None,
-        num_partitions=num_partitions, keep_cols=orig_cols, base=0,
+        work, order, SYSTEM_RECORD_ID, keep_cols=orig_cols, base=0
     )
 
 
@@ -224,7 +201,6 @@ def global_running_sum(
     order,
     value_col: str,
     out_col: str,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Distributed inclusive running sum of ``value_col`` along a total
     order — the cumsum twin of :func:`zip_with_index`: range-partition +
@@ -241,9 +217,8 @@ def global_running_sum(
 
     spark = df.sparkSession
     out_cols = list(df.columns)
-    n = num_partitions or _range_partitions(df)
     work = (
-        df.repartitionByRange(n, *order)
+        df.repartitionByRange(_range_partitions(df), *order)
         .sortWithinPartitions(*order)
         .withColumn("__grs_mid__", F.monotonically_increasing_id())
     )

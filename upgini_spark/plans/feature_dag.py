@@ -446,8 +446,8 @@ def compile_features(
             bucket_key = (date_col, tuple(groups), value, offset)
             batched.setdefault(bucket_key, []).append((out_name, kind, p, fn))
         else:
-            out = TS.ts_feature_parity(
-                out, date_col, groups, value, fn, out_name,
+            out = TS.ts_features_parity(
+                out, date_col, groups, value, [(out_name, fn)],
                 order_col=order_col, offset=offset,
             )
     for (date_col, groups_t, value, offset), entries in batched.items():

@@ -53,27 +53,6 @@ def write_parquet_bounded(
     w.parquet(path)
 
 
-def write_iceberg_or_parquet(
-    df: DataFrame, table_or_path: str, mode: str = "append"
-) -> str:
-    """Write to an Iceberg table when a catalog is configured; otherwise a
-    parquet snapshot directory. Returns the sink actually used."""
-    spark = df.sparkSession
-    has_iceberg = any(
-        "iceberg" in (spark.conf.get(k, "") or "").lower()
-        for k in (
-            "spark.sql.catalog.spark_catalog",
-            "spark.sql.extensions",
-        )
-    )
-    if has_iceberg and "/" not in table_or_path:
-        (df.writeTo(table_or_path).append()
-         if mode == "append" else df.writeTo(table_or_path).createOrReplace())
-        return "iceberg"
-    df.write.mode("append" if mode == "append" else "overwrite").parquet(table_or_path)
-    return "parquet"
-
-
 def dump_input(
     df: DataFrame,
     dump_dir: str,

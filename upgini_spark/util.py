@@ -42,7 +42,7 @@ def local_frame(
     return spark.createDataFrame(table, schema)
 
 
-def spread_scan(df: DataFrame, factor: int = 1) -> DataFrame:
+def spread_scan(df: DataFrame) -> DataFrame:
     """Spread an under-partitioned input before CPU-heavy work.
 
     A single-row-group parquet file (or any unsplittable input) gives
@@ -54,14 +54,14 @@ def spread_scan(df: DataFrame, factor: int = 1) -> DataFrame:
     buys full parallelism downstream (measured: simhash_32 7.9 s →
     0.8 s at sf1.0/local[32]).
 
-    Scale-adaptive: the target is ``factor ×`` the session's default
-    parallelism, and inputs that already provide at least that many
+    Scale-adaptive: the target is the session's default parallelism,
+    and inputs that already provide at least that many
     partitions (any real multi-file table at cluster scale) pass
     through untouched — on a 100 TB layout this is a no-op, not a
     wasted shuffle. Row-identical by construction; callers are
     partition-invariant by engine design (oracle-hash enforced).
     """
-    n = factor * df.sparkSession.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= n:
         return df
     # hash-partition on the full row, NOT round-robin: a keyless
