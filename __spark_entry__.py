@@ -29,7 +29,7 @@ from upgini_spark.operators.timeseries import (
     sessionize,
     trend_coefficient,
 )
-from upgini_spark.util import local_frame, spread_scan
+from upgini_spark.util import local_frame, materialize, spread_scan
 
 _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 _ORACLES: dict[str, str] = {}
@@ -472,7 +472,7 @@ def groupby_then_ops(spark, sf_dir):
     # join-back both consume it, and each would re-pay the scan + spread
     # shuffle (ReuseExchange does not fire across the differing shapes;
     # measured 2.28 -> 1.78 s at 1.5M rows, outputs identical)
-    o = spread_scan(_t(spark, sf_dir, "orders")).localCheckpoint(eager=True)
+    o = materialize(spread_scan(_t(spark, sf_dir, "orders")))
     key = F.col("o_orderpriority")
     val = F.col("o_totalprice")
     agged = G.group_by_then_features(
@@ -1568,7 +1568,7 @@ def mask_tokens_mlm(spark, sf_dir):
     # materialize the spread scan once: the vocabulary agg and the
     # encode projection both consume it (re-paid scan + spread shuffle
     # otherwise; 0.93 -> 0.76 s alternating A/B, outputs identical)
-    docs = spread_scan(_t(spark, sf_dir, "documents")).localCheckpoint(eager=True)
+    docs = materialize(spread_scan(_t(spark, sf_dir, "documents")))
     vocab = build_word_vocab(docs, "text", 25)
     enc = encode_words(docs, "doc_id", "text", vocab)
     mk = mask_tokens(enc, "doc_id", "token_ids", mask_id=-1, rate=0.15)
@@ -1913,7 +1913,7 @@ def chunk_sliding_tokens(spark, sf_dir):
     # materialize the spread scan once: the vocabulary agg and the
     # encode projection both consume it (re-paid scan + spread shuffle
     # otherwise; 0.93 -> 0.76 s alternating A/B, outputs identical)
-    docs = spread_scan(_t(spark, sf_dir, "documents")).localCheckpoint(eager=True)
+    docs = materialize(spread_scan(_t(spark, sf_dir, "documents")))
     vocab = build_word_vocab(docs, "text", 25)
     enc = encode_words(docs, "doc_id", "text", vocab)
     ch = chunk_tokens_sliding(enc, "doc_id", "token_ids", 16, 8)
@@ -1975,7 +1975,7 @@ def vocab_encode_words(spark, sf_dir):
     # materialize the spread scan once: the vocabulary agg and the
     # encode projection both consume it (re-paid scan + spread shuffle
     # otherwise; 0.93 -> 0.76 s alternating A/B, outputs identical)
-    docs = spread_scan(_t(spark, sf_dir, "documents")).localCheckpoint(eager=True)
+    docs = materialize(spread_scan(_t(spark, sf_dir, "documents")))
     vocab = build_word_vocab(docs, "text", 25)
     enc = encode_words(docs, "doc_id", "text", vocab)
     return enc.select(
@@ -2272,7 +2272,7 @@ def text_bm25_topk(spark, sf_dir):
     # materialize the spread scan once: the 1-row stats agg and the
     # scoring projection both consume it (0.48 -> 0.30 s alternating
     # A/B, outputs identical)
-    docs = spread_scan(_t(spark, sf_dir, "documents")).localCheckpoint(eager=True)
+    docs = materialize(spread_scan(_t(spark, sf_dir, "documents")))
     scored = TX.bm25_score(docs, "text", ["spark", "window", "dup"])
     return (
         scored.select(

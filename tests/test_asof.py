@@ -123,16 +123,6 @@ def test_forward_direction(spark, frames):
     _compare(out.toPandas(), exp)
 
 
-def test_asof_auto_salt(spark, frames):
-    left, right = frames
-    out = asof_join(
-        left, right, left_on="event_time", right_on="feature_ts",
-        by_left="doc_id", by_right="entity_id", engine="arrow", salt="auto",
-    ).toPandas()
-    exp = _oracle(left.toPandas(), right.toPandas())
-    _compare(out, exp)
-
-
 @pytest.mark.parametrize("tolerance", [None, 30 * 86400])
 def test_asof_broadcast_engine(spark, frames, tolerance):
     left, right = frames

@@ -100,7 +100,7 @@ def test_temporal_values_bit_identical_under_non_utc_tz(spark, non_utc_tz):
     )
 
 
-def _create_dataframe_calls(path):
+def _method_calls(path, names):
     tree = ast.parse(path.read_text(), filename=str(path))
     scopes = {}
     for node in ast.walk(tree):
@@ -112,18 +112,31 @@ def _create_dataframe_calls(path):
         for node in ast.walk(tree)
         if isinstance(node, ast.Call)
         and isinstance(node.func, ast.Attribute)
-        and node.func.attr == "createDataFrame"
+        and node.func.attr in names
     ]
+
+
+def _offenders(names, helper):
+    """Calls of ``.<name>(`` in engine code and the query entry point
+    outside ``util.<helper>``."""
+    files = sorted((REPO / "upgini_spark").rglob("*.py")) + [REPO / "__spark_entry__.py"]
+    offenders = []
+    for path in files:
+        for lineno, scope in _method_calls(path, names):
+            rel = path.relative_to(REPO).as_posix()
+            if not (rel == "upgini_spark/util.py" and scope == helper):
+                offenders.append(f"{rel}:{lineno}")
+    return offenders
 
 
 def test_no_create_dataframe_outside_local_frame():
     """Static guard: engine code and the query entry point build frames
     from driver data only through ``util.local_frame``."""
-    files = sorted((REPO / "upgini_spark").rglob("*.py")) + [REPO / "__spark_entry__.py"]
-    offenders = []
-    for path in files:
-        for lineno, scope in _create_dataframe_calls(path):
-            rel = path.relative_to(REPO).as_posix()
-            if not (rel == "upgini_spark/util.py" and scope == "local_frame"):
-                offenders.append(f"{rel}:{lineno}")
-    assert offenders == []
+    assert _offenders({"createDataFrame"}, "local_frame") == []
+
+
+def test_no_checkpoint_outside_materialize():
+    """Static guard: engine code and the query entry point take eager
+    checkpoints only through ``util.materialize``, the one place that
+    picks reliable vs executor-local storage."""
+    assert _offenders({"localCheckpoint", "checkpoint"}, "materialize") == []

@@ -92,7 +92,7 @@ def test_zip_with_index_no_cachemanager_entry(spark):
     out = add_system_record_id(df, None, ["k"])
     assert out.count() == 500
     # DataFrame.persist would register in the shared CacheManager and leak;
-    # localCheckpoint must leave it empty.
+    # util.materialize (an eager checkpoint) must leave it empty.
     cm = spark._jsparkSession.sharedState().cacheManager()
     assert cm.isEmpty(), "record-id helper leaked a CacheManager entry"
 

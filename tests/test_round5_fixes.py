@@ -145,7 +145,7 @@ def test_psi_monthly_matches_pandas_reference_math(spark):
 
 
 def test_psi_monthly_no_cache_leak(spark):
-    """The rewrite uses eager localCheckpoint, never persist — no
+    """The rewrite uses util.materialize, never persist — no
     CacheManager entry may remain after a run (r4 verdict hygiene)."""
     from upgini_spark.functions.stats import psi_monthly_report
 

@@ -571,10 +571,11 @@ def test_ivf_pq_fit_inputs_are_one_collect(spark, monkeypatch):
             corpus, "vid", "v", 8, m=2, k_sub=3, n_cells=4, materialize=False)
     finally:
         sc.setJobGroup(None, None)
-    # the fits run in pool threads, whose jobs carry no group
+    # the fits run side by side in threads that keep the caller's group
     pool_jobs = set(sc.statusTracker().getJobIdsForGroup(None)) - ungrouped
     fit_jobs = sc.statusTracker().getJobIdsForGroup("ivfpq_fit")
-    assert len(fit_jobs) + len(pool_jobs) <= 2, (fit_jobs, pool_jobs)
+    assert not pool_jobs, pool_jobs
+    assert len(fit_jobs) <= 2, fit_jobs
     assert sc.statusTracker().getJobIdsForGroup("ivfpq_sample")
     assert idx["index"].count() == 300
 

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from upgini_spark.util import local_frame
+from upgini_spark.util import local_frame, materialize
 
 
 def drop_full_duplicates(
@@ -206,13 +206,12 @@ def minhash_band_pairs(
         id_col, "bk.band_no", "bk.band_key",
         F.xxhash64("bk.band_no", "bk.band_key").alias("band_h"),
     )
-    # materialize the melted band keys ONCE (eager localCheckpoint): the
-    # band SELF-join consumes the frame as both sides and exchange reuse
-    # does not fire for the aliased twin, so the shingle+minhash
-    # signature chain otherwise computes twice (the
-    # embedding_near_dup_lsh lesson; the frame is a few dozen bytes of
-    # keys × bands per doc — tiny at any scale)
-    melted = melted.localCheckpoint(eager=True)
+    # materialize the melted band keys ONCE: the band SELF-join consumes
+    # the frame as both sides and exchange reuse does not fire for the
+    # aliased twin, so the shingle+minhash signature chain otherwise
+    # computes twice (the embedding_near_dup_lsh lesson; the frame is a
+    # few dozen bytes of keys × bands per doc — tiny at any scale)
+    melted = materialize(melted)
     a = melted.alias("a")
     b = melted.alias("b")
 
@@ -449,8 +448,8 @@ def connected_components(
     O(diameter). Near-dup clusters from banded LSH are near-cliques and
     finish in 2-4 rounds either way. Per iteration: one edge equi-join +
     one map-side-combinable min agg + one self-join of the (small) label
-    table; each round's labels are cut from the lineage with an eager
-    ``localCheckpoint`` — iterative Spark plans otherwise grow
+    table; each round's labels are cut from the lineage with
+    ``util.materialize`` — iterative Spark plans otherwise grow
     exponentially and re-execute from scratch every round.
 
     Raises ``RuntimeError`` if ``max_iter`` rounds do not reach the
@@ -470,7 +469,7 @@ def connected_components(
     the distributed min-label-propagation path unchanged.
     """
     edges = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-    dedges = edges.distinct().localCheckpoint(eager=True)
+    dedges = materialize(edges.distinct())
     # the capped collect is also the size probe: no separate count job.
     # One task reads at most cap + 1 rows, so it is ONE job at any
     # partition count (a plain limit collect scans partitions in growing
@@ -512,14 +511,13 @@ def connected_components(
         data = [(node, comp[find(node)]) for node in parent]
         return local_frame(spark, data, schema)
 
-    sym = dedges.unionByName(
+    sym = materialize(dedges.unionByName(
         dedges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).distinct().localCheckpoint(eager=True)
-    labels = (
+    ).distinct())
+    labels = materialize(
         sym.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
     )
     n_changed = 0
     for _ in range(max_iter):
@@ -531,7 +529,7 @@ def connected_components(
         ptr = labels.select(
             F.col("node").alias("__pn__"), F.col("label").alias("__pl__")
         )
-        stepped = (
+        stepped = materialize(
             labels.join(nbr, labels["node"] == nbr["a"], "left")
             .join(ptr, labels["label"] == ptr["__pn__"], "left")
             .select(
@@ -543,7 +541,6 @@ def connected_components(
                     F.coalesce("__pl__", "label"),
                 ).alias("label"),
             )
-            .localCheckpoint(eager=True)
         )
         n_changed = stepped.filter(F.col("label") != F.col("__old__")).count()
         labels = stepped.select("node", "label")
@@ -702,16 +699,16 @@ def paragraph_dedup(
         df.select(F.col(id_col).alias("__pid__"), paras.alias("__ps__"))
         .select(idc, F.posexplode_outer("__ps__").alias("__idx__", "__para__"))
     )
-    # materialize the exploded+hashed paragraphs ONCE (eager
-    # localCheckpoint): the first-occurrence agg and the join-back are
-    # two consumers whose differing shapes defeat ReuseExchange, so the
+    # materialize the exploded+hashed paragraphs ONCE: the
+    # first-occurrence agg and the join-back are two consumers whose
+    # differing shapes defeat ReuseExchange, so the
     # split+trim+normalize+md5 chain (and any upstream spread shuffle)
     # otherwise executes twice (measured 2.3 → 1.8 s at a 500k-para
     # corpus); one linear write beats the second full re-execution at
     # any scale
-    hashed = exploded.withColumn(
+    hashed = materialize(exploded.withColumn(
         "__h__", F.md5(normalize_paragraph(F.col("__para__")))
-    ).localCheckpoint(eager=True)
+    ))
     first = hashed.groupBy("__h__").agg(
         F.min(F.struct("__pid__", "__idx__")).alias("__first__")
     )

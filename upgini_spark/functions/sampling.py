@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from upgini_spark.util import local_frame
+from upgini_spark.util import id_hash, local_frame, materialize
 
 FIT_SAMPLE_THRESHOLD = 100_000  # reference utils/config.py:18-21
 FORCE_SAMPLE_SIZE = 7_000       # reference dataset.py:65
@@ -48,7 +48,7 @@ def hash_sample_exact(
     Both regimes return identical rows: the final exact order/limit runs
     either way.
     """
-    h = F.md5(F.concat_ws("\x1f", *[F.col(c).cast("string") for c in id_cols]))
+    h = id_hash(id_cols)
     order = [h.asc()] + [F.col(c).asc() for c in id_cols]
     work = df
     if n > HASH_SAMPLE_HEAP_CEILING:
@@ -166,7 +166,7 @@ def undersample_imbalanced(
         out = out.filter(~F.col(target_col).isin(drop))
     if not quotas:
         return out
-    h = F.md5(F.concat_ws("\x1f", *[F.col(c).cast("string") for c in id_cols]))
+    h = id_hash(id_cols)
     w = Window.partitionBy(target_col).orderBy(h.asc(), *[F.col(c).asc() for c in id_cols])
     ranked = out.withColumn("__rk__", F.row_number().over(w))
     quota_map = F.create_map(*[F.lit(x) for kv in quotas.items() for x in kv])
@@ -266,10 +266,6 @@ def trunc_datetime_offset(
     )
 
 
-def _id_hash(id_cols: list[str]) -> F.Column:
-    return F.md5(F.concat_ws("\x1f", *[F.col(c).cast("string") for c in id_cols]))
-
-
 def sample_time_series(
     df: DataFrame,
     id_cols: list[str],
@@ -298,9 +294,9 @@ def sample_time_series(
         F.max(d).alias("__max__"), F.count(F.lit(1)).alias("__cnt__")
     )
     order = (
-        [F.col("__max__").desc(), F.col("__cnt__").desc(), _id_hash(ids).desc()]
+        [F.col("__max__").desc(), F.col("__cnt__").desc(), id_hash(ids).desc()]
         if prefer_recent_dates
-        else [F.col("__cnt__").desc(), _id_hash(ids).desc()]
+        else [F.col("__cnt__").desc(), id_hash(ids).desc()]
     )
     spark = df.sparkSession
     if sample_size <= DRIVER_CUMSUM_ROWS:
@@ -316,7 +312,7 @@ def sample_time_series(
         # scan + groupBy (the distributed path already reads its cumsum's
         # checkpoint for both); at any scale one write of the id table
         # beats two extra full-table passes.
-        stats = stats.localCheckpoint(eager=True)
+        stats = materialize(stats)
         head = stats.orderBy(*order).limit(sample_size).collect()
         acc, kept_rows = 0, []
         for r in head:
@@ -352,7 +348,7 @@ def sample_time_series(
         date_counts = df.groupBy(*ids).agg(F.countDistinct(d).alias("__nd__"))
         ids_limit = min_different_ids if n_kept > 0 else n_ids
         ids_to_sample = (
-            date_counts.orderBy(F.col("__nd__").desc(), _id_hash(ids).asc())
+            date_counts.orderBy(F.col("__nd__").desc(), id_hash(ids).asc())
             .limit(ids_limit)
             .select(*ids)
         )

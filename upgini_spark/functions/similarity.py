@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from upgini_spark import util
 from upgini_spark.operators.binary import _dot, _norm2, cosine_similarity
 from upgini_spark.util import local_frame
 
@@ -215,14 +216,14 @@ def embedding_near_dup_lsh(
     """
     if n_planes is None:
         n_planes = auto_n_planes(df.count())
-    # materialize the banded frame ONCE (eager localCheckpoint): the
-    # bucket SELF-join consumes it as both sides and neither static
-    # ReuseExchange nor AQE stage reuse fires for the aliased twin, so
-    # the n_bands × n_planes sign-bit dot products (and any upstream
-    # spread) otherwise compute twice (measured 2.1 → 1.6 s at 20k×64,
-    # outputs identical)
-    banded = _banded(df, "id_a", "va", id_col, vec_col, n_planes, n_bands,
-                     dims, norm_alias="__an__").localCheckpoint(eager=True)
+    # materialize the banded frame ONCE: the bucket SELF-join consumes it
+    # as both sides and neither static ReuseExchange nor AQE stage reuse
+    # fires for the aliased twin, so the n_bands × n_planes sign-bit dot
+    # products (and any upstream spread) otherwise compute twice
+    # (measured 2.1 → 1.6 s at 20k×64, outputs identical)
+    banded = util.materialize(_banded(df, "id_a", "va", id_col, vec_col,
+                                      n_planes, n_bands, dims,
+                                      norm_alias="__an__"))
     other = banded.select(
         F.col("id_a").alias("id_b"), F.col("va").alias("vb"),
         F.col("__an__").alias("__bn__"), "band", "bucket",
@@ -644,7 +645,7 @@ def fit_vector_sample(
     # count does not change results: the 9dp round absorbs summation-
     # order noise (the documented partition-invariance contract).
     parts = max(1, -(-min(n, _SAMPLE_CAP) // 6_250))
-    return n, s.coalesce(parts).localCheckpoint(eager=True)
+    return n, util.materialize(s.coalesce(parts))
 
 
 def _lloyd_means(assigned: DataFrame, keys: list[str], vec_col: str) -> list:
@@ -1264,7 +1265,7 @@ def build_ivf_pq_index(
     "index": (n_id, cell, codes)} — the index frame is ~m bytes + a
     cell id per corpus row (the vectors themselves are NOT in it).
 
-    ``materialize=True`` eagerly localCheckpoints the index so query
+    ``materialize=True`` materializes the index so query
     batches scan the compact materialized frame instead of re-deriving
     the assignment (on a cluster, write it to a bucketed table on
     ``cell`` instead — then the candidate fetch is exchange-free)."""
@@ -1284,22 +1285,19 @@ def build_ivf_pq_index(
     # the coarse k-means and the PQ codebook fits are INDEPENDENT chains
     # of small sequential jobs over the shared checkpointed sample — run
     # them concurrently so the second fit's jobs back-fill the idle
-    # executors of the first (guide §2.6 "overlap independent jobs");
-    # Spark's scheduler handles concurrent driver threads natively.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        cent_f = pool.submit(
-            kmeans_centroids, corpus, corpus_id, corpus_vec,
+    # executors of the first (guide §2.6 "overlap independent jobs")
+    cent, cb = util.run_concurrently(
+        lambda: kmeans_centroids(
+            corpus, corpus_id, corpus_vec,
             n_cells=n_cells, n_iter=coarse_iter, fit=fit,
             seed_vecs=seed_vecs, fit_matrix=fit_matrix,
-        )
-        cb_f = pool.submit(
-            pq_codebooks, corpus, corpus_id, corpus_vec, dim,
+        ),
+        lambda: pq_codebooks(
+            corpus, corpus_id, corpus_vec, dim,
             m=m, k_sub=k_sub, n_iter=pq_iter, fit=fit,
             seed_vecs=seed_vecs, fit_matrix=fit_matrix,
-        )
-        cent, cb = cent_f.result(), cb_f.result()
+        ),
+    )
     # cell assignment + PQ encode fused into ONE zero-shuffle kernel pass
     # (was: crossJoin+agg assignment, explode+agg encode, then an id JOIN
     # of two corpus-sized frames — three shuffles for row-local work);
@@ -1315,7 +1313,7 @@ def build_ivf_pq_index(
         "n_id", "n_vec", _cb_by_sub(cb), dim, m, cent_rows=cent_rows,
     )
     if materialize:
-        index = index.localCheckpoint(eager=True)
+        index = util.materialize(index)
     return {"centroids": cent, "codebooks": cb, "index": index}
 
 

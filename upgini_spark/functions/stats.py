@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as PWindow
 from pyspark.sql import functions as F
 
-from upgini_spark.util import local_frame, spread_scan
+from upgini_spark.util import local_frame, materialize, run_concurrently, spread_scan
 
 EPS = 1e-6
 
@@ -370,18 +370,16 @@ def psi_monthly_report(
     itv_expr = F.lit(0)
     for e in interior_dates:
         itv_expr = itv_expr + F.when(us > F.lit(e), 1).otherwise(0)
-    # eager localCheckpoint, not persist: no CacheManager entry to leak on
-    # an exception between persist/unpersist (r4 verdict hygiene item).
-    # The frame is NARROWED to (features, interval) and SPREAD first: a
+    # materialize the frame NARROWED to (features, interval) and SPREAD: a
     # single-row-group input would otherwise leave the checkpoint — and
     # every one of the ~4 downstream count/quantile jobs — single-task
     # (guide §2.5).
-    d = spread_scan(
+    d = materialize(spread_scan(
         df.filter(F.col(date_col).isNotNull()).select(
             *[q(f).alias(f) for f in feature_cols],
             itv_expr.cast("int").alias("__itv__"),
         )
-    ).localCheckpoint(eager=True)
+    ))
     itv_totals = {
         r["__itv__"]: r["count"] for r in d.groupBy("__itv__").count().collect()
     }
@@ -412,8 +410,6 @@ def psi_monthly_report(
         # candidate that fails the >20-distinct test wastes one
         # percentile column — rare for numeric features, and both jobs
         # finish in the wall time of one).
-        from concurrent.futures import ThreadPoolExecutor
-
         qs_arr = F.array(*[F.lit(i / n_bins) for i in range(n_bins + 1)])
 
         def _nvals():
@@ -437,9 +433,7 @@ def psi_monthly_report(
                 for i, f in enumerate(num_candidates)
             ]).collect()[0]
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            nv_f, ed_f = pool.submit(_nvals), pool.submit(_edges)
-            nvals, edges_row = nv_f.result(), ed_f.result()
+        nvals, edges_row = run_concurrently(_nvals, _edges)
         num_feats = [
             f for i, f in enumerate(num_candidates) if nvals[f"n{i}"] > 20
         ]

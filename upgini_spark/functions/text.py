@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from upgini_spark.util import materialize
+
 EN_STOPWORDS = [
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
     "that", "for", "on", "with", "as", "at", "by", "this", "be", "are",
@@ -333,11 +335,10 @@ def bigram_nll(
     if train_staged is None:
         # self-train: the staged frame feeds THREE consumers (the vocab
         # agg, the LM-count branch and the scoring join) whose shapes
-        # defeat ReuseExchange — materialize the split+zip once (eager
-        # localCheckpoint; measured 2.35 → 1.58 s at a 50k-doc corpus,
-        # outputs identical) and rebuild pairs from the materialized
-        # arrays
-        staged = staged.localCheckpoint(eager=True)
+        # defeat ReuseExchange — materialize the split+zip once
+        # (measured 2.35 → 1.58 s at a 50k-doc corpus, outputs
+        # identical) and rebuild pairs from the materialized arrays
+        staged = materialize(staged)
         pairs = staged.select(
             "__bid__", F.explode_outer("__bg__").alias("__p__")
         ).select(

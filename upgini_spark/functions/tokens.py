@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from upgini_spark.util import materialize
+
 
 def truncate_pad_tokens(
     tokens, max_len: int, pad_id: int = 0
@@ -82,9 +84,8 @@ def pack_sequences(
         )
         d = d.withColumn("__pend__", F.sum("__pnt__").over(w))
     else:
-        # materialize the tokenized projection ONCE (eager localCheckpoint,
-        # not persist — no CacheManager leak): the offsets branch and the
-        # array join-back are two consumers of the same frame, and the
+        # materialize the tokenized projection ONCE: the offsets branch and
+        # the array join-back are two consumers of the same frame, and the
         # running sum adds a range-sampling job — without the checkpoint
         # the upstream (typically a tokenizer expression over a text scan,
         # plus any spread shuffle) re-executes once PER CONSUMER (measured
@@ -92,7 +93,7 @@ def pack_sequences(
         # also defeat ReuseExchange here, the ts_features lesson). The
         # write is one linear pass over the payload — strictly cheaper
         # than the 3 upstream re-executions it replaces at any scale.
-        d = d.localCheckpoint(eager=True)
+        d = materialize(d)
         # offsets on the NARROW (id, count) projection — the running
         # sum's consistency checkpoint then materializes ~16 bytes/doc
         # instead of the full token arrays (measured: the wide variant's

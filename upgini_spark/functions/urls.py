@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from upgini_spark.util import materialize
+
 SCHEME_RE = r"^([A-Za-z][A-Za-z0-9+.-]*)://"
 TRACKING_PARAM_RE = r"^(utm_[A-Za-z0-9_]*|fbclid|gclid|ref)(=|$)"
 
@@ -82,14 +84,14 @@ def url_dedup(df: DataFrame, id_col: str, url_col: str) -> DataFrame:
     map-side-combinable min agg + equi-join on the canonical hash, NOT a
     window (hot hosts would single-partition-sort)."""
     idc = F.col(id_col)
-    # materialize the canonicalized frame ONCE (eager localCheckpoint):
-    # the min-id agg and the join-back both consume it and their shapes
-    # defeat ReuseExchange, so the regexp canonicalization chain (and
-    # any upstream spread) otherwise executes twice — the
-    # paragraph_dedup lesson applied to the identical join shape
-    canon = df.select(
-        idc, canonical_url(F.col(url_col)).alias("canon_url")
-    ).localCheckpoint(eager=True)
+    # materialize the canonicalized frame ONCE: the min-id agg and the
+    # join-back both consume it and their shapes defeat ReuseExchange,
+    # so the regexp canonicalization chain (and any upstream spread)
+    # otherwise executes twice — the paragraph_dedup lesson applied to
+    # the identical join shape
+    canon = materialize(
+        df.select(idc, canonical_url(F.col(url_col)).alias("canon_url"))
+    )
     first = canon.filter(F.col("canon_url").isNotNull()).groupBy(
         "canon_url"
     ).agg(F.min(idc).alias("__first__"))

@@ -66,7 +66,7 @@ def asof_join(
     direction: str = "backward",
     tolerance_seconds: float | None = None,
     engine: str = "native",
-    salt: int | str = 1,
+    salt: int = 1,
     keep_match_ts: bool = False,
 ) -> DataFrame:
     """As-of join `left` to `right` on event time within entity groups.
@@ -91,11 +91,6 @@ def asof_join(
             left, right, left_on, right_on, by_left, by_right,
             direction, tolerance_seconds, keep_match_ts,
         )
-    if salt == "auto":
-        # size the salting factor from the hottest left entity
-        from upgini_spark.pipeline.lineage import suggest_salt
-
-        salt = suggest_salt(left, by_left)
     if engine == "arrow":
         return _asof_arrow(
             left, right, left_on, right_on, by_left, by_right,

@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from upgini_spark.util import id_hash
+
 US = {"s": 1_000_000, "S": 1_000_000}
 US["T"] = US["min"] = 60 * 1_000_000
 US["h"] = US["H"] = 3600 * 1_000_000
@@ -86,7 +88,7 @@ def dedup_first(
     the full row hash for determinism.
     """
     if order_col is None:
-        tie = F.md5(F.concat_ws("\x1f", *[F.col(c).cast("string") for c in df.columns]))
+        tie = id_hash(df.columns)
     else:
         tie = F.col(order_col)
     w = Window.partitionBy(*groups, ts_col).orderBy(tie.asc())
@@ -203,10 +205,7 @@ def ts_features_masked(
     key = groups + [ts_col]
     d = _with_ts_us(df, ts_col)
     if order_col is None:
-        slim_cols = [*key, value_col]
-        tie = F.md5(
-            F.concat_ws("\x1f", *[F.col(c).cast("string") for c in slim_cols])
-        )
+        tie = id_hash([*key, value_col])
     else:
         tie = F.col(order_col)
     wdup = Window.partitionBy(*key).orderBy(tie.asc())

@@ -14,14 +14,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from upgini_spark.util import local_frame
+from upgini_spark.util import id_hash, local_frame
 
 
 def kfold_column(
     df: DataFrame, id_cols: list[str], n_splits: int = 5, out_col: str = "fold_id"
 ) -> DataFrame:
     """Hash-based KFold (shuffle-equivalent, deterministic)."""
-    h = F.md5(F.concat_ws("\x1f", *[F.col(c).cast("string") for c in id_cols]))
+    h = id_hash(id_cols)
     return df.withColumn(out_col, F.pmod(F.conv(F.substring(h, 1, 8), 16, 10).cast("long"), F.lit(n_splits)).cast("int"))
 
 
@@ -31,7 +31,7 @@ def stratified_kfold_column(
 ) -> DataFrame:
     """Per-class round-robin over the hash order: every class spreads
     evenly across folds."""
-    h = F.md5(F.concat_ws("\x1f", *[F.col(c).cast("string") for c in id_cols]))
+    h = id_hash(id_cols)
     w = Window.partitionBy(target_col).orderBy(h.asc(), *[F.col(c) for c in id_cols])
     return df.withColumn(out_col, ((F.row_number().over(w) - 1) % n_splits).cast("int"))
 
@@ -57,7 +57,7 @@ def group_kfold_column(
     spark = df.sparkSession
     sizes = df.groupBy(*group_cols).count()
     if sizes.count() > max_groups:
-        h = F.md5(F.concat_ws("\x1f", *[F.col(c).cast("string") for c in group_cols]))
+        h = id_hash(group_cols)
         return df.withColumn(
             out_col,
             F.pmod(

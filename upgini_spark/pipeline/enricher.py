@@ -30,6 +30,7 @@ from upgini_spark.operators.date import cyclical_features
 from upgini_spark.pipeline import normalizer as N
 from upgini_spark.pipeline.record_ids import add_system_record_id
 from upgini_spark.plans.feature_dag import compile_features
+from upgini_spark.util import materialize, run_concurrently
 
 MIN_ROWS_COUNT = 100     # reference dataset.py:59
 MAX_ROWS = 3_000_000     # reference dataset.py:60 (we partition instead of chunk)
@@ -180,7 +181,7 @@ class SparkFeaturesEnricher:
             n_buckets,
         )
         # the table scan carries the bucketed output partitioning — do NOT
-        # localCheckpoint it (that would erase the partitioning and
+        # materialize it (that would erase the partitioning and
         # reintroduce the exchange transform() exists to avoid)
         self._hist = spark.table(table_name)
         # the generated-feature join-back keys on (entity, ts); both sides
@@ -342,11 +343,10 @@ class SparkFeaturesEnricher:
                 + ([eval_set_index_col] if has_eval else [])
             )
         )
-        # one eager checkpoint of the narrow frame: count, sample, fold
-        # and the eval collects each re-ran the FULL as-of + window plan
-        # otherwise (3× enrichment, measured 42 s → ~14 s at 600k rows).
-        # localCheckpoint, not persist — no CacheManager leak (CLAUDE.md).
-        narrow = enriched.select(*keep).localCheckpoint(eager=True)
+        # materialize the narrow frame once: count, sample, fold and the
+        # eval collects each re-ran the FULL as-of + window plan
+        # otherwise (3× enrichment, measured 42 s → ~14 s at 600k rows)
+        narrow = materialize(enriched.select(*keep))
         train_sdf = (
             narrow.filter(seg.isNull() | (seg == 0)) if has_eval else narrow
         )
@@ -364,9 +364,10 @@ class SparkFeaturesEnricher:
         else:
             seg_counts = {}
             n_train = narrow.count()
+        keys = [st.entity_col, st.ts_col]
         if n_train > max_rows:
             train_sdf = hash_sample_exact(
-                train_sdf, max_rows, [st.entity_col, st.ts_col], total=n_train
+                train_sdf, max_rows, keys, total=n_train
             )
 
         def collect_eval(s):
@@ -378,46 +379,23 @@ class SparkFeaturesEnricher:
             # hash-sample regime as the train side)
             n_ev = seg_counts[s]
             if n_ev > max_rows:
-                ev_sdf = hash_sample_exact(
-                    ev_sdf, max_rows, [st.entity_col, st.ts_col], total=n_ev
-                )
+                ev_sdf = hash_sample_exact(ev_sdf, max_rows, keys, total=n_ev)
             return ev_sdf.toPandas()
 
+        if task in ("BINARY", "MULTICLASS"):
+            folded = stratified_kfold_column(train_sdf, target_col, keys, n_splits)
+        else:
+            folded = kfold_column(train_sdf, keys, n_splits)
         # the eval-segment collects are INDEPENDENT of the train
-        # fold+collect chain — submit them first on a small pool so their
-        # jobs back-fill executors idled by the train chain's tails
-        # (guide §2.6 "overlap independent jobs"); per-segment jobs, rows
-        # and frame order are byte-identical to the sequential loop, the
-        # futures list preserves segment order
-        from concurrent.futures import ThreadPoolExecutor
-
-        segs = (
-            sorted(s for s in seg_counts if s not in (None, 0))
-            if has_eval
-            else []
+        # fold+collect chain — run them beside it so their jobs back-fill
+        # executors idled by the train chain's tails (guide §2.6 "overlap
+        # independent jobs"); per-segment jobs, rows and frame order are
+        # byte-identical to the sequential loop
+        segs = sorted(s for s in seg_counts if s not in (None, 0))
+        train_pdf, *eval_frames = run_concurrently(
+            folded.drop(eval_set_index_col).toPandas,
+            *[lambda s=s: collect_eval(s) for s in segs],
         )
-        pool = ThreadPoolExecutor(max_workers=2) if segs else None
-        eval_futs = [pool.submit(collect_eval, s) for s in segs]
-        try:
-            fold_fn = (
-                stratified_kfold_column
-                if task in ("BINARY", "MULTICLASS")
-                else kfold_column
-            )
-            folded = (
-                stratified_kfold_column(
-                    train_sdf, target_col, [st.entity_col, st.ts_col], n_splits
-                )
-                if fold_fn is stratified_kfold_column
-                else kfold_column(train_sdf, [st.entity_col, st.ts_col], n_splits)
-            )
-            train_pdf = folded.drop(
-                *[c for c in folded.columns if c == eval_set_index_col]
-            ).toPandas()
-            eval_frames = [f.result() for f in eval_futs]
-        finally:
-            if pool is not None:
-                pool.shutdown()
         estimator_params = None
         if loss is not None:
             from upgini_spark.pipeline.custom_loss import (

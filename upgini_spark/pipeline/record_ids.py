@@ -34,21 +34,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from upgini_spark.joins.enrich import EVAL_SET_INDEX, SYSTEM_RECORD_ID
-from upgini_spark.util import local_frame
+from upgini_spark.util import local_frame, materialize
 
 _MID_BITS = 33  # monotonically_increasing_id: partition id << 33 | counter
-
-
-def _consistent_checkpoint(df: DataFrame) -> DataFrame:
-    """Eager checkpoint freezing nondeterministic mids for multi-job use:
-    RELIABLE (checkpoint-dir) when the session has one configured,
-    executor-local otherwise (see zip_with_index docstring for the
-    tradeoff)."""
-    sc = df.sparkSession.sparkContext
-    if sc._jsc.sc().checkpointDir().isDefined():
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
-
+_MID, _PID = "__ri_mid__", "__ri_pid__"
 
 _RANGE_PARTITION_BYTES = 64 * 1024 * 1024
 
@@ -90,6 +79,33 @@ def row_hash(cols: list[str], sep: str = "\x1f") -> F.Column:
     return F.md5(F.concat_ws(sep, *parts))
 
 
+def _partition_offsets(df: DataFrame, order, aggs, ddl: str, zero=0):
+    """The skeleton of :func:`zip_with_index` and
+    :func:`global_running_sum` (steps 1-4 of the module docstring): the
+    range-partitioned, locally sorted frame with ``_MID``, joined on
+    ``_PID`` to one broadcast row per partition — ``__ri_off__``, the
+    running total (from ``zero``) of ``aggs[0]`` over the partitions
+    before it, then the other ``aggs``; ``ddl`` types those columns.
+    The sorted frame is materialized so the aggregate job and the final
+    pass see ONE mid assignment (mids are nondeterministic across
+    recomputes). None for an empty input."""
+    work = materialize(
+        df.repartitionByRange(_range_partitions(df), *order)
+        .sortWithinPartitions(*order)
+        .withColumn(_MID, F.monotonically_increasing_id())
+    )
+    pid = F.shiftright(F.col(_MID), _MID_BITS)
+    rows = work.groupBy(pid.alias(_PID)).agg(*aggs).collect()
+    if not rows:
+        return None
+    offsets, acc = [], zero
+    for p, total, *rest in sorted(rows, key=lambda r: r[0]):
+        offsets.append((p, acc, *rest))
+        acc += total or 0
+    map_df = local_frame(df.sparkSession, offsets, f"{_PID} long, {ddl}")
+    return work.withColumn(_PID, pid).join(F.broadcast(map_df), _PID)
+
+
 def zip_with_index(
     df: DataFrame,
     order,
@@ -100,59 +116,18 @@ def zip_with_index(
     """Distributed dense ``base``-based row index along a total order —
     the zipWithIndex pattern described in the module docstring. ``order``
     is a list of Column sort expressions; the index is one continuous
-    sequence over the whole frame.
-
-    The sorted+indexed intermediate is materialized with an eager
-    checkpoint so the offsets job and the final pass see ONE consistent
-    mid assignment (mids are nondeterministic across recomputes).
-    Checkpoint — not ``persist()`` — because DataFrame persist registers
-    in the CacheManager and leaks for the session lifetime unless
-    explicitly unpersisted, while checkpoint blocks are reclaimed by the
-    ContextCleaner once the returned DataFrame is garbage-collected;
-    repeated pipeline calls stay bounded.
-
-    Fault-tolerance tradeoff, stated plainly: ``localCheckpoint``
-    truncates lineage AND stores blocks only on executors, so on a
-    multi-executor cluster an executor loss after the checkpoint fails
-    the downstream jobs instead of recomputing (persist would recompute —
-    but through nondeterministic mids, i.e. silently inconsistent ids,
-    which is worse than failing). When a Spark checkpoint directory is
-    configured (``spark.sparkContext.setCheckpointDir``), a RELIABLE
-    checkpoint is used automatically: same consistency, executor-loss
-    safe, at the cost of one write to the checkpoint filesystem.
+    sequence over the whole frame: partition offset + (mid − the
+    partition's min mid) + base.
     """
-    spark = df.sparkSession
     out_cols = keep_cols or list(df.columns)
-    work = (
-        df.repartitionByRange(_range_partitions(df), *order)
-        .sortWithinPartitions(*order)
-        .withColumn("__sri_mid__", F.monotonically_increasing_id())
+    out = _partition_offsets(
+        df, order, [F.count(F.lit(1)), F.min(_MID)],
+        "__ri_off__ long, __ri_minmid__ long",
     )
-    work = _consistent_checkpoint(work)
-
-    pid = F.shiftright(F.col("__sri_mid__"), _MID_BITS)
-    stats = (
-        work.groupBy(pid.alias("__sri_pid__"))
-        .agg(F.count(F.lit(1)).alias("cnt"), F.min("__sri_mid__").alias("min_mid"))
-        .collect()
-    )
-    if not stats:
+    if out is None:
         return df.select(*out_cols).withColumn(out_col, F.lit(None).cast("long"))
-
-    stats.sort(key=lambda r: r["__sri_pid__"])
-    offsets, acc = [], 0
-    for r in stats:
-        offsets.append((int(r["__sri_pid__"]), acc, int(r["min_mid"])))
-        acc += int(r["cnt"])
-    map_df = local_frame(
-        spark, offsets, "__sri_pid__ long, __sri_off__ long, __sri_minmid__ long"
-    )
-
-    keyed = work.withColumn("__sri_pid__", pid)
-    out = keyed.join(F.broadcast(map_df), "__sri_pid__")
     rid = (
-        F.col("__sri_off__") + (F.col("__sri_mid__") - F.col("__sri_minmid__"))
-        + base
+        F.col("__ri_off__") + (F.col(_MID) - F.col("__ri_minmid__")) + base
     ).cast("long")
     return out.select(*out_cols, rid.alias(out_col))
 
@@ -203,59 +178,34 @@ def global_running_sum(
     out_col: str,
 ) -> DataFrame:
     """Distributed inclusive running sum of ``value_col`` along a total
-    order — the cumsum twin of :func:`zip_with_index`: range-partition +
-    local sort, per-partition totals collected (one row per partition),
-    prefix offsets broadcast back, local window cumsum per partition.
-    No ``Exchange SinglePartition`` regardless of row count.
-
-    Eager checkpoint (not persist) for the same reasons as
-    zip_with_index: consistent mids across the two jobs, no
-    session-lifetime CacheManager leak, reliable when a checkpoint dir
-    is configured.
+    order — the cumsum twin of :func:`zip_with_index`: per-partition
+    totals collected (one row per partition), prefix offsets broadcast
+    back, local window cumsum per partition. No ``Exchange
+    SinglePartition`` regardless of row count.
     """
     from pyspark.sql.window import Window
 
-    spark = df.sparkSession
     out_cols = list(df.columns)
-    work = (
-        df.repartitionByRange(_range_partitions(df), *order)
-        .sortWithinPartitions(*order)
-        .withColumn("__grs_mid__", F.monotonically_increasing_id())
-    )
-    work = _consistent_checkpoint(work)
-    pid = F.shiftright(F.col("__grs_mid__"), _MID_BITS)
     # Integral value columns accumulate EXACTLY in bigint (Python int on
     # the driver, long offsets shipped back) — a double accumulator loses
     # integer exactness past 2^53, a ceiling token-count offsets would
     # inherit. Fractional columns keep the double path. Totals beyond
     # 2^63 fail loudly under ANSI sum overflow rather than wrapping.
-    integral = dict(work.dtypes)[value_col] in (
+    integral = dict(df.dtypes)[value_col] in (
         "bigint", "int", "smallint", "tinyint",
     )
     off_type = "bigint" if integral else "double"
-    totals = (
-        work.groupBy(pid.alias("__grs_pid__"))
-        .agg(F.sum(F.col(value_col)).alias("t"))
-        .collect()
+    out = _partition_offsets(
+        df, order, [F.sum(F.col(value_col))], f"__ri_off__ {off_type}",
+        zero=0 if integral else 0.0,
     )
-    if not totals:
+    if out is None:
         return df.withColumn(out_col, F.lit(None).cast(off_type))
-    totals.sort(key=lambda r: r["__grs_pid__"])
-    offsets, acc = [], 0 if integral else 0.0
-    for r in totals:
-        offsets.append((int(r["__grs_pid__"]), acc))
-        acc += r["t"] or 0
-    map_df = local_frame(
-        spark, offsets, f"__grs_pid__ long, __grs_off__ {off_type}"
-    )
-
     w = (
-        Window.partitionBy("__grs_pid__")
-        .orderBy("__grs_mid__")
+        Window.partitionBy(_PID)
+        .orderBy(_MID)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    keyed = work.withColumn("__grs_pid__", pid)
-    out = keyed.join(F.broadcast(map_df), "__grs_pid__")
     return out.withColumn(
-        out_col, F.col("__grs_off__") + F.sum(F.col(value_col)).over(w)
+        out_col, F.col("__ri_off__") + F.sum(F.col(value_col)).over(w)
     ).select(*out_cols, out_col)

@@ -95,6 +95,9 @@ def get_spark(
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         CODEGEN_CACHE_CONF: str(CODEGEN_CACHE_ENTRIES),
         DATAFRAME_DEBUGGING_CONF: "false",
+        # reliable checkpoints (util.materialize with a checkpoint dir)
+        # are reclaimed on GC like local checkpoint blocks
+        "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
         **(extra_conf or {}),
     }
     attached = SparkContext._active_spark_context

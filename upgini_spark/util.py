@@ -2,10 +2,14 @@
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Sequence
+import uuid
+from collections.abc import Callable, Iterable, Sequence
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
 import pyarrow as pa
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import StructType
 
@@ -74,3 +78,70 @@ def spread_scan(df: DataFrame) -> DataFrame:
     # spread skew for real data.
     cols = [df["`" + c.replace("`", "``") + "`"] for c in df.columns]
     return df.repartition(n, *cols)
+
+
+def id_hash(cols: Sequence[str]) -> F.Column:
+    """md5 hex of the columns' string casts joined by ``\\x1f`` (NULLs
+    skipped) — the engine-portable hash behind hash sampling, hash folds
+    and hash tie-breaks; ``record_ids.row_hash`` marks NULLs instead."""
+    return F.md5(F.concat_ws("\x1f", *[F.col(c).cast("string") for c in cols]))
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Run ``df`` once and return a frame over the stored result: the one
+    place the engine takes an eager checkpoint.
+
+    A checkpoint, not ``persist()``: a persisted frame stays in the
+    CacheManager for the session lifetime unless explicitly unpersisted,
+    while checkpoint data is reclaimed by the ContextCleaner once the
+    returned frame is garbage-collected. The cut lineage also freezes
+    nondeterministic columns (``monotonically_increasing_id``) for every
+    later job and stops iterative plans from growing.
+
+    With a checkpoint directory on the SparkContext (read at call time)
+    the checkpoint is reliable: written there, it survives executor loss
+    (``get_spark`` sets ``cleanCheckpoints`` so the files are reclaimed
+    too). Otherwise it is ``localCheckpoint``: blocks live on the
+    executors only, and losing one fails the downstream jobs rather than
+    recomputing through nondeterministic columns into silently
+    inconsistent results."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
+
+
+def run_concurrently(*fns: Callable[[], object]) -> list:
+    """Run each callable in its own driver thread, all at once, and return
+    their results in argument order.
+
+    The threads inherit the caller's Spark local properties (a plain
+    thread has none, so its jobs escape the caller's job group) and tag
+    their jobs with one tag per call. On the first exception the tagged
+    sibling jobs are cancelled until every thread has returned (a
+    sibling between two jobs misses one cancel), and that exception is
+    re-raised."""
+    spark = SparkSession.active()
+    sc = spark.sparkContext
+    tag = f"upgini_spark-concurrent-{uuid.uuid4().hex}"
+    errors: list[BaseException] = []
+
+    def tagged(fn):
+        def run():
+            sc.addJobTag(tag)
+            try:
+                return fn()
+            except BaseException as e:
+                errors.append(e)
+                raise
+
+        return inheritable_thread_target(spark)(run)
+
+    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
+        futures = [pool.submit(tagged(fn)) for fn in fns]
+        pending = wait(futures, return_when=FIRST_EXCEPTION).not_done
+        while pending:
+            sc.cancelJobsWithTag(tag)
+            pending = wait(pending, timeout=0.1).not_done
+    if errors:
+        raise errors[0]
+    return [f.result() for f in futures]
