@@ -4712,16 +4712,17 @@ def fintech_dedup_gated(spark, sf_dir):
 )
 def knn_cosine_ivf(spark, sf_dir):
     """IVF-style approximate kNN: deterministic md5-sampled centroids
-    partition the corpus into cells; each query probes its 2 nearest
-    cells and ranks exactly within candidates — cell equi-join, no cross
-    join. The oracle replays the identical quantizer in SQL."""
+    (the k-means IVF with zero Lloyd steps) partition the corpus into
+    cells; each query probes its 2 nearest cells and ranks exactly
+    within candidates — cell equi-join, no cross join. The oracle
+    replays the identical quantizer in SQL."""
     emb = spread_scan(_t(spark, sf_dir, "embeddings")).select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
     )
     q = emb.filter(F.col("vec_id") < 5)
-    out = SIM.cosine_topk_ivf(
+    out = SIM.cosine_topk_ivf_kmeans(
         q, emb, "vec_id", "vec_id", "embedding", "embedding",
-        k=3, n_cells=8, n_probe=2,
+        k=3, n_cells=8, n_probe=2, n_iter=0,
     )
     return out.withColumn("rank", F.col("rank").cast("long"))
 

@@ -122,7 +122,7 @@ def test_fused_index_matches_composed(spark):
         + [(100, [float(d % 5) - 2.0 for d in range(20)])],
         "vec_id long, v array<double>",
     )
-    fit = SIM.fit_vector_sample(df, "vec_id", "v")
+    fit = SIM.collect_fit_matrix(SIM.fit_vector_sample(df, "vec_id", "v"), 3, 16)
     cent = SIM.kmeans_centroids(df, "vec_id", "v", n_cells=3, n_iter=1, fit=fit)
     cb = SIM.pq_codebooks(df, "vec_id", "v", 16, m=2, k_sub=2, n_iter=1, fit=fit)
     src = df.select(
@@ -487,10 +487,10 @@ def test_driver_seed_order_matches_seed_vecs(spark):
     for name, (rows, id_type) in cases.items():
         fit = _fit_sample(spark, rows, id_type)
         for n_seed in (5, len(rows)):
-            seeds, matrix = SIM.collect_fit_matrix(fit, n_seed)
-            assert matrix is not None and matrix.shape == (len(rows), 4), name
+            got = SIM.collect_fit_matrix(fit, n_seed)
+            assert got.matrix is not None and got.matrix.shape == (len(rows), 4), name
             want = SIM._seed_vecs(fit[1], n_seed)
-            assert [list(v) for v in seeds] == [list(v) for v in want], name
+            assert [list(v) for v in got.seeds] == [list(v) for v in want], name
 
 
 def test_unclean_fit_sample_takes_distributed_loop(spark, monkeypatch):
@@ -508,17 +508,17 @@ def test_unclean_fit_sample_takes_distributed_loop(spark, monkeypatch):
     }
     for name, rows in unclean.items():
         fit = _fit_sample(spark, rows)
-        seeds, matrix = SIM.collect_fit_matrix(fit, 6)
-        assert matrix is None, name
-        assert [repr(list(v)) for v in seeds] == [
+        got = SIM.collect_fit_matrix(fit, 6)
+        assert got.matrix is None, name
+        assert [repr(list(v)) for v in got.seeds] == [
             repr(list(v)) for v in SIM._seed_vecs(fit[1], 6)
         ], name
 
     fit = _fit_sample(spark, base + [(40, [1.0, float("nan"), 0.0, 2.0])])
-    assert SIM.collect_fit_matrix(fit, 6)[1] is not None
+    assert SIM.collect_fit_matrix(fit, 6).matrix is not None
     monkeypatch.setattr(SIM, "_DRIVER_FIT_ELEMS", 4 * 41 - 1)  # one element short
-    assert SIM.collect_fit_matrix(fit, 6)[1] is None
-    assert SIM.collect_fit_matrix(fit, 6, dim=4)[1] is None
+    assert SIM.collect_fit_matrix(fit, 6).matrix is None
+    assert SIM.collect_fit_matrix(fit, 6, dim=4).matrix is None
     monkeypatch.undo()
 
     def driver_fit(*_a, **_kw):
@@ -535,7 +535,10 @@ def test_unclean_fit_sample_takes_distributed_loop(spark, monkeypatch):
     monkeypatch.setattr(SIM, "_lloyd_means", counted_means)
     for rows in unclean.values():
         fit = _fit_sample(spark, rows)
-        SIM.kmeans_centroids(fit[1], "__fid__", "__fv__", n_cells=3, n_iter=1, fit=fit).collect()
+        SIM.kmeans_centroids(
+            fit[1], "__fid__", "__fv__", n_cells=3, n_iter=1,
+            fit=SIM.collect_fit_matrix(fit, 3),
+        ).collect()
     assert len(steps) == len(unclean)
 
 

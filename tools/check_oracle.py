@@ -94,17 +94,24 @@ def compare(name: str, spark_df: pd.DataFrame, duck_df: pd.DataFrame) -> list[st
     return problems
 
 
+def duckdb_tables(sf_dir: str = SF_DIR) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per testdata table of ``sf_dir``
+    — the names the ``oracle_sql()`` texts read."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
 def main():
     from upgini_spark.session import get_spark
     import __spark_entry__ as entry_mod
 
     only = set(sys.argv[1:])
     spark = get_spark("oracle_check", master="local[8]", shuffle_partitions=16)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = duckdb_tables()
 
     qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
     n_pass = n_fail = n_rowsonly = 0

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import math
 import sys
+from typing import Any, NamedTuple
 
 from pyspark import cloudpickle
 from pyspark.sql import DataFrame
@@ -30,6 +31,20 @@ def _staged_cos(a_vec: str, b_vec: str, a_norm: str, b_norm: str):
     per PAIR (3 array aggregates → 1 on every join-scoring path)."""
     denom = F.col(a_norm) * F.col(b_norm)
     return F.when(denom != 0, _dot(F.col(a_vec), F.col(b_vec)) / denom)
+
+
+def _top_k(scored: DataFrame, score: str, k: int, n_id: str = "n_id") -> DataFrame:
+    """The tail of every top-k search here: each query's ``k`` best
+    candidates of ``scored`` ranked by (``score`` desc, ``n_id`` asc),
+    output as (q_id, n_id, score rounded to 6 dp, rank)."""
+    w = Window.partitionBy("q_id").orderBy(F.col(score).desc(), F.col(n_id).asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            "q_id", F.col(n_id).alias("n_id"), F.round(score, 6).alias(score), "rank"
+        )
+    )
 
 
 def auto_n_planes(
@@ -76,12 +91,7 @@ def cosine_topk_bruteforce(
         .filter(F.col("q_id") != F.col("n_id"))
         .withColumn("cos", _staged_cos("q_vec", "n_vec", "__qn__", "__nn__"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", F.round("cos", 6).alias("cos"), "rank")
-    )
+    return _top_k(scored, "cos", k)
 
 
 def _plane_sign(p: int, d: int) -> float:
@@ -183,12 +193,7 @@ def cosine_topk_lsh(
         .select("q_id", "n_id", "cos")
         .distinct()  # same pair may collide in several bands
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", F.round("cos", 6).alias("cos"), "rank")
-    )
+    return _top_k(scored, "cos", k)
 
 
 def embedding_near_dup_lsh(
@@ -364,12 +369,14 @@ def _cells(rows) -> list[tuple[int, list[float]]]:
     return sorted((int(r["cell"]), [float(x) for x in r["cvec"]]) for r in rows)
 
 
-# Arrow-kernel dispatch threshold: the mapInArrow assignment pays a
-# fixed Python/Arrow toll per stage, so it only wins when the per-row
-# score work is big enough — measured at sf1.0/local[32]: 142 cells x
-# 64 dims (9088 mul-adds/row) runs 2.6 s JVM vs 1.6 s kernel, while the
-# 8x32 PQ subcell assignment REGRESSED under the kernel. Crossover is
-# around a few thousand mul-adds per row.
+# Arrow-kernel dispatch threshold of _nearest_cell — the distributed
+# Lloyd loop's assignment and the IVF corpus assignment; it selects
+# nothing else (the PQ subcell assignment and the index encode always
+# run their kernels). The mapInArrow assignment pays a fixed
+# Python/Arrow toll per stage, so it only wins when the per-row score
+# work is big enough: 142 cells x 64 dims (9088 mul-adds/row) ran 2.6 s
+# JVM vs 1.6 s kernel at sf1.0. That crossover was measured at
+# local[32] and has not been re-measured at 4 cores.
 _KERNEL_MIN_WORK = 4096
 
 
@@ -493,16 +500,34 @@ def _round_half_up(v: float, dp: int) -> float:
     return r + 0.0 if r == 0.0 else r
 
 
-def collect_fit_matrix(fit: tuple[int, DataFrame], n_seed: int, dim: int | None = None):
-    """``(seed_vecs, fit_matrix)`` for the Lloyd fits from ONE Arrow
-    collect of the fit sample's ``(md5(cast(__fid__ as string)), __fid__,
-    __fv__)``: the first ``n_seed`` vectors in :func:`_seed_vecs` order
-    and the (n × dim) float64 sample matrix the driver-side fits
-    (:func:`_lloyd_driver`) run on — one job where the seed TakeOrdered,
-    a cleanliness agg and a ``toPandas`` used to run three.
+class FitInput(NamedTuple):
+    """The one input of the Lloyd fits (:func:`kmeans_centroids`,
+    :func:`pq_codebooks`), made only by :func:`collect_fit_matrix`: the
+    corpus row count ``n``, the checkpointed (__fid__, __fv__) fit
+    ``sample``, its first md5-ordered vectors (``seeds``) and the
+    (rows × dim) float64 ``matrix`` of a clean driver-bounded sample —
+    None for any other sample, which sends the fits to their distributed
+    loops. Seeds and matrix come from one collect, so they always
+    describe the same sample."""
 
-    ``fit`` is :func:`fit_vector_sample`'s ``(count, sample)``. The
-    matrix is returned only for a CLEAN sample — no NULL vector, no NULL
+    n: int
+    sample: DataFrame
+    seeds: list
+    matrix: Any
+
+
+def collect_fit_matrix(
+    sample: tuple[int, DataFrame], n_seed: int, dim: int | None = None
+) -> FitInput:
+    """The :class:`FitInput` of :func:`fit_vector_sample`'s ``(count,
+    sample)`` from ONE Arrow collect of the sample's
+    ``(md5(cast(__fid__ as string)), __fid__, __fv__)``: the first
+    ``n_seed`` vectors in :func:`_seed_vecs` order and the sample matrix
+    the driver-side fits (:func:`_lloyd_driver`) run on — one job where
+    the seed TakeOrdered, a cleanliness agg and a ``toPandas`` used to
+    run three.
+
+    The matrix is kept only for a CLEAN sample — no NULL vector, no NULL
     element, one length — decided on the Arrow arrays (pandas would read
     a NULL element as NaN; Spark's avg SKIPS null elements, a dense
     matrix cannot, while NaN flows through both paths identically), and
@@ -511,9 +536,8 @@ def collect_fit_matrix(fit: tuple[int, DataFrame], n_seed: int, dim: int | None 
     the ≤1M-edge union-find dispatch). The bound holds before anything
     is shipped: a vector longer than ``_DRIVER_FIT_ELEMS // n`` is
     collected as NULL (so the sample reads as not clean), and a known
-    ``dim`` past the bound skips the collect. Otherwise ``fit_matrix``
-    is None, the seeds come from :func:`_seed_vecs` as before, and the
-    fits keep their distributed loops.
+    ``dim`` past the bound skips the collect. Otherwise the matrix is
+    None and the seeds come from :func:`_seed_vecs`.
 
     Seeds are sorted on the driver in Spark's ``(md5 asc NULLS FIRST, id
     asc)`` order with a stable sort on the md5 alone: the md5 is of the
@@ -522,12 +546,12 @@ def collect_fit_matrix(fit: tuple[int, DataFrame], n_seed: int, dim: int | None 
     their order unspecified)."""
     import pyarrow.compute as pc
 
-    n, fsample = fit
+    n, fsample = sample
     n_sample = min(n, _SAMPLE_CAP)
     if n_sample <= 0:
-        return [], None
+        return FitInput(n, fsample, [], None)
     if dim is not None and (dim <= 0 or n_sample * dim > _DRIVER_FIT_ELEMS):
-        return _seed_vecs(fsample, n_seed), None
+        return FitInput(n, fsample, _seed_vecs(fsample, n_seed), None)
     fv = F.col("__fv__")
     table = fsample.select(
         F.md5(F.col("__fid__").cast("string")).alias("__h__"),
@@ -536,7 +560,7 @@ def collect_fit_matrix(fit: tuple[int, DataFrame], n_seed: int, dim: int | None 
     ).toArrow()
     rows = table.num_rows
     if rows == 0:
-        return [], None
+        return FitInput(n, fsample, [], None)
     values, nulls, starts, lens = _arrow_vectors(table.column("__fv__").combine_chunks())
     width, lo = int(lens[0]), int(starts[0])
     hi = lo + rows * width
@@ -546,12 +570,12 @@ def collect_fit_matrix(fit: tuple[int, DataFrame], n_seed: int, dim: int | None 
         or nulls[hi] != nulls[lo]
         or rows * width > _DRIVER_FIT_ELEMS
     ):
-        return _seed_vecs(fsample, n_seed), None
+        return FitInput(n, fsample, _seed_vecs(fsample, n_seed), None)
     matrix = values[lo:hi].reshape(rows, width)
     order = pc.sort_indices(
         table, sort_keys=[("__h__", "ascending")], null_placement="at_start"
     ).to_numpy()
-    return [matrix[i] for i in order[:n_seed]], matrix
+    return FitInput(n, fsample, [matrix[i] for i in order[:n_seed]], matrix)
 
 
 def _lloyd_driver(V, books, n_iter, l2):
@@ -616,11 +640,11 @@ def fit_vector_sample(
     corpus: DataFrame, id_col: str, vec_col: str
 ) -> tuple[int, DataFrame]:
     """(count, eager-checkpointed ≤``_SAMPLE_CAP``-row (__fid__, __fv__)
-    training sample) — the shared fit input of ``kmeans_centroids`` and
-    ``pq_codebooks``, split out so :func:`build_ivf_pq_index` counts and
-    materializes the corpus ONCE instead of once per fit (each count +
-    checkpoint is a full corpus scan — two redundant jobs per index
-    build)."""
+    training sample), the md5-smallest ids — what
+    :func:`collect_fit_matrix` turns into the fits' :class:`FitInput`,
+    split out so :func:`build_ivf_pq_index` counts and materializes the
+    corpus ONCE instead of once per fit (each count + checkpoint is a
+    full corpus scan — two redundant jobs per index build)."""
     from upgini_spark.functions.sampling import hash_sample_exact
 
     n = corpus.count()
@@ -677,23 +701,21 @@ def kmeans_centroids(
     vec_col: str,
     n_cells: int | None = None,
     n_iter: int = 2,
-    fit: tuple[int, DataFrame] | None = None,
-    seed_vecs: list | None = None,
-    fit_matrix=None,
+    fit: FitInput | None = None,
 ) -> DataFrame:
     """Deterministic Lloyd-refined IVF centroids as a (cell, cvec)
-    DataFrame. Init = the md5-hash-ordered corpus sample (the round-2
-    ``deterministic_centroids`` seed), then ``n_iter`` Lloyd steps:
-    assign → per-dim mean → round to ``_ROUND_DP`` decimals.
-    Seeds and fit sample come from one :func:`collect_fit_matrix`
-    collect; when the sample is clean and driver-bounded the whole Lloyd
-    loop runs in numpy on the driver (:func:`_lloyd_driver` — a chain of
-    ~2 tiny Spark jobs per iteration becomes zero), with the distributed
-    loop for ragged/oversized samples. ``seed_vecs`` / ``fit_matrix``
-    (optional) inject a pair already fetched that way —
-    :func:`build_ivf_pq_index` shares one collect between this fit and
-    :func:`pq_codebooks`; with ``seed_vecs`` given, a None ``fit_matrix``
-    means the distributed loop.
+    DataFrame. Init = the ``n_cells`` vectors with the smallest md5(id),
+    then ``n_iter`` Lloyd steps: assign → per-dim mean → round to
+    ``_ROUND_DP`` decimals. Seeds and fit sample come from one
+    :func:`collect_fit_matrix` collect (``fit``: built here when not
+    given; :func:`build_ivf_pq_index` shares one between this fit and
+    :func:`pq_codebooks`). When the sample is clean and driver-bounded
+    the whole Lloyd loop runs in numpy on the driver
+    (:func:`_lloyd_driver` — a chain of ~2 tiny Spark jobs per iteration
+    becomes zero), with the distributed loop for ragged/oversized
+    samples. With ``n_iter=0`` and no ``fit`` the seeds are the
+    centroids: one TakeOrdered job over the corpus, no sample (the
+    md5-smallest ids of the corpus lead its sample too).
 
     Every step is engine-portable and SQL-replayable: the rounding
     quantum (1e-9) dwarfs float-summation order noise (~1e-12 for 1e5-row
@@ -704,23 +726,32 @@ def kmeans_centroids(
     ``n_cells=None`` auto-sizes to ~sqrt(N) via :func:`auto_n_cells`.
     Cells that lose every point drop out (ids stay sparse, consistently
     on both engines)."""
-    if fit is None:
-        fit = fit_vector_sample(corpus, id_col, vec_col)
-    n, fsample = fit
-    if n_cells is None:
-        n_cells = auto_n_cells(n)
-    if seed_vecs is None:
-        if n_iter > 0:
-            seed_vecs, fit_matrix = collect_fit_matrix(fit, n_cells)
-        else:
-            seed_vecs = _seed_vecs(fsample, n_cells)
-    cents = [(i, [float(x) for x in v]) for i, v in enumerate(seed_vecs[:n_cells])]
+    if fit is None and n_iter == 0:
+        if n_cells is None:
+            n_cells = auto_n_cells(corpus.count())
+        seeds = _seed_vecs(
+            corpus.select(
+                F.col(id_col).alias("__fid__"), F.col(vec_col).alias("__fv__")
+            ),
+            n_cells,
+        )
+    else:
+        if fit is None:
+            n, fsample = fit_vector_sample(corpus, id_col, vec_col)
+            n_cells = auto_n_cells(n) if n_cells is None else n_cells
+            fit = collect_fit_matrix((n, fsample), n_cells)
+        elif n_cells is None:
+            n_cells = auto_n_cells(fit.n)
+        seeds = fit.seeds
+    cents = [(i, [float(x) for x in v]) for i, v in enumerate(seeds[:n_cells])]
     spark = corpus.sparkSession
     schema = "cell int, cvec array<double>"
-    if n_iter > 0 and cents and fit_matrix is not None:
-        (cents,) = _lloyd_driver(fit_matrix, [cents], n_iter, l2=False)
+    if n_iter == 0 or not cents:
         return local_frame(spark, cents, schema)
-    sample = fsample.select(
+    if fit.matrix is not None:
+        (cents,) = _lloyd_driver(fit.matrix, [cents], n_iter, l2=False)
+        return local_frame(spark, cents, schema)
+    sample = fit.sample.select(
         F.col("__fid__").alias("__kid__"), F.col("__fv__").alias("__kv__")
     )
     cent_df = local_frame(spark, cents, schema)
@@ -728,6 +759,27 @@ def kmeans_centroids(
         assigned = _nearest_cell(sample, cent_df, "__kv__")
         cent_df = local_frame(spark, _lloyd_means(assigned, ["cell"], "__kv__"), schema)
     return cent_df
+
+
+def _probe_cells(
+    queries: DataFrame, query_id: str, query_vec: str, cent: DataFrame, n_probe: int
+) -> DataFrame:
+    """(q_id, q_vec, __qn__, cell) for each query's ``n_probe`` nearest
+    ``cent`` cells: the query × broadcast-centroid staged cosine, ranked
+    by (score desc, cell asc)."""
+    q = queries.select(
+        F.col(query_id).alias("q_id"), F.col(query_vec).alias("q_vec"),
+        _norm2(F.col(query_vec)).alias("__qn__"),
+    )
+    qs = q.crossJoin(
+        F.broadcast(cent.withColumn("__cn__", _norm2(F.col("cvec"))))
+    ).withColumn("__s__", _staged_cos("q_vec", "cvec", "__qn__", "__cn__"))
+    w = Window.partitionBy("q_id").orderBy(F.col("__s__").desc(), F.col("cell").asc())
+    return (
+        qs.withColumn("__rn__", F.row_number().over(w))
+        .filter(F.col("__rn__") <= n_probe)
+        .select("q_id", "q_vec", "__qn__", "cell")
+    )
 
 
 def cosine_topk_ivf_kmeans(
@@ -743,12 +795,13 @@ def cosine_topk_ivf_kmeans(
     n_iter: int = 2,
     cell_cap: int | None = None,
 ) -> DataFrame:
-    """IVF approximate top-k with Lloyd-refined, auto-sized centroids —
-    the scale evolution of :func:`cosine_topk_ivf` (which pins a handful
-    of md5-sampled centroids as literal expressions): centroids live in a
-    broadcast DataFrame, so cells ≈ sqrt(N) works at any corpus size; the
-    corpus is scanned once for assignment, queries probe their ``n_probe``
-    nearest cells, and ranking is exact within candidates.
+    """IVF approximate top-k with Lloyd-refined, auto-sized centroids:
+    the corpus is partitioned into cells by nearest centroid; each query
+    probes its ``n_probe`` nearest cells and ranks exactly within the
+    candidates — the cell equi-join replaces the cross join. Centroids
+    live in a broadcast DataFrame, so cells ≈ sqrt(N) works at any corpus
+    size. ``n_iter=0`` keeps the md5-sampled seeds as centroids (see
+    :func:`kmeans_centroids`).
 
     ``cell_cap`` bounds the WORST-CASE per-query candidate list at
     ``n_probe × cell_cap`` even under cell skew (a hot cell with ≫ √N
@@ -780,19 +833,7 @@ def cosine_topk_ivf_kmeans(
             .filter(F.col("__cr__") <= cell_cap)
             .select("n_id", "n_vec", "cell")
         )
-    q0 = queries.select(
-        F.col(query_id).alias("q_id"), F.col(query_vec).alias("q_vec"),
-        _norm2(F.col(query_vec)).alias("__qn__"),
-    )
-    qs = q0.crossJoin(
-        F.broadcast(cent.withColumn("__cn__", _norm2(F.col("cvec"))))
-    ).withColumn("__s__", _staged_cos("q_vec", "cvec", "__qn__", "__cn__"))
-    wq = Window.partitionBy("q_id").orderBy(F.col("__s__").desc(), F.col("cell").asc())
-    q = (
-        qs.withColumn("__rn__", F.row_number().over(wq))
-        .filter(F.col("__rn__") <= n_probe)
-        .select("q_id", "q_vec", "__qn__", "cell")
-    )
+    q = _probe_cells(queries, query_id, query_vec, cent, n_probe)
     scored = (
         q.join(c.withColumn("__nn__", _norm2(F.col("n_vec"))), on="cell")
         .filter(F.col("q_id") != F.col("n_id"))
@@ -800,12 +841,7 @@ def cosine_topk_ivf_kmeans(
         .select("q_id", "n_id", "cos")
         .distinct()
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", F.round("cos", 6).alias("cos"), "rank")
-    )
+    return _top_k(scored, "cos", k)
 
 
 # --------------------------------------------------------------------------
@@ -916,9 +952,7 @@ def pq_codebooks(
     m: int = 2,
     k_sub: int = 8,
     n_iter: int = 1,
-    fit: tuple[int, DataFrame] | None = None,
-    seed_vecs: list | None = None,
-    fit_matrix=None,
+    fit: FitInput | None = None,
 ) -> DataFrame:
     """Deterministic PQ codebooks as a (sub, cell, cvec) DataFrame: the
     md5-hash-ordered sample seeds ALL subspaces (one seed row yields m
@@ -927,38 +961,32 @@ def pq_codebooks(
     (id, sub, subvector) frame so every subspace trains in the same
     jobs. Engine-portable for the same reason as ``kmeans_centroids``:
     the 1e-9 rounding quantum dwarfs summation-order noise.
-    Seeds and fit sample come from one :func:`collect_fit_matrix`
-    collect, or are injected through ``seed_vecs`` / ``fit_matrix`` — see
-    :func:`kmeans_centroids`; a clean driver-bounded sample runs the
-    whole loop in :func:`_lloyd_driver` (zero Spark jobs), others the
-    distributed loop below."""
+    Seeds and fit sample come from ``fit`` (see :func:`kmeans_centroids`);
+    a clean driver-bounded sample runs the whole loop in
+    :func:`_lloyd_driver` (zero Spark jobs), others the distributed loop
+    below."""
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     dm = dim // m
     if fit is None:
-        fit = fit_vector_sample(corpus, id_col, vec_col)
-    n, fsample = fit
-    if seed_vecs is None:
-        if n_iter > 0:
-            seed_vecs, fit_matrix = collect_fit_matrix(fit, k_sub, dim)
-        else:
-            seed_vecs = _seed_vecs(fsample, k_sub)
+        fit = collect_fit_matrix(fit_vector_sample(corpus, id_col, vec_col), k_sub, dim)
     books = [
         [(i, [float(x) for x in v[j * dm:(j + 1) * dm]])
-         for i, v in enumerate(seed_vecs[:k_sub])]
+         for i, v in enumerate(fit.seeds[:k_sub])]
         for j in range(m)
     ]
     spark = corpus.sparkSession
     schema = "sub int, cell int, cvec array<double>"
-    if n_iter > 0 and seed_vecs and fit_matrix is not None and fit_matrix.shape[1] == dim:
-        books = _lloyd_driver(fit_matrix, books, n_iter, l2=True)
+    matrix = fit.matrix
+    if n_iter > 0 and fit.seeds and matrix is not None and matrix.shape[1] == dim:
+        books = _lloyd_driver(matrix, books, n_iter, l2=True)
         rows = [(j, c, v) for j, book in enumerate(books) for c, v in book]
         _check_dense(len(rows), m, k_sub)
         return local_frame(spark, rows, schema)
     cb = local_frame(
         spark, [(j, c, v) for j, book in enumerate(books) for c, v in book], schema
     )
-    long_df = fsample.select(
+    long_df = fit.sample.select(
         F.col("__fid__").alias("__pid__"),
         F.posexplode(_subvectors("__fv__", m, dim)).alias("sub", "sv"),
     )
@@ -1070,36 +1098,17 @@ def pq_encode(
     return out
 
 
-def pq_topk_adc(
-    queries: DataFrame,
-    corpus: DataFrame,
-    query_id: str,
-    corpus_id: str,
-    query_vec: str,
-    corpus_vec: str,
-    dim: int,
-    k: int = 5,
-    m: int = 2,
-    k_sub: int = 8,
-    n_iter: int = 1,
-) -> DataFrame:
-    """Asymmetric-distance (ADC) approximate top-k by inner product:
-    train PQ codebooks, encode the corpus once, then per query build the
-    (m × k_sub) dot-product table against the codebooks and score every
-    corpus row with m array LOOKUPS — ``adc = Σ_j table[j][codes[j]]`` —
-    via an index-aware ``transform`` + ordered ``aggregate`` (the
-    left-to-right sum makes the float result partition- and
-    engine-deterministic). The codes frame never touches the original
-    vectors at query time, which is the entire point of PQ at 10^12
-    rows. Exact re-ranking of the ADC top-k (fetch true vectors for k·n_q
-    ids) is the standard next stage and composes with
-    ``cosine_topk_bruteforce`` on the filtered id set."""
-    cb = pq_codebooks(
-        corpus, corpus_id, corpus_vec, dim, m=m, k_sub=k_sub, n_iter=n_iter
-    )
-    codes = pq_encode(corpus, corpus_id, corpus_vec, cb, dim, m=m)
-    from upgini_spark.operators.binary import _dot
-
+def _adc(
+    queries: DataFrame, query_id: str, query_vec: str, cb: DataFrame,
+    dim: int, m: int, k_sub: int,
+) -> tuple[DataFrame, F.Column]:
+    """The ADC half of a PQ search: ``(flat, adc)``. ``flat`` holds each
+    query's (q_id, ptab) — its subvector dot products with every
+    codeword of ``cb``, in (sub, cell) order — and ``adc`` scores a
+    (codes, ptab) row as ``Σ_j ptab[j·k_sub + codes[j]]``: m array
+    LOOKUPS instead of d multiply-adds, summed by an ordered
+    ``aggregate`` (the left-to-right sum keeps the float result
+    partition- and engine-deterministic)."""
     qlong = queries.select(
         F.col(query_id).alias("q_id"),
         F.posexplode(_subvectors(query_vec, m, dim)).alias("sub", "qsv"),
@@ -1119,124 +1128,41 @@ def pq_topk_adc(
         F.col("codes"),
         lambda c, jx: F.element_at(F.col("ptab"), jx * k_sub + c + 1),
     )
-    scored = (
-        codes.crossJoin(F.broadcast(flat))
-        .filter(F.col("q_id") != F.col(corpus_id))
-        .withColumn(
-            "adc",
-            F.aggregate(partials, F.lit(0.0), lambda acc, v: acc + v),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("adc").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id", F.col(corpus_id).alias("n_id"),
-            F.round("adc", 6).alias("adc"), "rank",
-        )
-    )
+    return flat, F.aggregate(partials, F.lit(0.0), lambda acc, v: acc + v)
 
 
-def deterministic_centroids(
-    corpus: DataFrame, id_col: str, vec_col: str, n_cells: int = 8
-) -> list[tuple]:
-    """IVF coarse quantizer: the ``n_cells`` corpus vectors with the
-    smallest md5(id) — a deterministic, engine-portable "random" sample
-    (any SQL engine picks the same rows), standing in for k-means
-    centroids. Returns [(id, vector)] sorted by the hash order."""
-    rows = (
-        corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
-        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-        .limit(n_cells)
-        .collect()
-    )
-    return [(r["cid"], list(r["cvec"])) for r in rows]
-
-
-def _cell_assign(vec_col: str, centroids: list[tuple]) -> F.Column:
-    """argmax-cosine cell id as a native expression: array of
-    (sim, cell_idx) structs → array_max picks the best (ties → larger
-    idx loses because array_max compares sim first, then idx — use
-    negative idx so the SMALLEST cell index wins ties)."""
-    cells = []
-    for i, (_cid, cvec) in enumerate(centroids):
-        c = F.array(*[F.lit(float(x)) for x in cvec])
-        cells.append(
-            F.struct(
-                cosine_similarity(F.col(vec_col), c).alias("s"),
-                F.lit(-i).alias("ni"),
-            )
-        )
-    best = F.array_max(F.array(*cells))
-    return (-best["ni"]).cast("int")
-
-
-def cosine_topk_ivf(
+def pq_topk_adc(
     queries: DataFrame,
     corpus: DataFrame,
     query_id: str,
     corpus_id: str,
     query_vec: str,
     corpus_vec: str,
+    dim: int,
     k: int = 5,
-    n_cells: int = 8,
-    n_probe: int = 2,
+    m: int = 2,
+    k_sub: int = 8,
+    n_iter: int = 1,
 ) -> DataFrame:
-    """IVF-style approximate top-k: corpus partitioned into cells by
-    nearest centroid; each query probes its ``n_probe`` closest cells and
-    ranks exactly within the candidates. The cell equi-join replaces the
-    cross join; cell count scales with corpus size (cells ≈ sqrt(N) on a
-    real deployment — then the per-cell candidate list is O(sqrt(N)))."""
-    centroids = deterministic_centroids(corpus, corpus_id, corpus_vec, n_cells)
-    # corpus assignment through the Arrow kernel (bit-identical scores
-    # and ties — see _nearest_cell): ~8 interpreted dot-folds per row
-    # become one vectorized numpy batch. _cell_assign stays the
-    # Column-level form for composability.
-    cent_df = local_frame(
-        corpus.sparkSession,
-        [(i, [float(x) for x in cv]) for i, (_cid, cv) in enumerate(centroids)],
-        "cell int, cvec array<double>",
+    """Asymmetric-distance (ADC) approximate top-k by inner product:
+    train PQ codebooks, encode the corpus once, then score EVERY corpus
+    row against each query's (m × k_sub) dot-product table
+    (:func:`_adc`). The codes frame never touches the original vectors
+    at query time, which is the entire point of PQ at 10^12 rows. Exact
+    re-ranking of the ADC top-k (fetch true vectors for k·n_q ids) is
+    the standard next stage and composes with ``cosine_topk_bruteforce``
+    on the filtered id set."""
+    cb = pq_codebooks(
+        corpus, corpus_id, corpus_vec, dim, m=m, k_sub=k_sub, n_iter=n_iter
     )
-    c = _nearest_cell(
-        corpus.select(
-            F.col(corpus_id).alias("n_id"), F.col(corpus_vec).alias("n_vec")
-        ),
-        cent_df,
-        "n_vec",
-    )
-    # query probes: top n_probe cells by centroid similarity
-    probe_structs = []
-    for i, (_cid, cvec) in enumerate(centroids):
-        cv = F.array(*[F.lit(float(x)) for x in cvec])
-        probe_structs.append(
-            F.struct(
-                cosine_similarity(F.col(query_vec), cv).alias("s"),
-                F.lit(-i).alias("ni"),
-            )
-        )
-    probes = F.slice(F.reverse(F.array_sort(F.array(*probe_structs))), 1, n_probe)
-    q = queries.select(
-        F.col(query_id).alias("q_id"),
-        F.col(query_vec).alias("q_vec"),
-        _norm2(F.col(query_vec)).alias("__qn__"),
-        F.explode(F.transform(probes, lambda p: (-p["ni"]).cast("int"))).alias("cell"),
-    )
+    codes = pq_encode(corpus, corpus_id, corpus_vec, cb, dim, m=m)
+    flat, adc = _adc(queries, query_id, query_vec, cb, dim, m, k_sub)
     scored = (
-        q.join(c.withColumn("__nn__", _norm2(F.col("n_vec"))), on="cell")
-        .filter(F.col("q_id") != F.col("n_id"))
-        .withColumn("cos", _staged_cos("q_vec", "n_vec", "__qn__", "__nn__"))
-        .select("q_id", "n_id", "cos")
-        .distinct()
+        codes.crossJoin(F.broadcast(flat))
+        .filter(F.col("q_id") != F.col(corpus_id))
+        .withColumn("adc", adc)
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", F.round("cos", 6).alias("cos"), "rank")
-    )
+    return _top_k(scored, "adc", k, n_id=corpus_id)
 
 
 def build_ivf_pq_index(
@@ -1256,12 +1182,12 @@ def build_ivf_pq_index(
     amortizes across every query batch (same build/query split as the
     as-of family's ``build_asof_hist``): coarse k-means fit, full-corpus
     cell assignment, PQ codebook fit, and the m-code encode. Both fits
-    share one counted, checkpointed sample (:func:`fit_vector_sample`)
-    and ONE Arrow collect of it (:func:`collect_fit_matrix`) that yields
-    every seed and, for a clean driver-bounded sample, the matrix both
-    driver-side Lloyd loops run on: one Spark job between the sample
-    and the lazy index frame. Returns
-    {"centroids": (cell, cvec), "codebooks": (sub, cell, cvec),
+    share one :class:`FitInput` — one counted, checkpointed sample
+    (:func:`fit_vector_sample`) and ONE Arrow collect of it
+    (:func:`collect_fit_matrix`) that yields every seed and, for a clean
+    driver-bounded sample, the matrix both driver-side Lloyd loops run
+    on: one Spark job between the sample and the lazy index frame.
+    Returns {"centroids": (cell, cvec), "codebooks": (sub, cell, cvec),
     "index": (n_id, cell, codes)} — the index frame is ~m bytes + a
     cell id per corpus row (the vectors themselves are NOT in it).
 
@@ -1269,19 +1195,12 @@ def build_ivf_pq_index(
     batches scan the compact materialized frame instead of re-deriving
     the assignment (on a cluster, write it to a bucketed table on
     ``cell`` instead — then the candidate fetch is exchange-free)."""
-    fit = fit_vector_sample(corpus, corpus_id, corpus_vec)
-    # ONE Arrow collect of the sample serves both fits: the coarse fit
-    # seeds from the first n_cells md5-ordered vectors, the PQ fit from
-    # the first k_sub (identical rows to per-fit fetches: same sample,
-    # same total order), and both driver-side Lloyd loops run on its
-    # matrix. A ragged or oversized sample gets the TakeOrdered seeds and
-    # no matrix, and the fits run their unchanged distributed loops.
-    n_corpus, fsample = fit
-    n_seed = max(n_cells or auto_n_cells(n_corpus), k_sub)
-    if coarse_iter > 0 or pq_iter > 0:
-        seed_vecs, fit_matrix = collect_fit_matrix(fit, n_seed, dim)
-    else:
-        seed_vecs, fit_matrix = _seed_vecs(fsample, n_seed), None
+    n, fsample = fit_vector_sample(corpus, corpus_id, corpus_vec)
+    # the coarse fit seeds from the first n_cells md5-ordered vectors,
+    # the PQ fit from the first k_sub (identical rows to per-fit
+    # fetches: same sample, same total order)
+    n_seed = max(auto_n_cells(n) if n_cells is None else n_cells, k_sub)
+    fit = collect_fit_matrix((n, fsample), n_seed, dim)
     # the coarse k-means and the PQ codebook fits are INDEPENDENT chains
     # of small sequential jobs over the shared checkpointed sample — run
     # them concurrently so the second fit's jobs back-fill the idle
@@ -1290,12 +1209,10 @@ def build_ivf_pq_index(
         lambda: kmeans_centroids(
             corpus, corpus_id, corpus_vec,
             n_cells=n_cells, n_iter=coarse_iter, fit=fit,
-            seed_vecs=seed_vecs, fit_matrix=fit_matrix,
         ),
         lambda: pq_codebooks(
             corpus, corpus_id, corpus_vec, dim,
             m=m, k_sub=k_sub, n_iter=pq_iter, fit=fit,
-            seed_vecs=seed_vecs, fit_matrix=fit_matrix,
         ),
     )
     # cell assignment + PQ encode fused into ONE zero-shuffle kernel pass
@@ -1315,6 +1232,22 @@ def build_ivf_pq_index(
     if materialize:
         index = util.materialize(index)
     return {"centroids": cent, "codebooks": cb, "index": index}
+
+
+def _check_index_codebooks(cb: DataFrame, dim: int, m: int, k_sub: int) -> None:
+    """Raise unless ``cb`` holds cells 0…k_sub-1 in each of subspaces
+    0…m-1, every vector of length ``dim // m`` — the layout the ADC
+    lookup ``ptab[j·k_sub + code]`` reads. Any other index makes that
+    lookup read another codeword's entry (or fail mid-job under ANSI)."""
+    held = {
+        sub: [(c, len(v)) for c, v in cells] for sub, cells in _cb_by_sub(cb).items()
+    }
+    if dim % m or held != {j: [(c, dim // m) for c in range(k_sub)] for j in range(m)}:
+        raise ValueError(
+            f"IVF+PQ index does not match dim={dim}, m={m}, k_sub={k_sub}: its "
+            f"codebooks hold {{sub: [(cell, vector length)]}} = {held}; "
+            "query with the dim, m and k_sub the index was built with"
+        )
 
 
 def pq_topk_ivf_adc(
@@ -1356,66 +1289,26 @@ def pq_topk_ivf_adc(
     Pass ``index=build_ivf_pq_index(...)`` to reuse a materialized
     index across query batches — without it every call lazily re-runs
     the N×√N coarse fit + assignment + encode, which at 200k×16d
-    measured ~100× the per-batch query cost (BENCH/BASELINE.md r5)."""
+    measured ~100× the per-batch query cost (BENCH/BASELINE.md r5). A
+    given index must have been built with this call's ``dim``, ``m``
+    and ``k_sub``; a ValueError says so before any job runs."""
     if index is None:
         index = build_ivf_pq_index(
             corpus, corpus_id, corpus_vec, dim, m=m, k_sub=k_sub,
             n_cells=n_cells, coarse_iter=coarse_iter, pq_iter=pq_iter,
             materialize=False,
         )
+    else:
+        _check_index_codebooks(index["codebooks"], dim, m, k_sub)
     cent, cb, idx = index["centroids"], index["codebooks"], index["index"]
-
-    q0 = queries.select(
-        F.col(query_id).alias("q_id"), F.col(query_vec).alias("q_vec"),
-        _norm2(F.col(query_vec)).alias("__qn__"),
+    probes = _probe_cells(queries, query_id, query_vec, cent, n_probe).select(
+        "q_id", "cell"
     )
-    qs = q0.crossJoin(
-        F.broadcast(cent.withColumn("__cn__", _norm2(F.col("cvec"))))
-    ).withColumn("__s__", _staged_cos("q_vec", "cvec", "__qn__", "__cn__"))
-    wq = Window.partitionBy("q_id").orderBy(
-        F.col("__s__").desc(), F.col("cell").asc()
-    )
-    probes = (
-        qs.withColumn("__rn__", F.row_number().over(wq))
-        .filter(F.col("__rn__") <= n_probe)
-        .select("q_id", "cell")
-    )
-
-    from upgini_spark.operators.binary import _dot
-
-    qlong = queries.select(
-        F.col(query_id).alias("q_id"),
-        F.posexplode(_subvectors(query_vec, m, dim)).alias("sub", "qsv"),
-    )
-    tbl = qlong.join(F.broadcast(cb), on="sub").withColumn(
-        "__p__", _dot(F.col("qsv"), F.col("cvec"))
-    )
-    flat = tbl.groupBy("q_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("sub", "cell", "__p__"))),
-            lambda s: s["__p__"],
-        ).alias("ptab")
-    )
-
+    flat, adc = _adc(queries, query_id, query_vec, cb, dim, m, k_sub)
     # candidate fetch: equi-join on cell (each corpus row has ONE cell,
     # (q_id, cell) probes are distinct -> no duplicate pairs)
     cand = probes.join(idx, on="cell").filter(
         F.col("q_id") != F.col("n_id")
     )
-    # two-arg transform lambda receives (element, index) — the index IS
-    # the subspace id, used deliberately for the ADC table lookup
-    partials = F.transform(
-        F.col("codes"),
-        lambda c, jx: F.element_at(F.col("ptab"), jx * k_sub + c + 1),
-    )
-    scored = cand.join(F.broadcast(flat), on="q_id").withColumn(
-        "adc", F.aggregate(partials, F.lit(0.0), lambda acc, v: acc + v)
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("adc").desc(), F.col("n_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", F.round("adc", 6).alias("adc"), "rank")
-    )
+    scored = cand.join(F.broadcast(flat), on="q_id").withColumn("adc", adc)
+    return _top_k(scored, "adc", k)
